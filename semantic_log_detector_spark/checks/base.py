@@ -8,8 +8,10 @@ ids + reasons (`src/rules/engine.py:30-52`). Here each check emits:
 - per-partition verdicts (VERDICT_SCHEMA): groupBy(part_id) pass/fail.
 
 Verdict assembly is shared: violations.groupBy(part_id, rule_id).count()
-outer-joined against per-partition row counts — a tiny shuffle regardless
-of input size, because violations are (expected to be) sparse.
+left-joined to a (rule × partition) grid over per-partition row counts — a
+tiny shuffle regardless of input size, because violations are (expected
+to be) sparse. The metadata checks assemble theirs in one grid for all of
+them (checks/metadata.py).
 """
 
 from __future__ import annotations
@@ -75,35 +77,61 @@ def verdicts_from_violations(
     ctx: RunContext,
     rule_ids: list[str],
 ) -> DataFrame:
-    """Assemble VERDICT_SCHEMA rows from sparse violations.
+    """Assemble VERDICT_SCHEMA rows from sparse violations: the one-check
+    form of :func:`verdict_grid`. Raises ``ValueError`` on an empty rule
+    list (the grid would silently emit no verdict at all)."""
+    if not rule_ids:
+        raise ValueError("verdicts_from_violations: rule_ids is empty")
+    vcounts = violations.groupBy(
+        F.col(ctx.part_col).cast("int").alias("part_id"), "rule_id"
+    ).agg(F.count(F.lit(1)).alias("n_violations"))
+    return verdict_grid(
+        part_counts, vcounts.withColumn("check_id", F.lit("")), ctx,
+        [("", r) for r in rule_ids],
+    ).drop("check_id")
 
-    The (part, rule) grid — so rules with zero violations still produce an
+
+def verdict_grid(
+    part_counts: DataFrame,
+    vcounts: DataFrame,
+    ctx: RunContext,
+    rules: list[tuple[str, str]],
+) -> DataFrame:
+    """One verdict row per (check, rule) × partition of ``part_counts``.
+
+    ``part_counts`` carries (part_col, n_rows); ``vcounts`` carries
+    (check_id, part_id, rule_id, n_violations) counted over the sparse
+    violations. The grid — so rules with zero violations still produce an
     explicit `passed=true` verdict, the reference always reports each
     signal, hit or not (api/main.py:131-140) — is built by EXPLODING the
-    rule-id literals over the per-partition counts (round 6): the previous
-    createDataFrame + broadcast crossJoin launched one broadcast-exchange
-    job per check inside the runner's batched action (~7 extra serialized
-    jobs per wave at 60k clips); the explode is a pure projection, zero
-    extra jobs, identical rows.
+    (check, rule) literals over the per-partition counts: a pure
+    projection, no extra job (a createDataFrame + broadcast crossJoin
+    launches one broadcast-exchange job per grid). Output: VERDICT_SCHEMA
+    columns plus ``check_id``.
     """
-    vcounts = violations.groupBy(ctx.part_col, "rule_id").agg(
-        F.count(F.lit(1)).alias("n_violations")
-    )
-    grid = part_counts.withColumn(
-        "rule_id", F.explode(F.array(*[F.lit(r) for r in rule_ids]))
-    )
+    if not rules:
+        raise ValueError("verdict_grid: no (check, rule) pairs to assemble")
+    pairs = F.array(*[
+        F.struct(F.lit(c).alias("check_id"), F.lit(r).alias("rule_id"))
+        for c, r in rules
+    ])
+    grid = part_counts.select(
+        F.col(ctx.part_col).cast("int").alias("part_id"), "n_rows",
+        F.explode(pairs).alias("g"),
+    ).select("part_id", "n_rows", "g.check_id", "g.rule_id")
     return (
-        grid.join(vcounts, [ctx.part_col, "rule_id"], "left")
+        grid.join(vcounts, ["check_id", "part_id", "rule_id"], "left")
         .withColumn("n_violations", F.coalesce("n_violations", F.lit(0)))
         .select(
             F.lit(ctx.run_id).alias("run_id"),
-            F.col(ctx.part_col).cast("int").alias("part_id"),
+            "part_id",
             "rule_id",
             (F.col("n_violations") == 0).alias("passed"),
             F.col("n_rows").cast("long").alias("n_rows"),
             F.col("n_violations").cast("long").alias("n_violations"),
             F.lit(None).cast("string").alias("observed"),
             F.lit(None).cast("string").alias("expected"),
+            "check_id",
         )
     )
 

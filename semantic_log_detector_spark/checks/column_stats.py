@@ -28,7 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .base import CheckResult, RunContext, ensure_part_id, severity_for_rate
+from .base import CheckResult, RunContext, severity_for_rate
+from .metadata import CheckSpec, one_check
 
 _QUANTILE_ACC = 10_000  # percentile_approx accuracy (1/eps)
 
@@ -152,58 +153,50 @@ DEFAULT_EXPECTATIONS = {
 }
 
 
-def stats_check(
-    df: DataFrame,
-    ctx: RunContext,
+def stats_spec(
     expectations: dict[str, list[tuple[str, str, float]]] | None = None,
-) -> CheckResult:
+) -> CheckSpec:
     """Declarative threshold checks over the per-partition stats profile.
 
-    One grouped agg pass (by part_id) computes every column's algebraic
-    stats; expectations are evaluated per partition → verdict rows. The
+    The columns' algebraic stats join the shared groupBy(part_id);
+    expectations are evaluated per partition → verdict rows. The
     violation row carries observed-vs-expected (explanation_engine.py
     semantics) with the partition as the offending scope (clip_id NULL).
     """
     expectations = expectations or DEFAULT_EXPECTATIONS
-    cols = list(expectations.keys())
-    df = ensure_part_id(df, ctx)
-    per_part = (
-        df.groupBy(ctx.part_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            *[e for c in cols for e in (
-                F.count(F.col(c)).alias(f"{c}__nn"),
-                F.min(F.col(c).cast("double")).alias(f"{c}__min"),
-                F.max(F.col(c).cast("double")).alias(f"{c}__max"),
-                F.avg(F.col(c).cast("double")).alias(f"{c}__mean"),
-            )],
+    part_aggs = tuple(
+        e for c in expectations for e in (
+            F.count(F.col(c)).alias(f"{c}__nn"),
+            F.min(F.col(c).cast("double")).alias(f"{c}__min"),
+            F.max(F.col(c).cast("double")).alias(f"{c}__max"),
+            F.avg(F.col(c).cast("double")).alias(f"{c}__mean"),
         )
     )
-    verdict_rows = []
-    for c, exps in expectations.items():
-        for field, op, thr in exps:
-            rule_id = f"R017_stats_{c}_{field}"
-            if field == "null_rate":
-                observed = 1.0 - F.col(f"{c}__nn") / F.col("n_rows")
-            else:
-                observed = F.col(f"{c}__{field}")
-            ok = (observed <= thr) if op == "<=" else (observed >= thr)
-            ok = F.coalesce(ok, F.lit(True))  # empty partitions pass
-            verdict_rows.append(
-                F.struct(
-                    F.lit(rule_id).alias("rule_id"),
-                    ok.alias("passed"),
-                    F.round(observed, 6).cast("string").alias("observed"),
-                    F.lit(f"{c}.{field} {op} {thr}").alias("expected"),
-                    F.lit(c).alias("col_name"),
+
+    def part_verdicts(per_part: DataFrame, ctx: RunContext) -> tuple[DataFrame, DataFrame]:
+        verdict_rows = []
+        for c, exps in expectations.items():
+            for field, op, thr in exps:
+                rule_id = f"R017_stats_{c}_{field}"
+                if field == "null_rate":
+                    observed = 1.0 - F.col(f"{c}__nn") / F.col("n_rows")
+                else:
+                    observed = F.col(f"{c}__{field}")
+                ok = (observed <= thr) if op == "<=" else (observed >= thr)
+                ok = F.coalesce(ok, F.lit(True))  # empty partitions pass
+                verdict_rows.append(
+                    F.struct(
+                        F.lit(rule_id).alias("rule_id"),
+                        ok.alias("passed"),
+                        F.round(observed, 6).cast("string").alias("observed"),
+                        F.lit(f"{c}.{field} {op} {thr}").alias("expected"),
+                        F.lit(c).alias("col_name"),
+                    )
                 )
-            )
-    exploded = per_part.select(
-        F.col(ctx.part_col), F.col("n_rows"), F.explode(F.array(*verdict_rows)).alias("v")
-    )
-    verdicts = (
-        exploded
-        .select(
+        exploded = per_part.select(
+            F.col(ctx.part_col), F.col("n_rows"), F.explode(F.array(*verdict_rows)).alias("v")
+        )
+        verdicts = exploded.select(
             F.lit(ctx.run_id).alias("run_id"),
             F.col(ctx.part_col).cast("int").alias("part_id"),
             F.col("v.rule_id").alias("rule_id"),
@@ -213,16 +206,27 @@ def stats_check(
             F.col("v.observed").alias("observed"),
             F.col("v.expected").alias("expected"),
         )
-    )
-    violations = exploded.filter(~F.col("v.passed")).select(
-        F.lit(ctx.run_id).alias("run_id"),
-        F.col(ctx.part_col).cast("int").alias("part_id"),
-        F.col("v.rule_id").alias("rule_id"),
-        F.lit(None).cast("string").alias("clip_id"),
-        F.col("v.col_name").alias("column"),
-        F.col("v.observed").alias("observed"),
-        F.col("v.expected").alias("expected"),
-        severity_for_rate(F.lit(0.01)).alias("severity"),
-        F.concat(F.lit("partition stat out of bounds: observed="), F.col("v.observed")).alias("explanation"),
-    )
-    return CheckResult("column_stats", verdicts, violations)
+        violations = exploded.filter(~F.col("v.passed")).select(
+            F.lit(ctx.run_id).alias("run_id"),
+            F.col(ctx.part_col).cast("int").alias("part_id"),
+            F.col("v.rule_id").alias("rule_id"),
+            F.lit(None).cast("string").alias("clip_id"),
+            F.col("v.col_name").alias("column"),
+            F.col("v.observed").alias("observed"),
+            F.col("v.expected").alias("expected"),
+            severity_for_rate(F.lit(0.01)).alias("severity"),
+            F.concat(F.lit("partition stat out of bounds: observed="), F.col("v.observed")).alias("explanation"),
+        )
+        return verdicts, violations
+
+    return CheckSpec("stats", part_aggs=part_aggs, part_verdicts=part_verdicts)
+
+
+def stats_check(
+    df: DataFrame,
+    ctx: RunContext,
+    expectations: dict[str, list[tuple[str, str, float]]] | None = None,
+) -> CheckResult:
+    """One grouped agg pass (by part_id) computes every column's algebraic
+    stats; see :func:`stats_spec`."""
+    return one_check(df, ctx, stats_spec(expectations))

@@ -1,17 +1,13 @@
-"""Frequency-table check with explicit skew salting (SURVEY.md A2, §4.1).
+"""Allowed-values check over a categorical column (SURVEY.md A2, §4.1).
 
 Reference: label/severity value_counts (`src/ids/data_loader.py:214-219`).
-The codec column is intentionally skewed (one codec ≈ 80%): a naive
-``groupBy(codec)`` sends 80% of partial rows to one reducer *key* — partial
-map-side aggregation already bounds this for plain counts, but the salted
-two-level form is kept explicit per north_rule and benchmarked against the
-naive plan; it matters once the agg carries wide payloads (collect_set,
-exact distinct) where map-side combine is weak.
-
-Checks:
-- R040: allowed-values — every codec must be in the declared set.
-- R041: share bounds — optional (codec → max share) expectations, verdict
-  computed per partition from the same pass.
+R040 flags every row whose value is outside the declared set and reports
+the value's count over the checked input ("global count=N"). Every row
+holding such a value is a violation, so N is a window count over the
+sparse R040 rows — no frequency table of the whole column and no join
+back. The codec column is skewed (one codec ≈ 80%), but only the rare
+disallowed values are ever shuffled. A NULL value is not flagged here
+(R014 in row_rules owns missing codecs).
 """
 
 from __future__ import annotations
@@ -19,23 +15,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .base import CheckResult, RunContext, ensure_part_id, part_row_counts, verdicts_from_violations
+from .base import CheckResult, RunContext
+from .metadata import CheckSpec, RowRule, one_check
 
 R_ALLOWED = "R040_codec_allowed_values"
 
 
-def frequency_table(
-    df: DataFrame, col: str, salt_buckets: int = 16, salted: bool = True
-) -> DataFrame:
-    """Value → count. Two-level salted aggregation; exact-equal to naive."""
-    if not salted:
-        return df.groupBy(col).agg(F.count(F.lit(1)).alias("count"))
-    lvl1 = (
-        df.withColumn("__salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets)))
-        .groupBy(col, "__salt")
-        .agg(F.count(F.lit(1)).alias("partial"))
+def frequency_spec(
+    col: str = "codec",
+    allowed: tuple[str, ...] = ("pcm_s16le", "flac", "mulaw", "alaw", "adpcm_ima", "opus", "mp3"),
+) -> CheckSpec:
+    rule = RowRule(
+        R_ALLOWED, col, F.col(col).isNotNull() & ~F.col(col).isin(*allowed),
+        f"value IN {allowed}", "High", "value outside allowed set", count_value=True,
     )
-    return lvl1.groupBy(col).agg(F.sum("partial").alias("count"))
+    return CheckSpec("frequency", rule_ids=(R_ALLOWED,), rows=(rule,))
 
 
 def frequency_check(
@@ -46,28 +40,4 @@ def frequency_check(
 ) -> CheckResult:
     """Allowed-values check: violations carry the offending value + its
     global frequency (observed-vs-expected, explanation_engine.py shape)."""
-    df = ensure_part_id(df, ctx)
-    freq = frequency_table(df, col)  # tiny result: one row per distinct value
-    bad_values = freq.filter(~F.col(col).isin(*allowed) | F.col(col).isNull())
-    violations = (
-        df.select("clip_id", ctx.part_col, col)
-        .join(F.broadcast(bad_values), col, "inner")
-        .select(
-            F.lit(ctx.run_id).alias("run_id"),
-            F.col(ctx.part_col).cast("int").alias("part_id"),
-            F.lit(R_ALLOWED).alias("rule_id"),
-            F.col("clip_id"),
-            F.lit(col).alias("column"),
-            F.concat(F.coalesce(F.col(col), F.lit("∅")), F.lit(" (global count="), F.col("count"), F.lit(")")).alias("observed"),
-            F.lit(f"value IN {allowed}").alias("expected"),
-            F.lit("High").alias("severity"),
-            F.lit("value outside allowed set").alias("explanation"),
-        )
-    )
-    verdicts = verdicts_from_violations(
-        violations.withColumnRenamed("part_id", ctx.part_col),
-        part_row_counts(df, ctx),
-        ctx,
-        [R_ALLOWED],
-    )
-    return CheckResult("frequency", verdicts, violations)
+    return one_check(df, ctx, frequency_spec(col, allowed))

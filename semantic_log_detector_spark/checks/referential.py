@@ -21,11 +21,90 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .base import CheckResult, RunContext, ensure_part_id, part_row_counts, verdicts_from_violations
+from .base import CheckResult, RunContext
+from .metadata import CheckSpec, one_check
 
 R_MISSING = "R030_transcript_missing"
 R_ORPHAN = "R031_transcript_orphan"
 R_MISMATCH = "R032_transcript_mismatch"
+
+
+def referential_spec(transcripts: DataFrame, strategy: str = "auto") -> CheckSpec:
+    """The three rules as one check of the shared metadata plan. An orphan
+    transcript is counted in its own clip_id's partition; a partition with
+    orphans but no clips has no verdict row (the grid spans the clips'
+    partitions), its violation rows are still emitted."""
+    if strategy not in ("auto", "broadcast", "sort_merge"):
+        raise ValueError(f"unknown join strategy {strategy!r}")
+
+    def violations(clips: DataFrame, ctx: RunContext) -> DataFrame:
+        left = clips.select("clip_id", ctx.part_col, F.col("transcript").alias("_t_clip"))
+        # transcripts get their part_id from their own clip_id (same hash) so
+        # the orphan direction is partition-prunable too: a wave runs
+        # clips[parts W] against transcripts[parts W] with no cross-wave
+        # false orphans.
+        right = transcripts.select(
+            F.col("clip_id").alias("t_clip_id"),
+            F.col("transcript").alias("_t_side"),
+            F.pmod(F.xxhash64("clip_id"), F.lit(ctx.num_parts)).cast("int").alias("_t_part"),
+        )
+        if strategy == "broadcast":
+            right = F.broadcast(right)
+        # "auto" leaves it to Catalyst/AQE: broadcasts under
+        # autoBroadcastJoinThreshold, sort-merge otherwise (AQE can still
+        # convert at runtime).
+
+        # ONE full_outer join on the key serves all three rules (single shuffle).
+        j = left.join(right, left["clip_id"] == right["t_clip_id"], "full_outer")
+
+        missing = j.filter(F.col("t_clip_id").isNull()).select(
+            F.col("clip_id"),
+            F.col(ctx.part_col),
+            F.lit(R_MISSING).alias("rule_id"),
+            F.lit(None).cast("string").alias("observed"),
+            F.lit("transcript row exists").alias("expected"),
+            F.lit("Medium").alias("severity"),
+            F.lit("clip has no transcript row").alias("explanation"),
+        )
+        orphan = j.filter(F.col("clip_id").isNull()).select(
+            F.col("t_clip_id").alias("clip_id"),
+            F.col("_t_part").alias(ctx.part_col),
+            F.lit(R_ORPHAN).alias("rule_id"),
+            F.col("t_clip_id").cast("string").alias("observed"),
+            F.lit("clip row exists").alias("expected"),
+            F.lit("Medium").alias("severity"),
+            F.lit("transcript row references unknown clip").alias("explanation"),
+        )
+        mismatch = j.filter(
+            F.col("clip_id").isNotNull()
+            & F.col("t_clip_id").isNotNull()
+            & ~F.col("_t_clip").eqNullSafe(F.col("_t_side"))
+        ).select(
+            F.col("clip_id"),
+            F.col(ctx.part_col),
+            F.lit(R_MISMATCH).alias("rule_id"),
+            F.substring(F.coalesce(F.col("_t_side"), F.lit("∅")), 1, 64).alias("observed"),
+            F.substring(F.coalesce(F.col("_t_clip"), F.lit("∅")), 1, 64).alias("expected"),
+            F.lit("High").alias("severity"),
+            F.lit("transcript text differs between tables").alias("explanation"),
+        )
+        return (
+            missing.unionByName(orphan).unionByName(mismatch)
+            .select(
+                F.lit(ctx.run_id).alias("run_id"),
+                F.col(ctx.part_col).cast("int").alias("part_id"),
+                "rule_id",
+                "clip_id",
+                F.lit("transcript").alias("column"),
+                "observed",
+                "expected",
+                "severity",
+                "explanation",
+            )
+        )
+
+    return CheckSpec("referential", rule_ids=(R_MISSING, R_ORPHAN, R_MISMATCH),
+                     sparse=violations)
 
 
 def referential_check(
@@ -34,77 +113,4 @@ def referential_check(
     ctx: RunContext,
     strategy: str = "auto",
 ) -> CheckResult:
-    clips = ensure_part_id(clips, ctx)
-    left = clips.select("clip_id", ctx.part_col, F.col("transcript").alias("_t_clip"))
-    # transcripts get their part_id from their own clip_id (same hash) so the
-    # orphan direction is partition-prunable too: a wave runs clips[parts W]
-    # against transcripts[parts W] with no cross-wave false orphans.
-    right = transcripts.select(
-        F.col("clip_id").alias("t_clip_id"),
-        F.col("transcript").alias("_t_side"),
-        F.pmod(F.xxhash64("clip_id"), F.lit(ctx.num_parts)).cast("int").alias("_t_part"),
-    )
-    if strategy == "broadcast":
-        right = F.broadcast(right)
-    elif strategy == "auto":
-        # leave to Catalyst/AQE: broadcasts under autoBroadcastJoinThreshold,
-        # sort-merge otherwise (AQE can still convert at runtime).
-        pass
-    elif strategy != "sort_merge":
-        raise ValueError(f"unknown join strategy {strategy!r}")
-
-    # ONE full_outer join on the key serves all three rules (single shuffle).
-    j = left.join(right, left["clip_id"] == right["t_clip_id"], "full_outer")
-
-    missing = j.filter(F.col("t_clip_id").isNull()).select(
-        F.col("clip_id"),
-        F.col(ctx.part_col),
-        F.lit(R_MISSING).alias("rule_id"),
-        F.lit(None).cast("string").alias("observed"),
-        F.lit("transcript row exists").alias("expected"),
-        F.lit("Medium").alias("severity"),
-        F.lit("clip has no transcript row").alias("explanation"),
-    )
-    orphan = j.filter(F.col("clip_id").isNull()).select(
-        F.col("t_clip_id").alias("clip_id"),
-        F.col("_t_part").alias(ctx.part_col),
-        F.lit(R_ORPHAN).alias("rule_id"),
-        F.col("t_clip_id").cast("string").alias("observed"),
-        F.lit("clip row exists").alias("expected"),
-        F.lit("Medium").alias("severity"),
-        F.lit("transcript row references unknown clip").alias("explanation"),
-    )
-    mismatch = j.filter(
-        F.col("clip_id").isNotNull()
-        & F.col("t_clip_id").isNotNull()
-        & ~F.col("_t_clip").eqNullSafe(F.col("_t_side"))
-    ).select(
-        F.col("clip_id"),
-        F.col(ctx.part_col),
-        F.lit(R_MISMATCH).alias("rule_id"),
-        F.substring(F.coalesce(F.col("_t_side"), F.lit("∅")), 1, 64).alias("observed"),
-        F.substring(F.coalesce(F.col("_t_clip"), F.lit("∅")), 1, 64).alias("expected"),
-        F.lit("High").alias("severity"),
-        F.lit("transcript text differs between tables").alias("explanation"),
-    )
-    violations = (
-        missing.unionByName(orphan).unionByName(mismatch)
-        .select(
-            F.lit(ctx.run_id).alias("run_id"),
-            F.col(ctx.part_col).cast("int").alias("part_id"),
-            "rule_id",
-            "clip_id",
-            F.lit("transcript").alias("column"),
-            "observed",
-            "expected",
-            "severity",
-            "explanation",
-        )
-    )
-    verdicts = verdicts_from_violations(
-        violations.filter(F.col("part_id").isNotNull()).withColumnRenamed("part_id", ctx.part_col),
-        part_row_counts(clips, ctx),
-        ctx,
-        [R_MISSING, R_ORPHAN, R_MISMATCH],
-    )
-    return CheckResult("referential", verdicts, violations)
+    return one_check(clips, ctx, referential_spec(transcripts, strategy))

@@ -5,7 +5,9 @@ collects (rule_id, reason) alerts (`src/rules/engine.py:18-52`). At 10^12
 rows the equivalent must not scan once per rule: every rule here is a
 Catalyst boolean expression, stacked into a single projection —
 ``explode(filter(array(struct...)))`` — so N rules cost one scan, no UDFs,
-one shuffle (the verdict groupBy over sparse violations).
+one shuffle (the verdict groupBy over sparse violations). In the suite the
+projection also carries the other metadata checks' row predicates
+(checks/metadata.py).
 
 Column pruning note: rules reference only metadata columns, so the parquet
 scan never reads `bytes` (checked in tests via the physical plan).
@@ -13,22 +15,11 @@ scan never reads `bytes` (checked in tests via the physical plan).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .base import CheckResult, RunContext, ensure_part_id, part_row_counts, verdicts_from_violations
-
-
-@dataclass(frozen=True)
-class RowRule:
-    rule_id: str
-    column: str
-    violation: Column  # true ⇒ this row violates the rule
-    expected: str
-    severity: str = "Medium"
-    explanation: str = ""
+from .base import CheckResult, RunContext
+from .metadata import CheckSpec, RowRule, one_check, row_violations
 
 
 def default_clip_rules(allowed_codecs: tuple[str, ...] = ("pcm_s16le", "flac", "mulaw", "alaw", "adpcm_ima", "opus", "mp3"),
@@ -84,49 +75,19 @@ def default_clip_rules(allowed_codecs: tuple[str, ...] = ("pcm_s16le", "flac", "
 def violation_projection(df: DataFrame, rules: list[RowRule], ctx: RunContext) -> DataFrame:
     """Compile N rules into ONE projection (array → compact → explode).
     Stateless, so it runs identically on batch and streaming inputs."""
-    structs = [
-        F.when(
-            r.violation,
-            F.struct(
-                F.lit(r.rule_id).alias("rule_id"),
-                F.lit(r.column).alias("column"),
-                F.col(r.column).cast("string").alias("observed"),
-                F.lit(r.expected).alias("expected"),
-                F.lit(r.severity).alias("severity"),
-                F.lit(r.explanation).alias("explanation"),
-            ),
-        )
-        for r in rules
-    ]
-    hits = F.array_compact(F.array(*structs))  # drop non-violations (nulls)
-    return df.select("clip_id", ctx.part_col, F.explode(hits).alias("v")).select(
-        F.lit(ctx.run_id).alias("run_id"),
-        F.col(ctx.part_col).cast("int").alias("part_id"),
-        F.col("v.rule_id").alias("rule_id"),
-        "clip_id",
-        F.col("v.column").alias("column"),
-        F.col("v.observed").alias("observed"),
-        F.col("v.expected").alias("expected"),
-        F.col("v.severity").alias("severity"),
-        F.col("v.explanation").alias("explanation"),
-    )
+    return row_violations(df, [("row_rules", r) for r in rules], ctx).drop("check_id")
+
+
+def row_rules_spec(rules: list[RowRule], columns: list[str]) -> CheckSpec:
+    """The rules whose column is in ``columns``, as one check of the shared
+    metadata plan. Rules on absent columns are skipped (metadata-only runs
+    omit `bytes`), mirroring the reference's intersection-fallback on
+    schema mismatch (data_loader.py:104-118)."""
+    rules = tuple(r for r in rules if r.column in columns)
+    return CheckSpec("row_rules", rule_ids=tuple(r.rule_id for r in rules), rows=rules)
 
 
 def run_row_rules(df: DataFrame, rules: list[RowRule], ctx: RunContext) -> CheckResult:
-    """Evaluate all rules in one scan; emit violations + per-partition verdicts.
-
-    Rules whose column is absent from the input are skipped (metadata-only
-    runs omit `bytes`), mirroring the reference's intersection-fallback on
-    schema mismatch (data_loader.py:104-118).
-    """
-    rules = [r for r in rules if r.column in df.columns]
-    df = ensure_part_id(df, ctx)
-    violations = violation_projection(df, rules, ctx)
-    part_counts = part_row_counts(df, ctx)
-    verdicts = verdicts_from_violations(
-        violations.withColumnRenamed("part_id", ctx.part_col),
-        part_counts,
-        ctx,
-        [r.rule_id for r in rules],
-    )
-    return CheckResult("row_rules", verdicts, violations)
+    """Evaluate all rules in one scan; emit violations + per-partition
+    verdicts. Raises ``ValueError`` when no rule's column is present."""
+    return one_check(df, ctx, row_rules_spec(rules, df.columns))

@@ -19,17 +19,52 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.textstats import lang_id, quality_score, token_count
-from .base import (
-    CheckResult,
-    RunContext,
-    ensure_part_id,
-    part_row_counts,
-    verdicts_from_violations,
-)
+from .base import CheckResult, RunContext
+from .metadata import CheckSpec, RowRule, one_check
 
 R_LANG = "R080_transcript_lang"
 R_QUALITY = "R081_transcript_quality"
 R_TOKENS = "R082_transcript_tokens"
+
+
+def transcript_quality_spec(
+    allowed_langs: tuple[str, ...] = ("en", "de", "fr", "es", "und"),
+    min_quality: float = 0.3,
+    token_range: tuple[int, int] = (1, 100_000),
+    text_col: str = "transcript",
+    id_col: str = "clip_id",
+) -> CheckSpec:
+    """Lang/quality/tokens projected once per non-null transcript, then
+    three row rules over them (row_rules' array→compact→explode shape: a
+    union of per-rule filters would inline the textstats projection once
+    per branch)."""
+    text = F.col(text_col)
+    derived = tuple(
+        (name, F.when(text.isNotNull(), expr))
+        for name, expr in (
+            ("__tq_lang", lang_id(text)),
+            ("__tq_q", F.round(quality_score(text), 6)),
+            ("__tq_n", token_count(text).cast("long")),
+        )
+    )
+    lang, q, n = F.col("__tq_lang"), F.col("__tq_q"), F.col("__tq_n")
+    lo, hi = token_range
+    rules = (
+        RowRule(R_LANG, "transcript", ~lang.isin(list(allowed_langs)),
+                f"lang in {sorted(allowed_langs)}", "Medium",
+                "transcript language outside the expected set",
+                observed=lang, id_col=id_col),
+        RowRule(R_QUALITY, "transcript", q < min_quality,
+                f"quality >= {min_quality}", "Low",
+                "transcript quality score below floor",
+                observed=q, id_col=id_col),
+        RowRule(R_TOKENS, "transcript", (n < lo) | (n > hi),
+                f"token count in [{lo}, {hi}]", "Low",
+                "transcript token count outside expected range",
+                observed=n, id_col=id_col),
+    )
+    return CheckSpec("transcript_quality", rule_ids=(R_LANG, R_QUALITY, R_TOKENS),
+                     rows=rules, derived=derived)
 
 
 def transcript_quality_check(
@@ -42,85 +77,6 @@ def transcript_quality_check(
     id_col: str = "clip_id",
 ) -> CheckResult:
     """One scan: project lang/quality/tokens, emit violations per failed
-    rule, assemble per-partition verdicts — identical shuffle shape to the
-    other metadata checks (sparse violations only)."""
-    df = ensure_part_id(df, ctx)
-    t = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(ctx.part_col),
-        F.col(id_col),
-        lang_id(F.col(text_col)).alias("__lang"),
-        F.round(quality_score(F.col(text_col)), 6).alias("__q"),
-        token_count(F.col(text_col)).cast("long").alias("__n"),
-    )
-
-    lo, hi = token_range
-    # ONE scan for all three rules (row_rules' array→compact→explode trick):
-    # a unionByName of per-rule filters would inline the textstats
-    # projection once per branch per action — 3× the evaluation and
-    # compile cost for the same sparse output
-    rules = [
-        (
-            R_LANG,
-            ~F.col("__lang").isin(list(allowed_langs)),
-            F.col("__lang"),
-            f"lang in {sorted(allowed_langs)}",
-            "Medium",
-            "transcript language outside the expected set",
-        ),
-        (
-            R_QUALITY,
-            F.col("__q") < min_quality,
-            F.col("__q"),
-            f"quality >= {min_quality}",
-            "Low",
-            "transcript quality score below floor",
-        ),
-        (
-            R_TOKENS,
-            (F.col("__n") < lo) | (F.col("__n") > hi),
-            F.col("__n"),
-            f"token count in [{lo}, {hi}]",
-            "Low",
-            "transcript token count outside expected range",
-        ),
-    ]
-    structs = [
-        F.when(
-            cond,
-            F.struct(
-                F.lit(rule).alias("rule_id"),
-                observed.cast("string").alias("observed"),
-                F.lit(expected).alias("expected"),
-                F.lit(severity).alias("severity"),
-                F.lit(explanation).alias("explanation"),
-            ),
-        )
-        for rule, cond, observed, expected, severity, explanation in rules
-    ]
-    hits = F.array_compact(F.array(*structs))
-    violations = (
-        t.select(F.col(ctx.part_col), F.col(id_col), F.explode(hits).alias("v"))
-        .select(
-            F.lit(ctx.run_id).alias("run_id"),
-            F.col(ctx.part_col).cast("int").alias("part_id"),
-            F.col("v.rule_id").alias("rule_id"),
-            F.col(id_col).alias("clip_id"),
-            F.lit("transcript").alias("column"),
-            F.col("v.observed").alias("observed"),
-            F.col("v.expected").alias("expected"),
-            F.col("v.severity").alias("severity"),
-            F.col("v.explanation").alias("explanation"),
-        )
-    )
-    # persist the SPARSE violations so the textstats projection runs once:
-    # the wave runner's three batched actions (verdict persist+collect,
-    # verdicts write, violations write) would otherwise re-compile and
-    # re-evaluate it each time (~3× cost for identical output). The cache
-    # holds only violation rows — bounded by defect rate, not input size.
-    violations = violations.persist()
-    verdicts = verdicts_from_violations(
-        violations, part_row_counts(df, ctx), ctx, [R_LANG, R_QUALITY, R_TOKENS]
-    )
-    return CheckResult(
-        "transcript_quality", verdicts, violations, resources=[violations]
-    )
+    rule, assemble per-partition verdicts — the shared metadata plan."""
+    return one_check(df, ctx, transcript_quality_spec(
+        allowed_langs, min_quality, token_range, text_col, id_col))

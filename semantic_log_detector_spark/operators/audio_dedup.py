@@ -210,7 +210,7 @@ def audio_fingerprint(
         spark = df.sparkSession
         groups = list_row_groups(files, spark)
         desc = spark.createDataFrame(
-            spark.sparkContext.parallelize(groups, len(groups)),
+            spark.sparkContext.parallelize(groups, max(len(groups), 1)),
             "file string, row_group int",
         )
 

@@ -186,7 +186,7 @@ def audio_landmarks(
         groups = list_row_groups(files, spark)
         # one row group per task (payload_scan's balanced-split finding)
         desc = spark.createDataFrame(
-            spark.sparkContext.parallelize(groups, len(groups)),
+            spark.sparkContext.parallelize(groups, max(len(groups), 1)),
             "file string, row_group int",
         )
 

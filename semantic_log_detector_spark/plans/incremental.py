@@ -181,7 +181,9 @@ def _exclude_post_snapshot_files(
         return clips
     from pathlib import Path
 
-    uris = [Path(r["file"]).resolve().as_uri() for r in overhang]
+    # absolute but NOT symlink-resolved: the scan's input_file_name keeps
+    # the table path as given, like the listing does
+    uris = [Path(os.path.abspath(r["file"])).as_uri() for r in overhang]
     import logging
 
     logging.getLogger(__name__).warning(

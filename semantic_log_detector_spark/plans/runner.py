@@ -26,19 +26,34 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..checks.base import CheckResult, RunContext, ensure_part_id
-from ..checks.column_stats import DEFAULT_EXPECTATIONS, stats_check
+from ..checks.column_stats import DEFAULT_EXPECTATIONS, stats_spec
 from ..checks.drift import drift_check
-from ..checks.frequency import frequency_check
-from ..checks.referential import referential_check
-from ..checks.row_rules import default_clip_rules, run_row_rules
+from ..checks.frequency import frequency_spec
+from ..checks.metadata import run_checks
+from ..checks.referential import referential_spec
+from ..checks.row_rules import default_clip_rules, row_rules_spec
 from ..checks.schema_check import schema_check
-from ..checks.transcript_quality import transcript_quality_check
-from ..checks.uniqueness import uniqueness_check
+from ..checks.transcript_quality import transcript_quality_spec
+from ..checks.uniqueness import uniqueness_spec
 from ..schema import CLIPS_SCHEMA
 from . import ledger as ledger_mod
 
+# The metadata checks' one-check entry points. run_suite does not call
+# them (it builds the shared plan); they stay importable from this module
+# because perfbench's traced run wraps them here by name.
+from ..checks.column_stats import stats_check  # noqa: F401
+from ..checks.frequency import frequency_check  # noqa: F401
+from ..checks.referential import referential_check  # noqa: F401
+from ..checks.row_rules import run_row_rules  # noqa: F401
+from ..checks.transcript_quality import transcript_quality_check  # noqa: F401
+from ..checks.uniqueness import uniqueness_check  # noqa: F401
+
 ALL_CHECKS = ("schema", "row_rules", "stats", "uniqueness", "referential",
               "frequency", "transcript_quality", "drift")
+# checks compiled together into one shared plan per pending part set
+# (checks/metadata.py); drift and schema build their own
+METADATA_CHECKS = ("row_rules", "stats", "uniqueness", "referential",
+                   "frequency", "transcript_quality")
 
 
 @dataclass(frozen=True)
@@ -106,6 +121,10 @@ class RunResult:
     # populated by validate_increment(dup_check=True): counts + sink path of
     # the increment's cross-corpus content-duplicate pairs (ann_index)
     dup_check: dict | None = None
+
+
+_VERDICT_COLS = ("run_id", "part_id", "rule_id", "passed", "n_rows",
+                 "n_violations", "observed", "expected")
 
 
 def _wave_parts(cfg: SuiteConfig, wave: int) -> list[int]:
@@ -197,11 +216,12 @@ def run_suite(
         # metadata-only checks share a single scan. NB: bytes intentionally
         # excluded from the cache — only drift reads them, streamed not cached.
         meta_cols = [c for c in clips.columns if c != "bytes"]
-        # cache the metadata slice at a REDUCED partition count: every
-        # metadata check fans ~2 map stages out of this cache, so 32 scan
-        # splits × ~16 subtrees ≈ 1000 tiny tasks in the batched action;
-        # coalescing bounds that at about a quarter with unchanged bytes
-        # (round 6; measured collect 6.8 → 4.3 s at 60k clips). The
+        # cache the metadata slice at a REDUCED partition count: the
+        # metadata plan fans several map stages out of this cache (row
+        # projection, per-part aggregate, uniqueness, referential), each
+        # one task per cache partition; coalescing bounds the tiny tasks
+        # at about a quarter with unchanged bytes (round 6; measured
+        # collect 6.8 → 4.3 s at 60k clips). The
         # target is SCALE-ADAPTIVE, not a constant: an 8:1 merge floor —
         # scan splits are sized by TOTAL file bytes, and the cached
         # metadata columns are a small fraction of that, so 8 merged
@@ -220,108 +240,109 @@ def run_suite(
 
         tr_part = F.pmod(F.xxhash64("clip_id"), F.lit(cfg.num_parts)).cast("int")
 
-        built: list[tuple[str, list[int], CheckResult, float]] = []
+        # (checks, their pending parts, result, build seconds) per build
+        built: list[tuple[tuple[str, ...], list[int], CheckResult, float]] = []
+        drift_future = None
         try:
-            # Build every pending check's (lazy) plan first, tagged with its
-            # check_id, then execute the whole wave with THREE actions: one
-            # stats collect over the persisted verdict union, one verdicts
-            # write, one violations write. Per-check actions (2 writes + 1
-            # collect each) are pure fixed scheduling cost that does not
-            # shrink with cores — batching them is what keeps the N→4N
-            # scaling efficiency honest at sandbox input sizes.
+            # Build every pending check's (lazy) plan first, then execute the
+            # whole wave with TWO Spark actions over one persisted union of
+            # every verdict and violation row: a collect of the verdict rows
+            # (at most parts × rules; the driver writes them and derives the
+            # ledger from them) and one violations write. Per-check actions
+            # are pure fixed scheduling cost that does not shrink with cores.
+            #
+            # The metadata checks compile into ONE shared plan per distinct
+            # pending part set (checks/metadata.py): one build for all of
+            # them, or one per set on a resume where they stopped at
+            # different parts.
             #
             # The drift build is EAGER (its decode pass materializes at
             # build time for the tiny-histogram collect), so it runs in a
-            # driver thread while the main thread builds the other checks'
-            # plans (guide §2.6: overlap independent work — the cluster is
-            # busy decoding while the driver does ~2 s of pure py4j plan
-            # construction; measured back-to-back at 60k clips / 32 cores).
-            # InheritableThread carries the Spark thread-locals; results
-            # are re-inserted at drift's original position so ledger/union
-            # order — and therefore every output — is unchanged.
-            def build_check(check: str, pend: list[int]) -> CheckResult | None:
-                sub_meta = wave_meta.filter(F.col(ctx.part_col).isin(pend))
+            # driver thread while the main thread builds the metadata plan
+            # (guide §2.6: overlap independent work — the cluster is busy
+            # decoding while the driver does pure py4j plan construction).
+            # InheritableThread carries the Spark thread-locals.
+            def metadata_spec(check: str, pend: list[int]):
                 if check == "row_rules":
-                    return run_row_rules(
-                        sub_meta,
+                    return row_rules_spec(
                         default_clip_rules(cfg.allowed_codecs, cfg.sr_range,
                                            cfg.dur_range, cfg.rate_range),
-                        ctx)
+                        meta_cols)
                 if check == "stats":
-                    return stats_check(sub_meta, ctx,
-                                       {c: list(e) for c, e in cfg.stats_expectations})
+                    return stats_spec({c: list(e) for c, e in cfg.stats_expectations})
                 if check == "uniqueness":
-                    return uniqueness_check(sub_meta, ctx)
+                    return uniqueness_spec()
                 if check == "referential":
-                    if transcripts is None:
-                        return None
                     # transcripts filtered to THIS check's pending parts
                     # (not the wave union) so resumed runs never emit
                     # verdicts for partitions outside their pending set
-                    return referential_check(
-                        sub_meta, transcripts.filter(tr_part.isin(pend)), ctx)
+                    return referential_spec(transcripts.filter(tr_part.isin(pend)))
                 if check == "frequency":
-                    return frequency_check(sub_meta, ctx, allowed=cfg.allowed_codecs)
+                    return frequency_spec(allowed=cfg.allowed_codecs)
                 if check == "transcript_quality":
-                    return transcript_quality_check(sub_meta, ctx)
-                if check == "drift":
-                    sub_full = clips.filter(F.col(ctx.part_col).isin(pend))
-                    return drift_check(sub_full, ctx,
-                                       psi_threshold=cfg.psi_threshold,
-                                       ks_threshold=cfg.ks_threshold,
-                                       strict_codecs=cfg.strict_codecs,
-                                       baseline=drift_baseline,
-                                       payload_path=clips_path,
-                                       pending_parts=(
-                                           pend if len(pend) < cfg.num_parts else None),
-                                       transcripts=(
-                                           transcripts.filter(tr_part.isin(pend))
-                                           if cfg.speech_rate and transcripts is not None
-                                           else None),
-                                       wps_range=cfg.wps_range)
+                    return transcript_quality_spec()
                 raise ValueError(f"unknown check {check!r}")
 
-            drift_future = None
-            drift_pend: list[int] = []
+            def build_drift(pend: list[int]) -> CheckResult:
+                sub_full = clips.filter(F.col(ctx.part_col).isin(pend))
+                res = drift_check(sub_full, ctx,
+                                  psi_threshold=cfg.psi_threshold,
+                                  ks_threshold=cfg.ks_threshold,
+                                  strict_codecs=cfg.strict_codecs,
+                                  baseline=drift_baseline,
+                                  payload_path=clips_path,
+                                  pending_parts=(
+                                      pend if len(pend) < cfg.num_parts else None),
+                                  transcripts=(
+                                      transcripts.filter(tr_part.isin(pend))
+                                      if cfg.speech_rate and transcripts is not None
+                                      else None),
+                                  wps_range=cfg.wps_range)
+                return CheckResult(
+                    "drift", res.verdicts.withColumn("check_id", F.lit("drift")),
+                    res.violations.withColumn("check_id", F.lit("drift")),
+                    resources=res.resources)
+
+            drift_pend = pending_by_check.get("drift", [])
             t_drift = 0.0
-            if "drift" in wave_checks and pending_by_check.get("drift"):
+            if drift_pend:
                 from concurrent.futures import ThreadPoolExecutor
 
                 from pyspark import inheritable_thread_target
 
-                drift_pend = pending_by_check["drift"]
                 t_drift = time.time()
                 _pool = ThreadPoolExecutor(max_workers=1)
                 drift_future = _pool.submit(
-                    inheritable_thread_target(spark)(
-                        lambda: build_check("drift", drift_pend)))
+                    inheritable_thread_target(spark)(lambda: build_drift(drift_pend)))
                 _pool.shutdown(wait=False)
+
+            groups: dict[tuple[int, ...], list[str]] = {}
             for check in wave_checks:
-                pend = pending_by_check[check]
-                if not pend:
+                if check == "drift" or not pending_by_check[check]:
                     continue
-                if check == "drift" and drift_future is not None:
-                    res = drift_future.result()
-                    built.append((check, pend, res, time.time() - t_drift))
+                if check == "referential" and transcripts is None:
                     continue
+                groups.setdefault(tuple(pending_by_check[check]), []).append(check)
+            for pend_key, checks in groups.items():
+                pend = list(pend_key)
                 t0 = time.time()
-                res = build_check(check, pend)
-                if res is None:
-                    continue
-                built.append((check, pend, res, time.time() - t0))
+                res = run_checks(wave_meta.filter(F.col(ctx.part_col).isin(pend)), ctx,
+                                 [metadata_spec(c, pend) for c in checks])
+                built.append((tuple(checks), pend, res, time.time() - t0))
+            if drift_future is not None:
+                res = drift_future.result()
+                drift_future = None
+                built.append((("drift",), drift_pend, res, time.time() - t_drift))
 
             if built:
                 # Pad verdicts and violations to one superset schema and
                 # union EVERYTHING into a single persisted frame: every
                 # check's verdict AND violation subtree executes exactly
                 # once, inside one parallel job (independent map stages
-                # overlap). The previous 3-action shape (collect over a
-                # persisted verdict union, then a violations write) executed
-                # the violation subtrees — including the referential
-                # full_outer join — a second time in a second job.
+                # overlap).
                 VKIND, LKIND = "r", "v"
                 combined = None
-                for check, _, res, _ in built:
+                for _, _, res, _ in built:
                     v = res.verdicts.select(
                         "run_id", "part_id", "rule_id", "passed", "n_rows",
                         "n_violations", "observed", "expected",
@@ -330,7 +351,7 @@ def run_suite(
                         F.lit(None).cast("string").alias("severity"),
                         F.lit(None).cast("string").alias("explanation"),
                         F.lit(VKIND).alias("__kind"),
-                        F.lit(check).alias("__check"),
+                        F.col("check_id").alias("__check"),
                     )
                     l = res.violations.select(
                         "run_id", "part_id", "rule_id",
@@ -340,7 +361,7 @@ def run_suite(
                         "observed", "expected", "clip_id", "column",
                         "severity", "explanation",
                         F.lit(LKIND).alias("__kind"),
-                        F.lit(check).alias("__check"),
+                        F.col("check_id").alias("__check"),
                     )
                     both = v.unionByName(l)
                     combined = both if combined is None else combined.unionByName(both)
@@ -354,20 +375,19 @@ def run_suite(
                                        str(cfg.wave_shuffle_partitions))
                     t0 = time.time()
                     combined.persist()
-                    stats = (
+                    verdict_rows = (
                         combined.filter(F.col("__kind") == VKIND)
-                        .groupBy("__check", "part_id")
-                        .agg(F.max("n_rows").alias("nr"), F.sum("n_violations").alias("nv"))
+                        .select("__check", *_VERDICT_COLS)
                         .collect()
                     )
                     t1 = time.time()
-                    # both writes read the persisted frame — no recompute.
-                    # verdicts are ≤ parts×rules rows → one file; violations
-                    # are sparse → a few files (not 100s of near-empty ones)
-                    combined.filter(F.col("__kind") == VKIND).select(
-                        "run_id", "part_id", "rule_id", "passed", "n_rows",
-                        "n_violations", "observed", "expected",
-                    ).coalesce(1).write.mode("append").parquet(f"{out_dir}/verdicts")
+                    # verdicts are ≤ parts×rules rows: sunk on the driver as
+                    # one file; violations are sparse → a few files (not
+                    # 100s of near-empty ones), written from the persisted
+                    # frame — no recompute
+                    ledger_mod.write_local_rows(
+                        f"{out_dir}/verdicts", [tuple(r)[1:] for r in verdict_rows],
+                        "verdicts")
                     t2 = time.time()
                     combined.filter(F.col("__kind") == LKIND).select(
                         "run_id", "part_id", "rule_id", "clip_id", "column",
@@ -383,26 +403,32 @@ def run_suite(
                 tm["write_verdicts_s"] = tm.get("write_verdicts_s", 0.0) + (t2 - t1)
                 tm["write_violations_s"] = tm.get("write_violations_s", 0.0) + (t3 - t2)
 
-                by_check: dict[str, dict[int, tuple[int, int]]] = {}
-                for r in stats:
-                    by_check.setdefault(r["__check"], {})[r["part_id"]] = (r["nr"], r["nv"])
-                for check, pend, _, build_s in built:
-                    got = by_check.get(check, {})
-                    part_stats = [(p, *(got.get(p, (0, 0)))) for p in pend]
+                # ledger part stats per (check, part): max rows, summed
+                # violations over the check's verdict rows
+                part_stats: dict[tuple[str, int], tuple[int, int]] = {}
+                for r in verdict_rows:
+                    key = (r["__check"], r["part_id"])
+                    nr, nv = part_stats.get(key, (0, 0))
+                    part_stats[key] = (max(nr, r["n_rows"]), nv + r["n_violations"])
+                by_check = {c: (pend, build_s)
+                            for checks, pend, _, build_s in built for c in checks}
+                for check in wave_checks:
+                    if check not in by_check:
+                        continue
+                    pend, build_s = by_check[check]
                     ledger_mod.append(
-                        spark, ledger_path, run_id, check, part_stats,
+                        spark, ledger_path, run_id, check,
+                        [(p, *part_stats.get((check, p), (0, 0))) for p in pend],
                         build_s * 1000, input_fingerprint, ctx.config_hash)
                     done_map.setdefault(check, set()).update(pend)
-                    result.timings[f"plan_{check}_s"] = (
-                        result.timings.get(f"plan_{check}_s", 0.0) + build_s
-                    )
                     if check not in result.checks_run:
                         result.checks_run.append(check)
+                for checks, _, _, build_s in built:
+                    key = "plan_drift_s" if checks == ("drift",) else "plan_metadata_s"
+                    tm[key] = tm.get(key, 0.0) + build_s
         finally:
-            if drift_future is not None and not any(
-                c == "drift" for c, *_ in built
-            ):
-                # a non-drift build raised while drift was still building:
+            if drift_future is not None:
+                # a metadata build raised while drift was still building:
                 # await it so its persisted resources don't leak
                 try:
                     drift_future.result().release()

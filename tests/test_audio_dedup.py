@@ -311,3 +311,14 @@ def test_audio_contamination_broadcast_guard(spark):
         (r.clip_id, r.clip_id) for r in bench.select("clip_id").collect()
     }
     corpus.unpersist()
+
+
+def test_empty_parquet_table_yields_no_fingerprints(spark, tmp_path):
+    """An empty table on the row-group reader route: no row group to
+    scan, an empty result (not a ZeroDivisionError from parallelize)."""
+    path = str(tmp_path / "empty")
+    content_dup_clips(spark, 4, seed=1).select("clip_id", "bytes", "codec") \
+        .limit(0).write.parquet(path)
+    fps = audio_fingerprint(spark.read.parquet(path))
+    assert fps.columns[:3] == ["id", "fp", "fake"]
+    assert fps.count() == 0

@@ -110,3 +110,14 @@ def test_event_keys_kernel():
     assert len(keys2) == 1
     # too few events → no keys
     assert len(_event_keys(np.array([3, 3, 3]), np.arange(3))[0]) == 0
+
+
+def test_empty_parquet_table_yields_no_landmarks(spark, tmp_path):
+    """An empty table on the row-group reader route: no row group to
+    scan, an empty result (not a ZeroDivisionError from parallelize)."""
+    path = str(tmp_path / "empty")
+    melody_clips(spark, 4, seed=1).select("clip_id", "bytes", "codec") \
+        .limit(0).write.parquet(path)
+    lm = audio_landmarks(spark.read.parquet(path))
+    assert lm.columns == ["id", "key", "t", "fake"]
+    assert lm.count() == 0

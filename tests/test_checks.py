@@ -8,7 +8,7 @@ from semantic_log_detector_spark.checks.column_stats import (
     profile,
     stats_check,
 )
-from semantic_log_detector_spark.checks.frequency import frequency_check, frequency_table
+from semantic_log_detector_spark.checks.frequency import frequency_check
 from semantic_log_detector_spark.checks.referential import referential_check
 from semantic_log_detector_spark.checks.row_rules import default_clip_rules, run_row_rules
 from semantic_log_detector_spark.checks.schema_check import schema_check
@@ -106,12 +106,6 @@ def test_salted_grouped_profile_equals_naive(meta_4k):
         assert r["count"] == r["count"]
         assert abs(r["dur_ms_mean"] - r["mean"]) < 1e-9
         assert r["dur_ms_min"] == r["mn"] and r["dur_ms_max"] == r["mx"]
-
-
-def test_frequency_table_salted_equals_naive(meta_4k):
-    a = frequency_table(meta_4k, "codec", salted=True)
-    b = frequency_table(meta_4k, "codec", salted=False)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 def test_uniqueness_counts_every_dup_occurrence(meta_4k):

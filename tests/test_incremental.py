@@ -274,3 +274,30 @@ def test_first_run_scan_pinned_to_listing_snapshot(spark, tmp_path):
     clips2 = spark.read.parquet(t)
     assert _exclude_post_snapshot_files(spark, clips2, snap2, t) is clips2
     snap.unpersist(); snap2.unpersist()
+
+
+def test_snapshot_pinning_through_symlinked_table_dir(spark, tmp_path):
+    """The table read through a symlink: the overhang URIs must match the
+    scan's input_file_name, which keeps the symlinked path (a resolved
+    path would match nothing and the late file would slip through)."""
+    import os
+
+    from semantic_log_detector_spark.plans.incremental import (
+        _exclude_post_snapshot_files,
+        list_data_files_df,
+    )
+
+    real = tmp_path / "real"
+    spark.range(5).selectExpr("id", "'a' as tag").coalesce(1) \
+        .write.mode("overwrite").parquet(str(real))
+    link = str(tmp_path / "link")
+    os.symlink(real, link)
+    snap = list_data_files_df(spark, link).cache()
+    snap.count()
+    spark.range(100, 103).selectExpr("id", "'b' as tag").coalesce(1) \
+        .write.mode("append").parquet(str(real))
+    clips = spark.read.parquet(link)
+    assert clips.count() == 8
+    pinned = _exclude_post_snapshot_files(spark, clips, snap, link)
+    assert sorted(r["id"] for r in pinned.collect()) == [0, 1, 2, 3, 4]
+    snap.unpersist()

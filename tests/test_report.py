@@ -144,3 +144,99 @@ def test_report_streaming_audio_dedup_section(spark, tmp_path):
     md = open(os.path.join(out, "report.md")).read()
     assert "## 10. Streaming acoustic dedup coverage" in md
     assert "deferred to the batch authority" in md
+
+
+def _spark_rollups(spark, out):
+    """The verdict, violation and ledger rollups of the report computed as
+    Spark aggregations over the written parquet — the reference the
+    driver-side rollups of ``summarize`` must equal."""
+    from pyspark.sql import functions as F
+
+    verdicts = spark.read.parquet(f"{out}/verdicts")
+    by_rule = (
+        verdicts.groupBy("rule_id")
+        .agg(F.count(F.lit(1)).alias("n"),
+             F.sum(F.when(F.col("passed"), 1).otherwise(0)).alias("passed"),
+             F.sum("n_violations").alias("nv"))
+        .orderBy("rule_id").collect()
+    )
+    failed = (verdicts.filter(~F.col("passed"))
+              .select("part_id", "rule_id", "observed")
+              .orderBy("rule_id", "part_id").limit(1000).collect())
+    ds = (verdicts.filter(F.col("part_id") >= 0).groupBy("part_id")
+          .agg(F.max("n_rows").alias("n_rows"))
+          .agg(F.count(F.lit(1)).alias("n_parts"), F.sum("n_rows").alias("tot"),
+               F.min("n_rows").alias("lo"), F.max("n_rows").alias("hi"))
+          .first())
+    fk = (verdicts.filter((F.col("rule_id") == "R062_codec_fidelity")
+                          & (F.col("part_id") >= 0)
+                          & F.col("observed").rlike(r"n_fake_decoded=\d+"))
+          .agg(F.sum(F.regexp_extract("observed", r"n_fake_decoded=(\d+)", 1)
+                     .cast("long")).alias("n_fake"),
+               F.sum("n_rows").alias("n_rows"))
+          .first())
+    violations = spark.read.parquet(f"{out}/violations")
+    led = spark.read.parquet(f"{out}/ledger")
+    return {
+        "dataset": {
+            "n_parts": ds["n_parts"], "n_rows_total": int(ds["tot"] or 0),
+            "min_part_rows": int(ds["lo"] or 0), "max_part_rows": int(ds["hi"] or 0),
+            "n_fake_decoded": int(fk["n_fake"]),
+            "fake_fraction": round(fk["n_fake"] / fk["n_rows"], 6),
+        },
+        "rules": [
+            {"rule_id": r["rule_id"], "partitions": r["n"], "passed": r["passed"],
+             "pass_rate": round(r["passed"] / max(r["n"], 1), 6), "violations": r["nv"]}
+            for r in by_rule
+        ],
+        "failed_partitions": [
+            {"part_id": r["part_id"], "rule_id": r["rule_id"], "observed": r["observed"]}
+            for r in failed
+        ],
+        "overall_passed": all(r["passed"] == r["n"] for r in by_rule),
+        "severity": {r["severity"]: r["n"] for r in violations.groupBy("severity")
+                     .agg(F.count(F.lit(1)).alias("n")).collect()},
+        "worst_partitions": [
+            {"part_id": r["part_id"], "violations": r["n"]}
+            for r in violations.groupBy("part_id").agg(F.count(F.lit(1)).alias("n"))
+            .orderBy(F.desc("n"), F.asc("part_id")).limit(10).collect()
+        ],
+        "timings_ms": {r["check_id"]: round(r["ms"], 1) for r in led.groupBy("check_id")
+                       .agg(F.max("wall_ms").alias("ms")).collect()},
+    }
+
+
+def test_summarize_rollups_match_spark_aggregations(spark, tmp_path):
+    """Multi-run out_dir: two suite runs (different inputs and lineages,
+    so every (part, rule) appears twice) plus row-rule violations appended
+    by the streaming suite. The driver-side rollups equal the Spark
+    aggregations over the same parquet."""
+    from semantic_log_detector_spark.checks.base import RunContext
+    from semantic_log_detector_spark.checks.row_rules import default_clip_rules
+    from semantic_log_detector_spark.plans.report import summarize
+    from semantic_log_detector_spark.streaming.stream_checks import stream_suite
+
+    out = str(tmp_path / "multi")
+    cfg = SuiteConfig(num_parts=8)
+    run_suite(spark, clips_table(spark, 400, num_parts=8), transcripts_table(spark, 400),
+              out, cfg, input_fingerprint="first")
+    run_suite(spark, clips_table(spark, 300, num_parts=8, seed=7),
+              transcripts_table(spark, 300, seed=7), out, cfg, input_fingerprint="second")
+    src = str(tmp_path / "stream_src")
+    clips_table(spark, 200, num_parts=8, seed=9, with_bytes=False).write.parquet(src)
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    q = stream_suite(stream, out, RunContext(run_id="stream", num_parts=8),
+                     default_clip_rules(), str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+
+    got = summarize(spark, out)
+    want = _spark_rollups(spark, out)
+    assert got["dataset"]["n_parts"] == 8
+    assert got["dataset"]["n_fake_decoded"] > 0
+    for key in ("rules", "failed_partitions"):
+        # ties in the (rule_id, part_id) order come from the two runs;
+        # their relative order is not defined
+        assert sorted(map(json.dumps, got[key])) == sorted(map(json.dumps, want[key])), key
+    assert [r["rule_id"] for r in got["rules"]] == [r["rule_id"] for r in want["rules"]]
+    for key in ("dataset", "overall_passed", "severity", "worst_partitions", "timings_ms"):
+        assert got[key] == want[key], key
