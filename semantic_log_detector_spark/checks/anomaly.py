@@ -54,11 +54,13 @@ from pyspark.sql import functions as F
 
 from ..operators.knn import brute_force_topk, lsh_topk
 from .base import (
+    CheckPlan,
     CheckResult,
     RunContext,
+    check_result,
     ensure_part_id,
+    part_frame,
     part_row_counts,
-    verdicts_from_violations,
 )
 
 R_ANOMALY = "R070_knn_anomaly"
@@ -314,16 +316,19 @@ def anomaly_check(
                          auto_brute_max_baseline=auto_brute_max_baseline,
                          ).join(parts, "id", "left")
     violations = ex.filter(F.col("is_anomaly")).select(
-        F.col("id").cast("string").alias("clip_id"),
-        F.col(ctx.part_col),
+        F.lit(ctx.run_id).alias("run_id"),
+        F.col(ctx.part_col).cast("int").alias("part_id"),
         F.lit(R_ANOMALY).alias("rule_id"),
+        F.col("id").cast("string").alias("clip_id"),
+        F.lit(None).cast("string").alias("column"),
         F.concat(F.lit("score="), F.col("anomaly_score").cast("string"),
                  F.lit(" mean_dist="), F.col("mean_distance").cast("string")).alias("observed"),
         F.lit(f"mean kNN distance <= p{threshold_percentile:g} baseline threshold").alias("expected"),
         F.col("severity"),
         F.concat(F.col("summary"), F.lit(" similar=["), F.col("top_neighbors"),
                  F.lit("] recs: "), F.col("recommendations")).alias("explanation"),
+        F.lit("anomaly").alias("check_id"),
     )
-    pc = part_row_counts(scored, ctx)
-    verdicts = verdicts_from_violations(violations, pc, ctx, [R_ANOMALY])
-    return CheckResult("anomaly", verdicts, violations)
+    plan = CheckPlan(("anomaly",), rules=[("anomaly", R_ANOMALY)], sparse=violations,
+                     part_frame=part_frame(part_row_counts(scored, ctx), ctx))
+    return check_result(scored.sparkSession, plan, ctx)

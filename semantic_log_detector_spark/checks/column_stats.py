@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .base import CheckResult, RunContext, severity_for_rate
+from .base import CheckResult, PartRule, RunContext, severity_for_rate
 from .metadata import CheckSpec, one_check
 
 _QUANTILE_ACC = 10_000  # percentile_approx accuracy (1/eps)
@@ -159,9 +159,10 @@ def stats_spec(
     """Declarative threshold checks over the per-partition stats profile.
 
     The columns' algebraic stats join the shared groupBy(part_id);
-    expectations are evaluated per partition → verdict rows. The
-    violation row carries observed-vs-expected (explanation_engine.py
-    semantics) with the partition as the offending scope (clip_id NULL).
+    expectations are evaluated per partition as a projection of it
+    (``PartRule``) → verdict rows. The violation row carries
+    observed-vs-expected (explanation_engine.py semantics) with the
+    partition as the offending scope (clip_id NULL).
     """
     expectations = expectations or DEFAULT_EXPECTATIONS
     part_aggs = tuple(
@@ -173,53 +174,22 @@ def stats_spec(
         )
     )
 
-    def part_verdicts(per_part: DataFrame, ctx: RunContext) -> tuple[DataFrame, DataFrame]:
-        verdict_rows = []
-        for c, exps in expectations.items():
-            for field, op, thr in exps:
-                rule_id = f"R017_stats_{c}_{field}"
-                if field == "null_rate":
-                    observed = 1.0 - F.col(f"{c}__nn") / F.col("n_rows")
-                else:
-                    observed = F.col(f"{c}__{field}")
-                ok = (observed <= thr) if op == "<=" else (observed >= thr)
-                ok = F.coalesce(ok, F.lit(True))  # empty partitions pass
-                verdict_rows.append(
-                    F.struct(
-                        F.lit(rule_id).alias("rule_id"),
-                        ok.alias("passed"),
-                        F.round(observed, 6).cast("string").alias("observed"),
-                        F.lit(f"{c}.{field} {op} {thr}").alias("expected"),
-                        F.lit(c).alias("col_name"),
-                    )
-                )
-        exploded = per_part.select(
-            F.col(ctx.part_col), F.col("n_rows"), F.explode(F.array(*verdict_rows)).alias("v")
-        )
-        verdicts = exploded.select(
-            F.lit(ctx.run_id).alias("run_id"),
-            F.col(ctx.part_col).cast("int").alias("part_id"),
-            F.col("v.rule_id").alias("rule_id"),
-            F.col("v.passed").alias("passed"),
-            F.col("n_rows").cast("long").alias("n_rows"),
-            F.when(F.col("v.passed"), F.lit(0)).otherwise(F.lit(1)).cast("long").alias("n_violations"),
-            F.col("v.observed").alias("observed"),
-            F.col("v.expected").alias("expected"),
-        )
-        violations = exploded.filter(~F.col("v.passed")).select(
-            F.lit(ctx.run_id).alias("run_id"),
-            F.col(ctx.part_col).cast("int").alias("part_id"),
-            F.col("v.rule_id").alias("rule_id"),
-            F.lit(None).cast("string").alias("clip_id"),
-            F.col("v.col_name").alias("column"),
-            F.col("v.observed").alias("observed"),
-            F.col("v.expected").alias("expected"),
-            severity_for_rate(F.lit(0.01)).alias("severity"),
-            F.concat(F.lit("partition stat out of bounds: observed="), F.col("v.observed")).alias("explanation"),
-        )
-        return verdicts, violations
-
-    return CheckSpec("stats", part_aggs=part_aggs, part_verdicts=part_verdicts)
+    judged = []
+    for c, exps in expectations.items():
+        for field, op, thr in exps:
+            if field == "null_rate":
+                observed = 1.0 - F.col(f"{c}__nn") / F.col("n_rows")
+            else:
+                observed = F.col(f"{c}__{field}")
+            ok = (observed <= thr) if op == "<=" else (observed >= thr)
+            shown = F.round(observed, 6).cast("string")
+            judged.append(PartRule(
+                f"R017_stats_{c}_{field}",
+                F.coalesce(ok, F.lit(True)),  # empty partitions pass
+                shown, f"{c}.{field} {op} {thr}", c, severity_for_rate(F.lit(0.01)),
+                F.concat(F.lit("partition stat out of bounds: observed="), shown),
+            ))
+    return CheckSpec("stats", part_aggs=part_aggs, judged=tuple(judged))
 
 
 def stats_check(

@@ -47,11 +47,12 @@ from ..functions.audio import (
     decode_clip_ex,
 )
 from .base import (
+    CheckPlan,
     CheckResult,
     RunContext,
+    check_result,
     ensure_part_id,
-    part_row_counts,
-    verdicts_from_violations,
+    spark_round_str,
 )
 
 R_DECODE = "R060_decode"
@@ -605,13 +606,19 @@ def histogram_partials(feats: DataFrame, ctx: RunContext,
 _ALPHA = 0.5
 
 
-def drift_scores_local(hist_rows: list, ctx: RunContext) -> list[tuple]:
+def drift_scores_local(hist_rows: list, ctx: RunContext,
+                       baseline: list | None = None) -> list[tuple]:
     """Driver-side PSI/KS on collected histogram rows [(part, feature, bin,
     cnt)] — numpy, vectorized per (part, feature). SURVEY.md §4.4: PSI/KS
     belong on the *collected tiny histogram tables* once they fit the
     driver (parts × features × bins; ≈23k rows at P=64, ≈1.5M at P=4096).
     Returns [(part_id, feature, psi, ks)]. Exact same math as the
     Spark-side `drift_scores` (Laplace-smoothed PSI, fixed-bin KS).
+
+    ``baseline``: stored [(feature, bin, cnt)] rows (features × bins,
+    collected once) to score against instead of the sum over the parts;
+    as in `drift_scores`, each feature is scored over the baseline's bins
+    and histogram bins outside them are dropped.
     """
     import collections
 
@@ -622,16 +629,25 @@ def drift_scores_local(hist_rows: list, ctx: RunContext) -> list[tuple]:
         by_feat[feature][(part, b)] = cnt
         bins_by_feat[feature].add(b)
         parts.add(part)
+    base_cnt: dict[str, dict] | None = None
+    if baseline is not None:
+        base_cnt = collections.defaultdict(dict)
+        for feature, b, cnt in baseline:
+            base_cnt[feature][b] = base_cnt[feature].get(b, 0) + cnt
+    plist = sorted(parts)
+    pidx = {p: i for i, p in enumerate(plist)}
     out = []
-    for feature, cells in by_feat.items():
-        bins = sorted(bins_by_feat[feature])
+    for feature in (by_feat if base_cnt is None else base_cnt):
+        bins = sorted(bins_by_feat[feature] if base_cnt is None else base_cnt[feature])
         bidx = {b: i for i, b in enumerate(bins)}
-        plist = sorted(parts)
-        pidx = {p: i for i, p in enumerate(plist)}
         mat = np.zeros((len(plist), len(bins)))
-        for (part, b), cnt in cells.items():
-            mat[pidx[part], bidx[b]] = cnt
-        base = mat.sum(axis=0)
+        for (part, b), cnt in by_feat.get(feature, {}).items():
+            if b in bidx:
+                mat[pidx[part], bidx[b]] = cnt
+        if base_cnt is None:
+            base = mat.sum(axis=0)
+        else:
+            base = np.array([base_cnt[feature][b] for b in bins], dtype=float)
         nb = len(bins)
         p = (mat + _ALPHA) / (mat.sum(axis=1, keepdims=True) + _ALPHA * nb)
         q = (base + _ALPHA) / (base.sum() + _ALPHA * nb)
@@ -651,9 +667,9 @@ def drift_scores(hist: DataFrame, ctx: RunContext,
     `baseline` defaults to the global histogram (sum over partitions) — a
     self-baseline in the spirit of the reference's fit-on-normal pass
     (`src/detection/pipeline.py:124-134`); pass a stored baseline table
-    (feature, bin, cnt) for cross-run drift. For the default self-baseline
-    at modest partition counts, `drift_check` uses `drift_scores_local`
-    (one collect of the tiny histogram) instead of this three-shuffle plan.
+    (feature, bin, cnt) for cross-run drift. Up to ``LOCAL_PART_CAP``
+    partitions `drift_check` uses `drift_scores_local` (one collect of the
+    tiny histogram) instead of this three-shuffle plan.
     """
     part_col = ctx.part_col
     if baseline is None:
@@ -731,7 +747,12 @@ def calibrate_threshold(scored: DataFrame, score_col: str, label_col: str,
     return float(best["threshold"]), float(best["objective"])
 
 
-def drift_check(
+# above this many partitions the histogram (parts × features × bins rows)
+# is scored in Spark (`drift_scores`) instead of collected to the driver
+LOCAL_PART_CAP = 8192
+
+
+def drift_plan(
     clips: DataFrame,
     ctx: RunContext,
     psi_threshold: float = 0.2,
@@ -746,9 +767,11 @@ def drift_check(
     wps_range: tuple[float, float] = (0.4, 8.0),
     min_words_fast: int = 3,
     min_speech_slow_s: float = 2.0,
-) -> CheckResult:
-    """Full drift + decode check. Returns verdicts per (part, rule) for
-    R050/R051 (drift) and violations for R060/R061 (decode/duration).
+) -> CheckPlan:
+    """Full drift + decode check, as a :class:`CheckPlan` for the shared
+    verdict assembly (``drift_check`` runs it on its own). Verdicts per
+    (part, rule) for R050/R051 (drift) and violations for R060/R061
+    (decode/duration).
 
     ``transcripts`` (clip_id, transcript) switches on R067_speech_rate: the
     decoded-PCM twin of the metadata chars/sec row rule (R018). The decode
@@ -769,7 +792,13 @@ def drift_check(
     One heavy pass: ``decode_stats`` reads bytes exactly once and emits only
     tiny rows (histogram partials, sparse violations, row counters), so the
     persist below caches kilobytes regardless of input size — the per-clip
-    feature table never exists (it couldn't, at 10^12 rows).
+    feature table never exists (it couldn't, at 10^12 rows). ONE collect
+    brings the merged histogram and the per-part counters to the driver,
+    which scores PSI/KS (`drift_scores_local`, against ``baseline`` when
+    given) and judges R050/R051/R062 there; the sparse decode violations
+    stay a Spark plan over the cached pass. Above ``LOCAL_PART_CAP``
+    partitions the scores come from the Spark `drift_scores` plan instead,
+    collected as per-part maxima into the same assembly.
 
     When ``payload_path`` names the parquet table backing ``clips`` (pure
     scan, no transformations), the heavy pass runs as the Python-native
@@ -787,21 +816,22 @@ def drift_check(
                              noise=noise, speech=speech)
     stats.persist()
     try:
-        hist = (
-            stats.filter(F.col("kind") == "h")
-            .groupBy(F.col("part_id").alias(ctx.part_col), "feature", "bin")
-            .agg(F.sum("cnt").alias("cnt"))
+        local = ctx.num_parts <= LOCAL_PART_CAP
+        small = (
+            stats.filter(F.col("kind").isin(["c", "h"] if local else ["c"]))
+            .groupBy("kind", "part_id", "feature", "bin")
+            .agg(F.sum("cnt")).collect()
         )
-        part_counts = (
-            stats.filter((F.col("kind") == "c") & (F.col("feature") == "rows"))
-            .groupBy(F.col("part_id").alias(ctx.part_col))
-            .agg(F.sum("cnt").alias("n_rows"))
-        )
-        fake_counts = (
-            stats.filter((F.col("kind") == "c") & (F.col("feature") == "fake_decodes"))
-            .groupBy(F.col("part_id").alias(ctx.part_col))
-            .agg(F.sum("cnt").alias("n_fake"))
-        )
+        n_rows: dict[int, int] = {}
+        n_fake: dict[int, int] = {}
+        hist_rows = []
+        for kind, part, feature, b, cnt in small:
+            if kind == "h":
+                hist_rows.append((part, feature, b, cnt))
+            elif feature == "rows":
+                n_rows[part] = cnt
+            elif feature == "fake_decodes":
+                n_fake[part] = cnt
         is_decode = F.col("feature") == R_DECODE
         is_codec = F.col("feature") == R_CODEC
         is_container = F.col("feature") == R_CONTAINER
@@ -844,62 +874,56 @@ def drift_check(
             ).otherwise(F.lit("decoded duration differs from declared dur_ms")).alias("explanation"),
         )
 
-        if baseline is None and ctx.num_parts <= 8192:
-            # tiny-histogram fast path (SURVEY.md §4.4): one collect of
-            # parts × features × bins rows, PSI/KS in numpy — replaces a
-            # three-shuffle window plan with one job
-            rows = [tuple(r) for r in hist.collect()]
-            scored = drift_scores_local(rows, ctx)
-            best: dict[int, tuple[float, float, str]] = {}
-            for part, feature, psi, ks in scored:
+        # per part: (max psi, max ks, feature of the max psi)
+        best: dict[int, tuple[float, float, str]] = {}
+        if local:
+            # tiny-histogram fast path (SURVEY.md §4.4): PSI/KS in numpy on
+            # parts × features × bins rows — no three-shuffle window plan
+            base_rows = None if baseline is None else [
+                tuple(r) for r in baseline.select("feature", "bin", "cnt").collect()]
+            for part, feature, psi, ks in drift_scores_local(hist_rows, ctx, base_rows):
                 cur = best.get(part)
                 max_psi = max(psi, cur[0]) if cur else psi
                 max_ks = max(ks, cur[1]) if cur else ks
                 worst = feature if (cur is None or psi >= cur[0]) else cur[2]
                 best[part] = (max_psi, max_ks, worst)
-            spark = clips.sparkSession
-            per_part = spark.createDataFrame(
-                [(p, v[0], v[1], v[2]) for p, v in best.items()],
-                f"{ctx.part_col} int, max_psi double, max_ks double, worst_feature string",
-            )
         else:
-            scores = drift_scores(hist, ctx, baseline)
-            per_part = scores.groupBy(ctx.part_col).agg(
-                F.max("psi").alias("max_psi"),
-                F.max("ks").alias("max_ks"),
-                F.max_by("feature", "psi").alias("worst_feature"),
+            hist = (
+                stats.filter(F.col("kind") == "h")
+                .groupBy(F.col("part_id").alias(ctx.part_col), "feature", "bin")
+                .agg(F.sum("cnt").alias("cnt"))
             )
-        base = part_counts.join(per_part, ctx.part_col, "left")
-        verdicts = None
-        for rule, col, thr in ((R_PSI, "max_psi", psi_threshold), (R_KS, "max_ks", ks_threshold)):
-            v = base.select(
-                F.lit(ctx.run_id).alias("run_id"),
-                F.col(ctx.part_col).cast("int").alias("part_id"),
-                F.lit(rule).alias("rule_id"),
-                F.coalesce(F.col(col) <= thr, F.lit(True)).alias("passed"),
-                F.col("n_rows").cast("long").alias("n_rows"),
-                F.when(F.coalesce(F.col(col) <= thr, F.lit(True)), 0).otherwise(1).cast("long").alias("n_violations"),
-                F.concat(F.lit(f"{col}="), F.round(F.col(col), 4), F.lit(" feature="), F.col("worst_feature")).alias("observed"),
-                F.lit(f"{col} <= {thr}").alias("expected"),
-            )
-            verdicts = v if verdicts is None else verdicts.unionByName(v)
+            for part, *v in drift_scores(hist, ctx, baseline).groupBy(ctx.part_col).agg(
+                F.max("psi"), F.max("ks"), F.max_by("feature", "psi"),
+            ).collect():
+                best[part] = tuple(v)
 
-        drift_viols = base.filter(
-            (F.col("max_psi") > psi_threshold) | (F.col("max_ks") > ks_threshold)
-        ).select(
-            F.lit(ctx.run_id).alias("run_id"),
-            F.col(ctx.part_col).cast("int").alias("part_id"),
-            F.when(F.col("max_psi") > psi_threshold, F.lit(R_PSI)).otherwise(F.lit(R_KS)).alias("rule_id"),
-            F.lit(None).cast("string").alias("clip_id"),
-            F.col("worst_feature").alias("column"),
-            F.concat(F.lit("psi="), F.round("max_psi", 4), F.lit(" ks="), F.round("max_ks", 4)).alias("observed"),
-            F.lit(f"psi<={psi_threshold} ks<={ks_threshold}").alias("expected"),
-            F.lit("High").alias("severity"),
-            F.concat(
-                F.lit("partition feature distribution drifted from baseline ("),
-                F.col("worst_feature"), F.lit(")"),
-            ).alias("explanation"),
-        )
+        verdicts, violations = [], []
+        for part in sorted(n_rows):
+            nr = n_rows[part]
+            psi, ks, worst = best.get(part, (None, None, None))
+            for rule, name, v, thr in ((R_PSI, "max_psi", psi, psi_threshold),
+                                       (R_KS, "max_ks", ks, ks_threshold)):
+                ok = v is None or v <= thr  # a part with no histogram passes
+                verdicts.append((
+                    ctx.run_id, part, rule, ok, nr, 0 if ok else 1,
+                    None if v is None else f"{name}={spark_round_str(v, 4)} feature={worst}",
+                    f"{name} <= {thr}", "drift"))
+            if psi is not None and (psi > psi_threshold or ks > ks_threshold):
+                violations.append((
+                    ctx.run_id, part, R_PSI if psi > psi_threshold else R_KS, None,
+                    worst, f"psi={spark_round_str(psi, 4)} ks={spark_round_str(ks, 4)}",
+                    f"psi<={psi_threshold} ks<={ks_threshold}", "High",
+                    f"partition feature distribution drifted from baseline ({worst})",
+                    "drift"))
+            if not strict_codecs:
+                # lenient mode: fake decodes pass but are REPORTED per
+                # partition in the R062 verdict row — the no-silent-fake
+                # contract
+                verdicts.append((
+                    ctx.run_id, part, R_CODEC, True, nr, 0,
+                    f"n_fake_decoded={n_fake.get(part, 0)}",
+                    "real decoder registered for every declared codec", "drift"))
         if speech:
             min_wps, max_wps = wps_range
             t = F.trim(F.col("transcript"))
@@ -939,35 +963,18 @@ def drift_check(
                         R_BANDWIDTH, R_CONTAINER] \
             + ([R_CODEC] if strict_codecs else []) \
             + ([R_SPEECH_RATE] if speech else [])
-        decode_verdicts = verdicts_from_violations(
-            viol_rows.withColumnRenamed("part_id", ctx.part_col),
-            part_counts,
-            ctx,
-            decode_rules,
-        )
-        verdicts = verdicts.unionByName(decode_verdicts)
-        if not strict_codecs:
-            # lenient mode: fake decodes pass but are REPORTED per partition
-            # in the R062 verdict row — the no-silent-fake contract
-            codec_verdicts = part_counts.join(fake_counts, ctx.part_col, "left").select(
-                F.lit(ctx.run_id).alias("run_id"),
-                F.col(ctx.part_col).cast("int").alias("part_id"),
-                F.lit(R_CODEC).alias("rule_id"),
-                F.lit(True).alias("passed"),
-                F.col("n_rows").cast("long").alias("n_rows"),
-                F.lit(0).cast("long").alias("n_violations"),
-                F.concat(
-                    F.lit("n_fake_decoded="), F.coalesce(F.col("n_fake"), F.lit(0))
-                ).alias("observed"),
-                F.lit("real decoder registered for every declared codec").alias("expected"),
-            )
-            verdicts = verdicts.unionByName(codec_verdicts)
-        violations = viol_rows.unionByName(drift_viols)
-        # verdict/violation plans stay LAZY over the cached stats pass — the
-        # caller's batched write/collect actions materialize them (and must
-        # call .release() after). Eager localCheckpoints here would cost two
-        # extra jobs per run, pure fixed cost against scaling efficiency.
-        return CheckResult("drift", verdicts, violations, resources=[stats])
+        return CheckPlan(
+            ("drift",), rules=[("drift", r) for r in decode_rules],
+            sparse=viol_rows.withColumn("check_id", F.lit("drift")),
+            n_rows=n_rows, verdicts=verdicts, violations=violations,
+            resources=[stats])
     except Exception:
         stats.unpersist()
         raise
+
+
+def drift_check(clips: DataFrame, ctx: RunContext, *args, **kwargs) -> CheckResult:
+    """:func:`drift_plan` (same arguments) executed and assembled on its
+    own (``base.check_result``). ``resources[0]`` is the cached decode
+    pass; ``release()`` unpersists it."""
+    return check_result(clips.sparkSession, drift_plan(clips, ctx, *args, **kwargs), ctx)

@@ -2,35 +2,47 @@
 
 row_rules, stats, frequency, transcript_quality, uniqueness and
 referential all score the same input slice per partition. Built one by
-one, each would pay its own per-part row count, violation count and
-verdict grid join over that slice (stages and driver planning that do not
-shrink with cores). Here they compile into ONE plan — the batch of
-group-by aggregates sharing a key of *LMFAO* (VLDB 2020):
+one, each would pay its own per-part row count and violation count over
+that slice (stages and driver planning that do not shrink with cores).
+Here they compile into ONE plan — the batch of group-by aggregates
+sharing a key of *LMFAO* (VLDB 2020):
 
 - every row-level predicate (row rules, frequency's allowed values,
   transcript quality) is one struct of a single
   ``explode(array_compact(array(struct…)))`` projection: N rules, one
   scan, no UDFs;
 - one ``groupBy(part_id)`` gives the row counts and the stats partials;
-- one (check, rule) × partition grid is left-joined to ONE violation
-  count over the union of the sparse violations.
+  the stats thresholds are a projection of it (``PartRule``);
+- the sparse violations of all checks are one union, counted per
+  (check, part, rule) in the runner's one small collect; the
+  (check, rule) × partition verdict grid is filled on the driver
+  (``base.assemble``) — no grid join.
 
 Uniqueness and referential keep their own violation plans (a key shuffle,
 a join); only their counting and verdict assembly is shared. Each check's
-public function is :func:`run_checks` called with that one check, so a
-check runs the same plan alone or fused.
+public function is :func:`run_checks` called with that one check and
+executed like a suite wave, so a check runs the same plan and the same
+assembly alone or fused.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import reduce
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .base import CheckResult, RunContext, ensure_part_id, verdict_grid
+from .base import (
+    CheckPlan,
+    CheckResult,
+    PartRule,
+    RunContext,
+    check_result,
+    ensure_part_id,
+    part_frame,
+    union_all,
+)
 
 
 @dataclass(frozen=True)
@@ -64,9 +76,9 @@ class CheckSpec:
     derived: tuple[tuple[str, Column], ...] = ()
     # partial aggregates added to the one groupBy(part_id)
     part_aggs: tuple[Column, ...] = ()
-    # (per-part aggregate, ctx) → (verdicts, violations) for rules judged
-    # on partition statistics rather than counted violations
-    part_verdicts: Callable[[DataFrame, RunContext], tuple[DataFrame, DataFrame]] | None = None
+    # rules judged on those per-part aggregates rather than counted
+    # violations
+    judged: tuple[PartRule, ...] = ()
     # (input, ctx) → VIOLATION_SCHEMA rows from the check's own plan
     sparse: Callable[[DataFrame, RunContext], DataFrame] | None = None
 
@@ -112,17 +124,13 @@ def row_violations(df: DataFrame, rules: list[tuple[str, RowRule]],
     return out.select(F.lit(ctx.run_id).alias("run_id"), *_VIOLATION_COLS[1:], "check_id")
 
 
-def _union(frames: list[DataFrame]) -> DataFrame:
-    return reduce(DataFrame.unionByName, frames)
-
-
-def run_checks(df: DataFrame, ctx: RunContext, specs: list[CheckSpec]) -> CheckResult:
-    """Build the verdict and violation plans of ``specs`` as one plan over
-    ``df``. Both frames carry a ``check_id`` column naming the check each
-    row belongs to. Raises ``ValueError`` for a check with no rules: its
-    grid would otherwise drop every verdict silently."""
+def run_checks(df: DataFrame, ctx: RunContext, specs: list[CheckSpec]) -> CheckPlan:
+    """Build ``specs`` as one plan over ``df``: the union of their sparse
+    violations and one per-part frame (row counts, judged rules), both
+    tagged with ``check_id``. Raises ``ValueError`` for a check with no
+    rules: its grid would otherwise drop every verdict silently."""
     for s in specs:
-        if not s.rule_ids and s.part_verdicts is None:
+        if not s.rule_ids and not s.judged:
             raise ValueError(f"check {s.check_id!r} has no rules")
     df = ensure_part_id(df, ctx)
 
@@ -137,27 +145,16 @@ def run_checks(df: DataFrame, ctx: RunContext, specs: list[CheckSpec]) -> CheckR
 
     per_part = df.groupBy(ctx.part_col).agg(
         F.count(F.lit(1)).alias("n_rows"), *[a for s in specs for a in s.part_aggs])
-    verdicts, violations = [], list(sparse)
-    grid_rules = [(s.check_id, r) for s in specs for r in s.rule_ids]
-    if grid_rules:
-        vcounts = (
-            _union(sparse).filter(F.col("part_id").isNotNull())
-            .groupBy("check_id", "part_id", "rule_id")
-            .agg(F.count(F.lit(1)).alias("n_violations"))
-        )
-        verdicts.append(verdict_grid(per_part, vcounts, ctx, grid_rules))
-    for s in specs:
-        if s.part_verdicts is not None:
-            v, l = s.part_verdicts(per_part, ctx)
-            verdicts.append(v.withColumn("check_id", F.lit(s.check_id)))
-            violations.append(l.withColumn("check_id", F.lit(s.check_id)))
-    return CheckResult("+".join(s.check_id for s in specs),
-                       _union(verdicts), _union(violations))
+    return CheckPlan(
+        tuple(s.check_id for s in specs),
+        rules=[(s.check_id, r) for s in specs for r in s.rule_ids],
+        sparse=union_all(sparse) if sparse else None,
+        part_frame=part_frame(per_part, ctx,
+                              [(s.check_id, j) for s in specs for j in s.judged]),
+    )
 
 
 def one_check(df: DataFrame, ctx: RunContext, spec: CheckSpec) -> CheckResult:
-    """:func:`run_checks` for a single check, without the ``check_id``
-    column."""
-    res = run_checks(df, ctx, [spec])
-    return CheckResult(spec.check_id, res.verdicts.drop("check_id"),
-                       res.violations.drop("check_id"))
+    """:func:`run_checks` for a single check, executed and assembled like
+    a suite wave (``base.check_result``)."""
+    return check_result(df.sparkSession, run_checks(df, ctx, [spec]), ctx)

@@ -12,8 +12,8 @@ Join strategy is explicit (north_rule): ``strategy='auto'`` broadcasts the
 transcript side when its *estimated* size fits `autoBroadcastJoinThreshold`
 (or when forced via 'broadcast'); otherwise leaves it to sort-merge + AQE.
 At 10^12 clips the transcripts dim is same-order ⇒ sort-merge; both sides
-shuffle on clip_id once, and all three rules reuse that single co-partition
-via a full_outer join (one shuffle, not three).
+shuffle on clip_id once, and all three rules read that single
+co-partition: one full_outer join, one projection (one join, not three).
 """
 
 from __future__ import annotations
@@ -54,53 +54,48 @@ def referential_spec(transcripts: DataFrame, strategy: str = "auto") -> CheckSpe
         # autoBroadcastJoinThreshold, sort-merge otherwise (AQE can still
         # convert at runtime).
 
-        # ONE full_outer join on the key serves all three rules (single shuffle).
+        # ONE full_outer join on the key serves all three rules (single
+        # shuffle), and ONE projection turns each joined row into its
+        # violation (row_violations' array → compact → explode): filtered
+        # branches of a union would be planned as a join each.
         j = left.join(right, left["clip_id"] == right["t_clip_id"], "full_outer")
 
-        missing = j.filter(F.col("t_clip_id").isNull()).select(
-            F.col("clip_id"),
-            F.col(ctx.part_col),
-            F.lit(R_MISSING).alias("rule_id"),
-            F.lit(None).cast("string").alias("observed"),
-            F.lit("transcript row exists").alias("expected"),
-            F.lit("Medium").alias("severity"),
-            F.lit("clip has no transcript row").alias("explanation"),
-        )
-        orphan = j.filter(F.col("clip_id").isNull()).select(
-            F.col("t_clip_id").alias("clip_id"),
-            F.col("_t_part").alias(ctx.part_col),
-            F.lit(R_ORPHAN).alias("rule_id"),
-            F.col("t_clip_id").cast("string").alias("observed"),
-            F.lit("clip row exists").alias("expected"),
-            F.lit("Medium").alias("severity"),
-            F.lit("transcript row references unknown clip").alias("explanation"),
-        )
-        mismatch = j.filter(
-            F.col("clip_id").isNotNull()
-            & F.col("t_clip_id").isNotNull()
-            & ~F.col("_t_clip").eqNullSafe(F.col("_t_side"))
-        ).select(
-            F.col("clip_id"),
-            F.col(ctx.part_col),
-            F.lit(R_MISMATCH).alias("rule_id"),
-            F.substring(F.coalesce(F.col("_t_side"), F.lit("∅")), 1, 64).alias("observed"),
-            F.substring(F.coalesce(F.col("_t_clip"), F.lit("∅")), 1, 64).alias("expected"),
-            F.lit("High").alias("severity"),
-            F.lit("transcript text differs between tables").alias("explanation"),
-        )
-        return (
-            missing.unionByName(orphan).unionByName(mismatch)
-            .select(
-                F.lit(ctx.run_id).alias("run_id"),
-                F.col(ctx.part_col).cast("int").alias("part_id"),
-                "rule_id",
-                "clip_id",
-                F.lit("transcript").alias("column"),
-                "observed",
-                "expected",
-                "severity",
-                "explanation",
-            )
+        def hit(cond, clip_id, part, rule_id, observed, expected, severity, explanation):
+            return F.when(cond, F.struct(
+                clip_id.alias("clip_id"),
+                part.cast("int").alias("part_id"),
+                F.lit(rule_id).alias("rule_id"),
+                observed.cast("string").alias("observed"),
+                expected.cast("string").alias("expected"),
+                F.lit(severity).alias("severity"),
+                F.lit(explanation).alias("explanation"),
+            ))
+
+        clip, t_clip = F.col("clip_id"), F.col("t_clip_id")
+        hits = F.array_compact(F.array(
+            hit(t_clip.isNull(), clip, F.col(ctx.part_col), R_MISSING,
+                F.lit(None), F.lit("transcript row exists"), "Medium",
+                "clip has no transcript row"),
+            hit(clip.isNull(), t_clip, F.col("_t_part"), R_ORPHAN, t_clip,
+                F.lit("clip row exists"), "Medium",
+                "transcript row references unknown clip"),
+            hit(clip.isNotNull() & t_clip.isNotNull()
+                & ~F.col("_t_clip").eqNullSafe(F.col("_t_side")),
+                clip, F.col(ctx.part_col), R_MISMATCH,
+                F.substring(F.coalesce(F.col("_t_side"), F.lit("∅")), 1, 64),
+                F.substring(F.coalesce(F.col("_t_clip"), F.lit("∅")), 1, 64),
+                "High", "transcript text differs between tables"),
+        ))
+        return j.select(F.explode(hits).alias("v")).select(
+            F.lit(ctx.run_id).alias("run_id"),
+            "v.part_id",
+            "v.rule_id",
+            "v.clip_id",
+            F.lit("transcript").alias("column"),
+            "v.observed",
+            "v.expected",
+            "v.severity",
+            "v.explanation",
         )
 
     return CheckSpec("referential", rule_ids=(R_MISSING, R_ORPHAN, R_MISMATCH),

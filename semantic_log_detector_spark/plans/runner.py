@@ -25,9 +25,9 @@ from dataclasses import asdict, dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..checks.base import CheckResult, RunContext, ensure_part_id
+from ..checks.base import VIOLATION_COLS, CheckPlan, RunContext, ensure_part_id, execute
 from ..checks.column_stats import DEFAULT_EXPECTATIONS, stats_spec
-from ..checks.drift import drift_check
+from ..checks.drift import drift_plan
 from ..checks.frequency import frequency_spec
 from ..checks.metadata import run_checks
 from ..checks.referential import referential_spec
@@ -38,10 +38,11 @@ from ..checks.uniqueness import uniqueness_spec
 from ..schema import CLIPS_SCHEMA
 from . import ledger as ledger_mod
 
-# The metadata checks' one-check entry points. run_suite does not call
-# them (it builds the shared plan); they stay importable from this module
-# because perfbench's traced run wraps them here by name.
+# The checks' one-check entry points. run_suite does not call them (it
+# builds the shared plans); they stay importable from this module because
+# perfbench's traced run wraps them here by name.
 from ..checks.column_stats import stats_check  # noqa: F401
+from ..checks.drift import drift_check  # noqa: F401
 from ..checks.frequency import frequency_check  # noqa: F401
 from ..checks.referential import referential_check  # noqa: F401
 from ..checks.row_rules import run_row_rules  # noqa: F401
@@ -121,10 +122,6 @@ class RunResult:
     # populated by validate_increment(dup_check=True): counts + sink path of
     # the increment's cross-corpus content-duplicate pairs (ann_index)
     dup_check: dict | None = None
-
-
-_VERDICT_COLS = ("run_id", "part_id", "rule_id", "passed", "n_rows",
-                 "n_violations", "observed", "expected")
 
 
 def _wave_parts(cfg: SuiteConfig, wave: int) -> list[int]:
@@ -240,16 +237,19 @@ def run_suite(
 
         tr_part = F.pmod(F.xxhash64("clip_id"), F.lit(cfg.num_parts)).cast("int")
 
-        # (checks, their pending parts, result, build seconds) per build
-        built: list[tuple[tuple[str, ...], list[int], CheckResult, float]] = []
+        # (checks, their pending parts, plan, build seconds) per build
+        built: list[tuple[tuple[str, ...], list[int], CheckPlan, float]] = []
         drift_future = None
         try:
             # Build every pending check's (lazy) plan first, then execute the
-            # whole wave with TWO Spark actions over one persisted union of
-            # every verdict and violation row: a collect of the verdict rows
-            # (at most parts × rules; the driver writes them and derives the
-            # ledger from them) and one violations write. Per-check actions
-            # are pure fixed scheduling cost that does not shrink with cores.
+            # whole wave with TWO Spark actions (checks/base.py::execute):
+            # one collect of a small union — violation counts over the
+            # persisted union of every sparse violation, per-part row
+            # counts, part-level verdict rows — from which the driver
+            # assembles every verdict (at most parts × rules; it writes
+            # them and derives the ledger from them), and one write of the
+            # persisted violations. Per-check actions are pure fixed
+            # scheduling cost that does not shrink with cores.
             #
             # The metadata checks compile into ONE shared plan per distinct
             # pending part set (checks/metadata.py): one build for all of
@@ -257,7 +257,8 @@ def run_suite(
             # different parts.
             #
             # The drift build is EAGER (its decode pass materializes at
-            # build time for the tiny-histogram collect), so it runs in a
+            # build time for the histogram and counter collect, and its
+            # drift verdicts are judged on the driver), so it runs in a
             # driver thread while the main thread builds the metadata plan
             # (guide §2.6: overlap independent work — the cluster is busy
             # decoding while the driver does pure py4j plan construction).
@@ -283,9 +284,9 @@ def run_suite(
                     return transcript_quality_spec()
                 raise ValueError(f"unknown check {check!r}")
 
-            def build_drift(pend: list[int]) -> CheckResult:
+            def build_drift(pend: list[int]) -> CheckPlan:
                 sub_full = clips.filter(F.col(ctx.part_col).isin(pend))
-                res = drift_check(sub_full, ctx,
+                return drift_plan(sub_full, ctx,
                                   psi_threshold=cfg.psi_threshold,
                                   ks_threshold=cfg.ks_threshold,
                                   strict_codecs=cfg.strict_codecs,
@@ -298,10 +299,6 @@ def run_suite(
                                       if cfg.speech_rate and transcripts is not None
                                       else None),
                                   wps_range=cfg.wps_range)
-                return CheckResult(
-                    "drift", res.verdicts.withColumn("check_id", F.lit("drift")),
-                    res.violations.withColumn("check_id", F.lit("drift")),
-                    resources=res.resources)
 
             drift_pend = pending_by_check.get("drift", [])
             t_drift = 0.0
@@ -326,47 +323,18 @@ def run_suite(
             for pend_key, checks in groups.items():
                 pend = list(pend_key)
                 t0 = time.time()
-                res = run_checks(wave_meta.filter(F.col(ctx.part_col).isin(pend)), ctx,
-                                 [metadata_spec(c, pend) for c in checks])
-                built.append((tuple(checks), pend, res, time.time() - t0))
+                plan = run_checks(wave_meta.filter(F.col(ctx.part_col).isin(pend)), ctx,
+                                  [metadata_spec(c, pend) for c in checks])
+                built.append((tuple(checks), pend, plan, time.time() - t0))
             if drift_future is not None:
-                res = drift_future.result()
+                plan = drift_future.result()
                 drift_future = None
-                built.append((("drift",), drift_pend, res, time.time() - t_drift))
+                built.append((("drift",), drift_pend, plan, time.time() - t_drift))
 
             if built:
-                # Pad verdicts and violations to one superset schema and
-                # union EVERYTHING into a single persisted frame: every
-                # check's verdict AND violation subtree executes exactly
-                # once, inside one parallel job (independent map stages
-                # overlap).
-                VKIND, LKIND = "r", "v"
-                combined = None
-                for _, _, res, _ in built:
-                    v = res.verdicts.select(
-                        "run_id", "part_id", "rule_id", "passed", "n_rows",
-                        "n_violations", "observed", "expected",
-                        F.lit(None).cast("string").alias("clip_id"),
-                        F.lit(None).cast("string").alias("column"),
-                        F.lit(None).cast("string").alias("severity"),
-                        F.lit(None).cast("string").alias("explanation"),
-                        F.lit(VKIND).alias("__kind"),
-                        F.col("check_id").alias("__check"),
-                    )
-                    l = res.violations.select(
-                        "run_id", "part_id", "rule_id",
-                        F.lit(None).cast("boolean").alias("passed"),
-                        F.lit(None).cast("long").alias("n_rows"),
-                        F.lit(None).cast("long").alias("n_violations"),
-                        "observed", "expected", "clip_id", "column",
-                        "severity", "explanation",
-                        F.lit(LKIND).alias("__kind"),
-                        F.col("check_id").alias("__check"),
-                    )
-                    both = v.unionByName(l)
-                    combined = both if combined is None else combined.unionByName(both)
                 aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
                 sp_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
+                sparse = None
                 try:
                     if not cfg.adaptive_wave_exec:
                         spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -374,28 +342,29 @@ def run_suite(
                         spark.conf.set("spark.sql.shuffle.partitions",
                                        str(cfg.wave_shuffle_partitions))
                     t0 = time.time()
-                    combined.persist()
-                    verdict_rows = (
-                        combined.filter(F.col("__kind") == VKIND)
-                        .select("__check", *_VERDICT_COLS)
-                        .collect()
-                    )
+                    verdict_rows, local_viols, sparse = execute(
+                        [plan for _, _, plan, _ in built], ctx)
                     t1 = time.time()
                     # verdicts are ≤ parts×rules rows: sunk on the driver as
-                    # one file; violations are sparse → a few files (not
-                    # 100s of near-empty ones), written from the persisted
-                    # frame — no recompute
+                    # one file, with the violations judged on the driver
                     ledger_mod.write_local_rows(
-                        f"{out_dir}/verdicts", [tuple(r)[1:] for r in verdict_rows],
+                        f"{out_dir}/verdicts", [r[:-1] for r in verdict_rows],
                         "verdicts")
+                    if local_viols:
+                        ledger_mod.write_local_rows(
+                            f"{out_dir}/violations", [r[:-1] for r in local_viols],
+                            "violations")
                     t2 = time.time()
-                    combined.filter(F.col("__kind") == LKIND).select(
-                        "run_id", "part_id", "rule_id", "clip_id", "column",
-                        "observed", "expected", "severity", "explanation",
-                    ).coalesce(8).write.mode("append").parquet(f"{out_dir}/violations")
+                    # sparse violations → a few files (not 100s of
+                    # near-empty ones), written from the persisted frame
+                    # the counts were taken over — no recompute
+                    if sparse is not None:
+                        sparse.select(*VIOLATION_COLS).coalesce(8).write.mode(
+                            "append").parquet(f"{out_dir}/violations")
                     t3 = time.time()
-                    combined.unpersist()
                 finally:
+                    if sparse is not None:
+                        sparse.unpersist()
                     spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
                     spark.conf.set("spark.sql.shuffle.partitions", sp_before)
                 tm = result.timings
@@ -406,10 +375,9 @@ def run_suite(
                 # ledger part stats per (check, part): max rows, summed
                 # violations over the check's verdict rows
                 part_stats: dict[tuple[str, int], tuple[int, int]] = {}
-                for r in verdict_rows:
-                    key = (r["__check"], r["part_id"])
-                    nr, nv = part_stats.get(key, (0, 0))
-                    part_stats[key] = (max(nr, r["n_rows"]), nv + r["n_violations"])
+                for _, part, _, _, n_rows, n_viol, _, _, check in verdict_rows:
+                    nr, nv = part_stats.get((check, part), (0, 0))
+                    part_stats[(check, part)] = (max(nr, n_rows), nv + n_viol)
                 by_check = {c: (pend, build_s)
                             for checks, pend, _, build_s in built for c in checks}
                 for check in wave_checks:
@@ -431,11 +399,13 @@ def run_suite(
                 # a metadata build raised while drift was still building:
                 # await it so its persisted resources don't leak
                 try:
-                    drift_future.result().release()
+                    for df in drift_future.result().resources:
+                        df.unpersist()
                 except Exception:
                     pass
-            for _, _, res, _ in built:
-                res.release()
+            for _, _, plan, _ in built:
+                for df in plan.resources:
+                    df.unpersist()
             wave_meta.unpersist()
         result.waves_run += 1
 

@@ -63,6 +63,26 @@ def _list_parquet_files(path: str) -> list[str]:
 _DISTRIBUTED_LISTING_THRESHOLD = 64
 
 
+def _is_bare_parquet_scan(plan) -> bool:
+    """True when the optimized logical ``plan`` (a py4j handle) is nothing
+    but attribute-only Project nodes over one parquet relation. Walked
+    node by node through py4j, not parsed from the plan's text: Spark
+    truncates that at ``spark.sql.debug.maxToStringFields``, so a computed
+    column of a wide table hides behind "... N more fields"."""
+    node = plan
+    while node.getClass().getSimpleName() == "Project":
+        exprs = node.projectList()
+        if any(exprs.apply(i).getClass().getSimpleName() != "AttributeReference"
+               for i in range(exprs.size())):
+            return False
+        node = node.child()
+    if node.getClass().getSimpleName() != "LogicalRelation":
+        return False
+    rel = node.relation()
+    return (rel.getClass().getSimpleName() == "HadoopFsRelation"
+            and rel.fileFormat().getClass().getSimpleName() == "ParquetFileFormat")
+
+
 def bare_scan_files(df: DataFrame, needed_cols: list[str]) -> list[str] | None:
     """Parquet files behind ``df`` when it is a PURE column-pruned scan —
     else None (round 6).
@@ -77,29 +97,13 @@ def bare_scan_files(df: DataFrame, needed_cols: list[str]) -> list[str] | None:
     expression or join anywhere → None), and every needed column must
     exist in the first file's physical schema (a partition-directory
     column the raw reader cannot see → None)."""
-    import re
-
     import pyarrow.parquet as pq
 
     try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        if not _is_bare_parquet_scan(df._jdf.queryExecution().optimizedPlan()):
+            return None
     except Exception:
         return None
-    lines = [ln.lstrip(" +-:") for ln in plan.strip().splitlines() if ln.strip()]
-    n_rel = sum(ln.startswith("Relation") for ln in lines)
-    if n_rel != 1 or not all(
-        ln.startswith(("Project [", "Relation")) for ln in lines
-    ):
-        return None
-    if not re.search(r"Relation\s*\[[^\]]*\]\s*parquet", plan):
-        return None
-    for ln in lines:
-        if ln.startswith("Project ["):
-            inner = ln[len("Project ["):ln.rindex("]")]
-            # pure attribute list: `name#id` tokens only — any '(' (an
-            # expression) or ' AS ' (an alias) means computed columns
-            if "(" in inner or " AS " in inner:
-                return None
     try:
         files = sorted(df.inputFiles())
     except Exception:

@@ -155,3 +155,80 @@ def test_payload_quality_verdicts_in_suite(spark):
     viols = res.violations.filter(F.col("rule_id") == "R063_clipping").collect()
     assert viols and all(v["column"] == "bytes" and v["severity"] == "Medium"
                          and v["clip_id"] for v in viols)
+
+
+def test_local_scores_with_stored_baseline_match_spark(spark, clips_2k):
+    """A stored baseline is scored on the driver (drift_scores_local) with
+    the Spark plan's semantics: the baseline's bins only, histogram bins
+    outside them dropped, a baseline bin the parts never hit counted 0."""
+    from semantic_log_detector_spark.checks.drift import (
+        decode_stats, drift_scores, drift_scores_local)
+
+    hist = (decode_stats(clips_2k, CTX16).filter(F.col("kind") == "h")
+            .groupBy("part_id", "feature", "bin").agg(F.sum("cnt").alias("cnt"))
+            .cache())
+    # baseline: the even parts' histogram, without each feature's bin 3,
+    # plus one bin no part hits
+    even = (hist.filter(F.col("part_id") % 2 == 0).groupBy("feature", "bin")
+            .agg(F.sum("cnt").alias("cnt")).filter(F.col("bin") != 3))
+    baseline = even.unionByName(spark.createDataFrame(
+        [("rms", 15, 5)], "feature string, bin int, cnt long")).cache()
+    spark_side = {
+        (r["part_id"], r["feature"]): (r["psi"], r["ks"])
+        for r in drift_scores(hist, CTX16, baseline).collect()
+    }
+    local_side = {
+        (p, f): (psi, ks)
+        for p, f, psi, ks in drift_scores_local(
+            [tuple(r) for r in hist.collect()], CTX16,
+            [tuple(r) for r in baseline.collect()])
+    }
+    hist.unpersist()
+    baseline.unpersist()
+    assert set(spark_side) == set(local_side) and len(local_side) == 16 * 15
+    for k, (psi, ks) in spark_side.items():
+        lp, lk = local_side[k]
+        assert abs(psi - lp) < 1e-12 and abs(ks - lk) < 1e-12, k
+
+
+def test_observed_strings_match_spark_round_cast(spark):
+    """The drift verdicts' observed numbers are formatted on the driver
+    (base.spark_round_str) exactly as Spark prints CAST(round(x, 4) AS
+    STRING): HALF_UP on the shortest decimal, Java's Double.toString
+    layout (``1.0E-4``, ``1.2345678E7``)."""
+    import numpy as np
+
+    from semantic_log_detector_spark.checks.base import spark_round_str
+
+    rng = np.random.default_rng(7)
+    xs = list(10 ** rng.uniform(-6, 8, 10_000))
+    # HALF_UP ties, the layout switches at 1e-3 and 1e7, exact decimals
+    xs += [k * 1e-5 + 5e-5 for k in range(0, 2000, 7)]
+    xs += [0.0, 1e-3, 9.99949e-4, 9.9995e-4, 1e7, 9999999.99995, 1e8, 0.00015,
+           0.12345, 2.5e-5, 123.45675, 1e-6]
+    xs += [-x for x in xs[:500]]
+    df = spark.createDataFrame([(float(x),) for x in xs], "x double")
+    want = df.select("x", F.round("x", 4).cast("string").alias("s")).collect()
+    bad = [(r["x"], r["s"], spark_round_str(r["x"], 4)) for r in want
+           if spark_round_str(r["x"], 4) != r["s"]]
+    assert len(want) >= 10_000 and bad == []
+
+
+def test_spark_scorer_above_part_cap_gives_same_verdicts(drift_res, clips_2k):
+    """Above LOCAL_PART_CAP the histogram is scored by the Spark plan and
+    only per-part maxima are collected; the driver-side assembly then
+    writes the same drift verdicts and violations as the local scorer."""
+    from semantic_log_detector_spark.checks.drift import LOCAL_PART_CAP
+
+    wide = RunContext(run_id="t", num_parts=LOCAL_PART_CAP + 1)  # same part_ids
+    res = drift_check(clips_2k, wide)
+
+    def rows(df):
+        return sorted(map(tuple, df.filter("rule_id LIKE 'R05%'").collect()))
+
+    try:
+        assert rows(res.verdicts) == rows(drift_res.verdicts)
+        assert rows(res.violations) == rows(drift_res.violations)
+        assert rows(res.violations)  # part 7 drifted
+    finally:
+        res.release()

@@ -41,6 +41,21 @@ def test_bare_scan_detection(spark, clip_parquet):
     assert bare_scan_files(mem, COLS) is None
 
 
+def test_transformed_wide_table_is_not_a_bare_scan(spark, clip_parquet, tmp_path):
+    """Spark truncates a plan's text at spark.sql.debug.maxToStringFields
+    (25 by default): a computed column of a 31-column table sits behind
+    "... 6 more fields" and must still fall back."""
+    path = str(tmp_path / "wide")
+    (spark.read.parquet(clip_parquet)
+     .select(*COLS, *[F.lit(i).alias(f"c{i}") for i in range(3, 31)])
+     .write.parquet(path))
+    wide = spark.read.parquet(path)
+    assert bare_scan_files(wide, COLS)
+    assert bare_scan_files(wide.withColumn("c29", F.col("c29") + 1), COLS) is None
+    assert bare_scan_files(wide.select(*wide.columns[:-1], F.lit(0).alias("c30")),
+                           COLS) is None
+
+
 def test_landmarks_scan_path_equals_fallback(spark, clip_parquet):
     scan = spark.read.parquet(clip_parquet)
     fallback = scan.where(F.length("clip_id") >= 0)  # breaks bareness only
