@@ -7,12 +7,19 @@ into the single operation a 100 TB pre-training pipeline actually runs:
 "give me the deduplicated, language-filtered, quality-filtered document
 set, with token accounting".
 
-Scale shape: quality/lang/token columns are narrow Catalyst projections
-(zero shuffle); the duplicate-pair graph only ever contains documents
-that collide in the dedup index (a small fraction of the corpus), so the
+Scale shape: the corpus text is read once, in one narrow projection after
+the small-input spread (`dedup._spread_small_input`). On the MinHash-LSH
+path that projection is the signature pass (`dedup.minhash_signatures`):
+it computes the shingle hashes, the band keys AND the per-doc stats
+(n_tokens, quality, lang_guess) into one lazily checkpointed row per doc;
+on the exact path the stats get a checkpointed table of their own. The
+kept set is a filter over that table, so Catalyst cannot push the language
+and quality filters below the spread's exchange (where every regex would
+run on the one input partition) and nothing re-evaluates a text
+expression. The duplicate-pair graph only ever contains documents that
+collide in the dedup index (a small fraction of the corpus), so the
 connected-components loop and the final left_anti join against
-non-canonical ids touch edge-scale data, never corpus-scale. The corpus
-itself is scanned once.
+non-canonical ids touch edge-scale data, never corpus-scale.
 
 The reference has no corpus-curation analog (its cleaning is
 `src/ids/data_loader.py:162-194`: impute + drop_duplicates); this is the
@@ -28,6 +35,7 @@ from .dedup import (
     _spread_small_input,
     dup_clusters,
     minhash_lsh_pairs,
+    minhash_signatures,
     ngram_jaccard_pairs,
 )
 from .textstats import lang_id, quality_score, token_count
@@ -69,31 +77,35 @@ def curate_documents(
     duplicate-cluster table (id, cluster_id, is_canonical). Edge-scale,
     never corpus-scale.
     """
-    # spread a small single-split input before the per-doc stats projection
-    # (round 6, the pair builders' device): token/quality/lang are ~6 regex
-    # scans per doc and otherwise run on one core for a one-file corpus;
-    # a no-op at scale, per-row values are partitioning-independent
-    stats = _spread_small_input(df).select(
-        F.col(id_col).alias("id"),
-        token_count(F.col(text_col)).cast("long").alias("n_tokens"),
-        quality_score(F.col(text_col)).alias("quality"),
-        lang_id(F.col(text_col)).alias("lang_guess"),
-    )
-    pair_fn = ngram_jaccard_pairs if exact_pairs else minhash_lsh_pairs
-    pairs = pair_fn(
-        df, text_col, id_col,
-        **(
-            {"threshold": jaccard_threshold, "max_df": max_df,
-             "drop_stats": drop_stats}
-            if exact_pairs
-            else {"jaccard_threshold": jaccard_threshold, "drop_stats": drop_stats}
-        ),
-    )
+    text = F.col(text_col)
+    stats = {
+        "n_tokens": token_count(text).cast("long"),
+        "quality": quality_score(text),
+        "lang_guess": lang_id(text),
+    }
+    # the kept-set filters below read a checkpointed per-doc table, so
+    # Catalyst cannot push them (and the regexes) under the spread
+    if exact_pairs:
+        docs = (
+            _spread_small_input(df)
+            .select(F.col(id_col).alias("id"), *[c.alias(k) for k, c in stats.items()])
+            .localCheckpoint(eager=False)
+        )
+        pairs = ngram_jaccard_pairs(
+            df, text_col, id_col, threshold=jaccard_threshold, max_df=max_df,
+            drop_stats=drop_stats,
+        )
+    else:
+        docs = minhash_signatures(df, text_col, id_col, doc_cols=stats)
+        pairs = minhash_lsh_pairs(
+            df, text_col, id_col, jaccard_threshold=jaccard_threshold,
+            drop_stats=drop_stats, signatures=docs,
+        )
     clusters = dup_clusters(pairs, max_iters=cc_max_iters, drop_stats=drop_stats)
     if artifacts is not None:
         artifacts["clusters"] = clusters
     non_canonical = clusters.filter(~F.col("is_canonical")).select("id")
-    kept = stats.join(non_canonical, "id", "left_anti")
+    kept = docs.select("id", *stats).join(non_canonical, "id", "left_anti")
     if langs:
         kept = kept.filter(F.col("lang_guess").isin(*langs))
     kept = kept.filter(F.col("quality") >= min_quality)

@@ -194,17 +194,26 @@ def tokens(col: Column) -> Column:
 
 
 def token_shingles(col: Column, n: int = 3) -> Column:
-    """Token n-gram shingles as an array<string> (JVM higher-order fns)."""
-    toks = tokens(col)
-    return F.when(
-        F.size(toks) >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - n),
-                lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-            )
-        ),
-    ).otherwise(F.array(F.array_join(toks, " ")))
+    """Token n-gram shingles as an array<string> (JVM higher-order fns).
+
+    The token array is bound to a lambda variable (a one-element transform)
+    so the text is split once per doc: a bare ``tokens(col)`` inside the
+    shingle lambda is re-evaluated for every shingle, O(tokens²) per doc —
+    ``shingle_hashes`` over 4,000 short docs on 4 cores took 1.2-1.6 s
+    that way, 0.35-0.6 s bound."""
+
+    def shingles(toks: Column) -> Column:
+        return F.when(
+            F.size(toks) >= n,
+            F.array_distinct(
+                F.transform(
+                    F.sequence(F.lit(0), F.size(toks) - n),
+                    lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
+                )
+            ),
+        ).otherwise(F.array(F.array_join(toks, " ")))
+
+    return F.transform(F.array(tokens(col)), shingles)[0]
 
 
 def shingle_hashes(col: Column, n: int = 3) -> Column:
@@ -295,19 +304,6 @@ def exact_dedup(
 # --------------------------------------------------------------- MinHash + LSH
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 64) -> Column:
-    """num_hashes-wide MinHash signature: min over shingles of seeded
-    xxhash64 — all JVM-side, no UDF. Reference form; the LSH pipeline
-    below uses the vectorized ``_band_buckets_udf`` instead because
-    num_hashes interpreted higher-order passes dominate its runtime."""
-    return F.array(
-        *[
-            F.array_min(F.transform(shingle_col, lambda s, i=i: F.xxhash64(s, F.lit(i))))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 _MERSENNE = (1 << 61) - 1
 
 
@@ -374,6 +370,42 @@ def _band_buckets_udf(num_hashes: int, bands: int):
     return buckets
 
 
+def minhash_signatures(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int = 64,
+    bands: int = 16,
+    shingle_n: int = 3,
+    doc_cols: dict[str, Column] | None = None,
+) -> DataFrame:
+    """The per-document LSH signature table, one row per doc: (id, sh,
+    bkeys) plus one column per ``doc_cols`` entry, evaluated in the same
+    projection after the spread. Lazily checkpointed: the bucket-size
+    broadcast, both sides of the candidate self-join and any filter over
+    the ``doc_cols`` read it, so the corpus text is read once and no
+    filter can be pushed below the spread's exchange."""
+    return (
+        _spread_small_input(df)
+        .select(
+            F.col(id_col).alias("id"),
+            shingle_hashes(F.col(text_col), shingle_n).alias("sh"),
+            *[c.alias(name) for name, c in (doc_cols or {}).items()],
+        )
+        # No size(sh)>0 guard filter here: token_shingles cannot return an
+        # empty array (short/null docs fall back to one whole-text
+        # shingle), and Catalyst would push such a filter BELOW the
+        # projection (and the spread), evaluating the interpreted shingle
+        # expression twice per row, once on the single input partition.
+        # The banding UDF keeps its own explicit non-empty assertion as
+        # the contract guard.
+        .withColumn("bkeys", _band_buckets_udf(num_hashes, bands)(F.col("sh")))
+        # without the checkpoint the shingle+UDF pipeline executes once per
+        # consumer (measured 17s of a 28s q33 at sf0.1)
+        .localCheckpoint(eager=False)
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -384,6 +416,7 @@ def minhash_lsh_pairs(
     jaccard_threshold: float = 0.7,
     max_bucket: int | None = 200,
     drop_stats: dict | None = None,
+    signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact Jaccard verification.
 
@@ -407,26 +440,14 @@ def minhash_lsh_pairs(
     entirely (explicit unbounded mode — nothing is dropped, so there is
     nothing to account for); use it for verification runs on corpora
     known to have no degenerate buckets.
+
+    ``signatures`` is a ``minhash_signatures`` table the caller already
+    built over ``df`` with the same num_hashes/bands/shingle_n (to carry
+    per-doc columns of its own through the one corpus pass); without it
+    the table is built here.
     """
-    base = (
-        _spread_small_input(df)
-        .select(
-            F.col(id_col).alias("id"),
-            shingle_hashes(F.col(text_col), shingle_n).alias("sh"),
-        )
-        # No size(sh)>0 guard filter here (round 6): token_shingles cannot
-        # return an empty array (short/null docs fall back to one whole-
-        # text shingle), and Catalyst pushes a filter over the projected
-        # column BELOW the projection, re-evaluating the interpreted
-        # shingle expression per row — measured 0.46 s → 2.9 s at sf0.1
-        # for a filter that never drops anything. The banding UDF keeps
-        # its own explicit non-empty assertion as the contract guard.
-        .withColumn("bkeys", _band_buckets_udf(num_hashes, bands)(F.col("sh")))
-        # lazily checkpoint the (small: one row per doc) signature table:
-        # the bucket-size broadcast AND both sides of the candidate
-        # self-join consume it — without the checkpoint the shingle+UDF
-        # pipeline executes 3× (measured 17s of a 28s q33 at sf0.1)
-        .localCheckpoint(eager=False)
+    base = signatures if signatures is not None else minhash_signatures(
+        df, text_col, id_col, num_hashes, bands, shingle_n
     )
     banded = base.select(
         "id", "sh", F.posexplode("bkeys").alias("band", "bucket")
@@ -911,10 +932,10 @@ def ngram_jaccard_pairs(
     # hash AFTER explode: the projection over the generator output runs in
     # whole-stage codegen (hashing inside the higher-order transform would
     # be interpreted), and the self-join keys become fixed-width longs.
-    # NO n_sh column through the Generate (round 6): Catalyst collapses a
-    # projection carrying size(sh) into the Generate's required output and
+    # NO n_sh column through the Generate: Catalyst collapses a projection
+    # carrying size(sh) into the Generate's required output and
     # re-evaluates the interpreted token_shingles expression PER EXPLODED
-    # ROW — measured 0.37 s → 2.9 s at sf0.1 for the identical postings.
+    # ROW (measured 0.37 s → 2.9 s at sf0.1 for the identical postings).
     # Per-doc set sizes are instead derived from the posting counts
     # (shingles are array_distinct, so count(postings per id) == n_sh —
     # exactly how the df-guarded branch below already computes them).
