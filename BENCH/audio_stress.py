@@ -55,7 +55,7 @@ def run_level(spark, n: int) -> dict:
 
     # untimed page-cache/JVM warm: this VM reads ~65 MB/s cold and the
     # first large pass pays heap-growth + socket-buffer costs; best-of-2
-    # timed reps after it, per the bench.py additive-noise protocol
+    # timed reps after it (host noise only ever adds time)
     audio_fingerprint(corpus).write.format("noop").mode("overwrite").save()
 
     fp_wall = float("inf")

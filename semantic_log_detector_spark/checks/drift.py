@@ -8,22 +8,20 @@ MFCC/log-mel feature histograms.
 
 Pipeline (ONE Arrow-UDF pass over the payload bytes; tiny shuffles after):
 
-1. ``decode_stats``: a single mapInArrow over (clip_id, part_id, bytes,
-   codec, sr_hz, dur_ms) that decodes, feature-extracts, bins features into
-   per-batch fixed-bin histogram partials (hand-rolled map-side combine),
-   and emits R060 decode / R061 duration violations inline. Bytes are read
-   exactly once; nothing per-clip leaves the stage except sparse violation
-   rows — the shuffle and cache carry ≤ parts×features×bins rows per task.
-2. ``groupBy(part_id, feature, bin).sum`` merges partials; the global
-   histogram (the baseline, unless a stored one is supplied) is another
-   tiny agg of the same table.
-3. PSI = Σ (p−q)·ln(p/q) and KS = max|CDF_p − CDF_q| computed on the
-   histogram table — driver-side numpy when parts×features×bins fits the
-   driver (the default), Spark window-cumsum otherwise — the fixed-bin KS
-   approximation is bounded by bin width (SURVEY.md §7.3).
-
-``decode_features`` / ``histogram_partials`` remain as the two-stage
-building blocks (baseline construction over a reference slice, tests).
+1. ``decode_stats`` (or ``sources/payload_scan.py::payload_stats_scan``, the
+   Python-native reader of the same kernel): a single mapInArrow over
+   (clip_id, part_id, bytes, codec, sr_hz, dur_ms) that decodes,
+   feature-extracts, bins features into per-batch fixed-bin histogram
+   partials (hand-rolled map-side combine), and emits R060 decode / R061
+   duration violations inline. Bytes are read exactly once; nothing
+   per-clip leaves the stage except sparse violation rows — the shuffle and
+   cache carry ≤ parts×features×bins rows per task.
+2. ``groupBy(kind, part_id, feature, bin).sum`` merges the partials and the
+   per-part counters; ONE Arrow collect brings them to the driver.
+3. ``drift_scores_local`` computes PSI = Σ (p−q)·ln(p/q) and KS =
+   max|CDF_p − CDF_q| there in numpy, against the sum over the parts or a
+   stored baseline — the fixed-bin KS approximation is bounded by bin width
+   (SURVEY.md §7.3).
 
 Bins are FIXED (data-independent) so partials merge exactly and baselines
 from different runs are comparable — mirrors the reference's own advice to
@@ -32,20 +30,15 @@ drift-score against *stored summaries* (outputs/reports/final_report.md:148).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.audio import (
-    clip_features,
-    clip_features_ex,
-    decode_clip,
-    decode_clip_ex,
-)
+from ..functions.audio import clip_features_ex, decode_clip_ex
 from .base import (
     CheckPlan,
     CheckResult,
@@ -441,184 +434,39 @@ def decode_stats(
     return df.select(*cols).mapInArrow(gen, schema=_STATS_SCHEMA)
 
 
-# ------------------------------------------------------------- stage 1: decode
-
-
-def decode_features(df: DataFrame, ctx: RunContext) -> DataFrame:
-    """Per-clip decode + feature extraction. Output: clip_id, part_id, ok,
-    err, sr_decoded, n_samples, features array<double> (len 15).
-
-    mapInArrow, not mapInPandas: pandas would materialize every payload as
-    a Python bytes object (≈12 GB of allocator churn per 60k-clip pass);
-    Arrow binary columns are sliced as zero-copy memoryviews instead, and
-    the output is built directly as Arrow arrays.
-    """
-    df = ensure_part_id(df, ctx)
-    cols = ["clip_id", ctx.part_col, "bytes", "codec", "sr_hz", "dur_ms"]
-    part_col = ctx.part_col
-
-    def gen(batches):
-        import pyarrow as pa
-
-        from semantic_log_detector_spark.functions.arrowio import prefetch_batches
-
-        for batch in prefetch_batches(batches):
-            n = batch.num_rows
-            payloads = batch.column("bytes")
-            codecs = batch.column("codec").to_pylist()
-            ok = np.zeros(n, dtype=bool)
-            err: list[str | None] = [None] * n
-            srd = np.zeros(n, dtype=np.int64)
-            nsamp = np.zeros(n, dtype=np.int64)
-            feats: list[list[float] | None] = [None] * n
-            from semantic_log_detector_spark.functions.audio import (
-                predecode_batch,
-            )
-
-            pre = predecode_batch(payloads, codecs)
-            for i in range(n):
-                try:
-                    if i in pre:
-                        r = pre[i]
-                        if isinstance(r, Exception):
-                            raise r
-                        pcm, sr = r
-                    else:
-                        v = payloads[i]
-                        buf = None if not v.is_valid else memoryview(v.as_buffer())
-                        pcm, sr = decode_clip(buf, codecs[i])
-                    fv = clip_features(pcm, sr, n_mfcc=N_MFCC)
-                    if not np.isfinite(fv).all():
-                        raise ValueError("non-finite features")
-                    ok[i], srd[i], nsamp[i] = True, sr, len(pcm)
-                    feats[i] = fv.tolist()
-                except Exception as e:  # decode is allowed to fail per-row
-                    err[i] = f"{type(e).__name__}: {e}"[:200]
-            yield pa.record_batch(
-                [
-                    batch.column("clip_id"),
-                    batch.column(part_col),
-                    batch.column("sr_hz"),
-                    batch.column("dur_ms"),
-                    pa.array(ok),
-                    pa.array(err, type=pa.string()),
-                    pa.array(srd),
-                    pa.array(nsamp),
-                    pa.array(feats, type=pa.list_(pa.float64())),
-                ],
-                names=["clip_id", part_col, "declared_sr", "declared_dur",
-                       "ok", "err", "sr_decoded", "n_samples", "features"],
-            )
-
-    schema = (
-        f"clip_id string, {part_col} int, declared_sr int, declared_dur int, "
-        "ok boolean, err string, sr_decoded long, n_samples long, features array<double>"
-    )
-    return df.select(*cols).mapInArrow(gen, schema=schema)
-
-
-def decode_violations(feats: DataFrame, ctx: RunContext, dur_tol_ms: float = 20.0,
-                      dur_tol_rel: float = 0.02) -> DataFrame:
-    """R060 decode errors + R061 declared-vs-decoded duration mismatch."""
-    # try_divide: sr_decoded is 0 on failed decodes and ANSI mode would raise
-    decoded_ms = F.try_divide(F.col("n_samples") * 1000.0, F.col("sr_decoded"))
-    tol = F.greatest(F.lit(dur_tol_ms), F.abs(F.col("declared_dur")) * dur_tol_rel)
-    bad_dur = (
-        F.col("ok")
-        & F.col("declared_dur").isNotNull()
-        & (F.col("declared_dur") > 0)
-        & F.col("declared_sr").isNotNull()
-        & (F.col("declared_sr") == F.col("sr_decoded"))
-        & (F.abs(decoded_ms - F.col("declared_dur")) > tol)
-    )
-    v_decode = feats.filter(~F.col("ok")).select(
-        F.lit(ctx.run_id).alias("run_id"),
-        F.col(ctx.part_col).cast("int").alias("part_id"),
-        F.lit(R_DECODE).alias("rule_id"),
-        "clip_id",
-        F.lit("bytes").alias("column"),
-        F.col("err").alias("observed"),
-        F.lit("payload decodes cleanly").alias("expected"),
-        F.lit("Critical").alias("severity"),
-        F.concat(F.lit("payload failed to decode: "), F.col("err")).alias("explanation"),
-    )
-    v_dur = feats.filter(bad_dur).select(
-        F.lit(ctx.run_id).alias("run_id"),
-        F.col(ctx.part_col).cast("int").alias("part_id"),
-        F.lit(R_DURATION).alias("rule_id"),
-        "clip_id",
-        F.lit("dur_ms").alias("column"),
-        F.round(decoded_ms, 1).cast("string").alias("observed"),
-        F.col("declared_dur").cast("string").alias("expected"),
-        F.lit("Medium").alias("severity"),
-        F.lit("decoded duration differs from declared dur_ms").alias("explanation"),
-    )
-    return v_decode.unionByName(v_dur)
-
-
-# -------------------------------------------------- stage 2: histogram partials
-
-
-def histogram_partials(feats: DataFrame, ctx: RunContext,
-                       bins: dict[str, BinSpec] | None = None) -> DataFrame:
-    """Per-Arrow-batch fixed-bin histogram partials — hand-rolled map-side
-    combine so the shuffle carries histograms, not clips."""
-    bins = bins or DEFAULT_BINS
-    part_col = ctx.part_col
-    specs = [(i, name, bins[name]) for i, name in enumerate(FEATURE_NAMES)]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf[pdf["ok"]]
-            if len(pdf) == 0:
-                continue
-            mat = np.stack(pdf["features"].to_numpy())  # n × n_features
-            parts = pdf[part_col].to_numpy()
-            out_part, out_feat, out_bin, out_cnt = [], [], [], []
-            for p in np.unique(parts):
-                sub = mat[parts == p]
-                for fi, name, spec in specs:
-                    v = sub[:, fi]
-                    idx = np.clip(
-                        ((v - spec.lo) / (spec.hi - spec.lo) * spec.n).astype(int),
-                        0, spec.n - 1,
-                    )
-                    binc = np.bincount(idx, minlength=spec.n)
-                    nz = np.nonzero(binc)[0]
-                    out_part.extend([int(p)] * len(nz))
-                    out_feat.extend([name] * len(nz))
-                    out_bin.extend(nz.tolist())
-                    out_cnt.extend(binc[nz].tolist())
-            yield pd.DataFrame(
-                {part_col: out_part, "feature": out_feat, "bin": out_bin, "cnt": out_cnt}
-            )
-
-    partials = feats.mapInPandas(
-        gen, schema=f"{part_col} int, feature string, bin int, cnt long"
-    )
-    return partials.groupBy(part_col, "feature", "bin").agg(F.sum("cnt").alias("cnt"))
-
-
-# ------------------------------------------------------------ stage 3: scoring
+# ------------------------------------------------------------------ scoring
 
 # Laplace (add-α) smoothing for PSI: p=(cnt+α)/(n+αB). Symmetric in p and q,
 # unlike a bare epsilon, so empty sample bins don't blow up ln(p/q).
 _ALPHA = 0.5
 
 
+def smoothed_psi(counts: np.ndarray, base: np.ndarray) -> np.ndarray:
+    """PSI of each row of ``counts`` (last axis: bins) against the ``base``
+    histogram over the same bins, both add-α smoothed. The one PSI
+    definition of the batch check and the streaming operators."""
+    nb = counts.shape[-1]
+    p = (counts + _ALPHA) / (counts.sum(axis=-1, keepdims=True) + _ALPHA * nb)
+    q = (base + _ALPHA) / (base.sum() + _ALPHA * nb)
+    return ((p - q) * np.log(p / q)).sum(axis=-1)
+
+
 def drift_scores_local(hist_rows: list, ctx: RunContext,
                        baseline: list | None = None) -> list[tuple]:
-    """Driver-side PSI/KS on collected histogram rows [(part, feature, bin,
-    cnt)] — numpy, vectorized per (part, feature). SURVEY.md §4.4: PSI/KS
-    belong on the *collected tiny histogram tables* once they fit the
-    driver (parts × features × bins; ≈23k rows at P=64, ≈1.5M at P=4096).
-    Returns [(part_id, feature, psi, ks)]. Exact same math as the
-    Spark-side `drift_scores` (Laplace-smoothed PSI, fixed-bin KS).
+    """PSI/KS on collected histogram rows [(part, feature, bin, cnt)] —
+    numpy, vectorized per feature over a parts × bins matrix. SURVEY.md
+    §4.4: PSI/KS belong on the *collected tiny histogram tables*
+    (parts × features × bins; ≈23k rows at P=64, ≈2M at P=8192).
+    Returns [(part_id, feature, psi, ks)]: Laplace-smoothed PSI
+    (`smoothed_psi`) and fixed-bin KS.
 
-    ``baseline``: stored [(feature, bin, cnt)] rows (features × bins,
-    collected once) to score against instead of the sum over the parts;
-    as in `drift_scores`, each feature is scored over the baseline's bins
-    and histogram bins outside them are dropped.
+    The baseline defaults to the sum over the parts (a self-baseline in the
+    spirit of the reference's fit-on-normal pass,
+    `src/detection/pipeline.py:124-134`). ``baseline``: stored
+    [(feature, bin, cnt)] rows (features × bins, collected once) to score
+    against instead, for cross-run drift; each feature is then scored over
+    the baseline's bins, histogram bins outside them are dropped and a
+    baseline bin no part hits counts 0.
     """
     import collections
 
@@ -648,10 +496,7 @@ def drift_scores_local(hist_rows: list, ctx: RunContext,
             base = mat.sum(axis=0)
         else:
             base = np.array([base_cnt[feature][b] for b in bins], dtype=float)
-        nb = len(bins)
-        p = (mat + _ALPHA) / (mat.sum(axis=1, keepdims=True) + _ALPHA * nb)
-        q = (base + _ALPHA) / (base.sum() + _ALPHA * nb)
-        psi = ((p - q) * np.log(p / q)).sum(axis=1)
+        psi = smoothed_psi(mat, base)
         cdf_p = np.cumsum(mat, axis=1) / np.maximum(mat.sum(axis=1, keepdims=True), 1)
         cdf_q = np.cumsum(base) / max(base.sum(), 1)
         ks = np.abs(cdf_p - cdf_q).max(axis=1)
@@ -660,96 +505,15 @@ def drift_scores_local(hist_rows: list, ctx: RunContext,
     return out
 
 
-def drift_scores(hist: DataFrame, ctx: RunContext,
-                 baseline: DataFrame | None = None) -> DataFrame:
-    """Per (part_id, feature): PSI + fixed-bin KS vs baseline.
-
-    `baseline` defaults to the global histogram (sum over partitions) — a
-    self-baseline in the spirit of the reference's fit-on-normal pass
-    (`src/detection/pipeline.py:124-134`); pass a stored baseline table
-    (feature, bin, cnt) for cross-run drift. Up to ``LOCAL_PART_CAP``
-    partitions `drift_check` uses `drift_scores_local` (one collect of the
-    tiny histogram) instead of this three-shuffle plan.
-    """
-    part_col = ctx.part_col
-    if baseline is None:
-        baseline = hist.groupBy("feature", "bin").agg(F.sum("cnt").alias("bcnt"))
-    else:
-        baseline = baseline.select("feature", "bin", F.col("cnt").alias("bcnt"))
-
-    # align bins: grid = (parts present) × (baseline bins), fill missing with 0
-    parts = hist.select(part_col).distinct()
-    grid = parts.crossJoin(F.broadcast(baseline))
-    j = grid.join(hist, [part_col, "feature", "bin"], "left").fillna({"cnt": 0})
-
-    tot = Window.partitionBy(part_col, "feature")
-    cum = Window.partitionBy(part_col, "feature").orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    n_bins = F.count("*").over(tot)
-    p = (F.col("cnt") + _ALPHA) / (F.sum("cnt").over(tot) + _ALPHA * n_bins)
-    q = (F.col("bcnt") + _ALPHA) / (F.sum("bcnt").over(tot) + _ALPHA * n_bins)
-    scored = j.select(
-        part_col,
-        "feature",
-        "bin",
-        ((p - q) * F.log(p / q)).alias("psi_term"),
-        (F.sum(F.col("cnt")).over(cum) / F.sum("cnt").over(tot)).alias("cdf_p"),
-        (F.sum(F.col("bcnt")).over(cum) / F.sum("bcnt").over(tot)).alias("cdf_q"),
-    )
-    return scored.groupBy(part_col, "feature").agg(
-        F.sum("psi_term").alias("psi"),
-        F.max(F.abs(F.col("cdf_p") - F.col("cdf_q"))).alias("ks"),
-    )
-
-
-def calibrate_threshold(scored: DataFrame, score_col: str, label_col: str,
-                        objective: str = "f1") -> tuple[float, float]:
-    """Threshold calibration over labeled fixtures (SURVEY.md A10;
-    `src/ids/threshold_calibrator.py:50-124`): sweep every observed score as
-    a candidate threshold via a window cumulative sum (one pass, no
-    driver-side loop) and return (best_threshold, best_objective).
-
-    objective: 'f1' (max-F1) or 'youden' (max TPR−FPR).
-    """
-    from pyspark.sql import Window
-
-    by_v = (
-        scored.select(F.col(score_col).alias("v"), F.col(label_col).cast("long").alias("y"))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("y").alias("npos"))
-    )
-    tot = scored.agg(
-        F.count(F.lit(1)).alias("n_all"),
-        F.sum(F.col(label_col).cast("long")).alias("pos_all"),
-    )
-    w = Window.orderBy(F.desc("v")).rowsBetween(Window.unboundedPreceding, 0)
-    s = (
-        by_v.withColumn("tp", F.sum("npos").over(w))
-        .withColumn("pp", F.sum("n").over(w))
-        .crossJoin(F.broadcast(tot))
-    )
-    tp = F.col("tp")
-    fp = F.col("pp") - tp
-    fn = F.col("pos_all") - tp
-    tn = F.col("n_all") - F.col("pp") - fn
-    if objective == "f1":
-        obj = 2 * tp / (2 * tp + fp + fn)
-    elif objective == "youden":
-        obj = tp / (tp + fn) - fp / (fp + tn)
-    else:
-        raise ValueError(objective)
-    best = (
-        s.select(F.col("v").alias("threshold"), obj.alias("objective"))
-        .orderBy(F.desc("objective"), F.asc("threshold"))
-        .first()
-    )
-    return float(best["threshold"]), float(best["objective"])
-
-
-# above this many partitions the histogram (parts × features × bins rows)
-# is scored in Spark (`drift_scores`) instead of collected to the driver
-LOCAL_PART_CAP = 8192
+def _pylist(col: pa.ChunkedArray) -> list:
+    """``col.to_pylist()`` of a null-free column, built through numpy (and
+    through the dictionary for strings): ≈10× faster on the ≈2M-row
+    histogram of 8192 parts."""
+    if pa.types.is_integer(col.type):
+        return col.to_numpy().tolist()
+    d = pc.dictionary_encode(col).combine_chunks()
+    return np.array(d.dictionary.to_pylist(), dtype=object)[
+        d.indices.to_numpy()].tolist()
 
 
 def drift_plan(
@@ -792,13 +556,12 @@ def drift_plan(
     One heavy pass: ``decode_stats`` reads bytes exactly once and emits only
     tiny rows (histogram partials, sparse violations, row counters), so the
     persist below caches kilobytes regardless of input size — the per-clip
-    feature table never exists (it couldn't, at 10^12 rows). ONE collect
-    brings the merged histogram and the per-part counters to the driver,
-    which scores PSI/KS (`drift_scores_local`, against ``baseline`` when
-    given) and judges R050/R051/R062 there; the sparse decode violations
-    stay a Spark plan over the cached pass. Above ``LOCAL_PART_CAP``
-    partitions the scores come from the Spark `drift_scores` plan instead,
-    collected as per-part maxima into the same assembly.
+    feature table never exists (it couldn't, at 10^12 rows). ONE Arrow
+    collect brings the merged histogram and the per-part counters to the
+    driver (parts × features × bins rows, ≈2M at 8192 parts), which scores
+    PSI/KS (`drift_scores_local`, against ``baseline`` when given) and
+    judges R050/R051/R062 there at every part count; the sparse decode
+    violations stay a Spark plan over the cached pass.
 
     When ``payload_path`` names the parquet table backing ``clips`` (pure
     scan, no transformations), the heavy pass runs as the Python-native
@@ -816,19 +579,22 @@ def drift_plan(
                              noise=noise, speech=speech)
     stats.persist()
     try:
-        local = ctx.num_parts <= LOCAL_PART_CAP
+        # Arrow, not Row objects: at 8192 parts the collect is ≈2M rows
         small = (
-            stats.filter(F.col("kind").isin(["c", "h"] if local else ["c"]))
+            stats.filter(F.col("kind").isin("c", "h"))
             .groupBy("kind", "part_id", "feature", "bin")
-            .agg(F.sum("cnt")).collect()
+            .agg(F.sum("cnt").alias("cnt")).toArrow()
         )
+        is_hist = pc.equal(small.column("kind"), "h")
+        hist = small.filter(is_hist)
+        hist_rows = list(zip(*(_pylist(hist.column(c))
+                               for c in ("part_id", "feature", "bin", "cnt"))))
+        counters = small.filter(pc.invert(is_hist))
         n_rows: dict[int, int] = {}
         n_fake: dict[int, int] = {}
-        hist_rows = []
-        for kind, part, feature, b, cnt in small:
-            if kind == "h":
-                hist_rows.append((part, feature, b, cnt))
-            elif feature == "rows":
+        for part, feature, cnt in zip(*(counters.column(c).to_pylist()
+                                        for c in ("part_id", "feature", "cnt"))):
+            if feature == "rows":
                 n_rows[part] = cnt
             elif feature == "fake_decodes":
                 n_fake[part] = cnt
@@ -876,27 +642,14 @@ def drift_plan(
 
         # per part: (max psi, max ks, feature of the max psi)
         best: dict[int, tuple[float, float, str]] = {}
-        if local:
-            # tiny-histogram fast path (SURVEY.md §4.4): PSI/KS in numpy on
-            # parts × features × bins rows — no three-shuffle window plan
-            base_rows = None if baseline is None else [
-                tuple(r) for r in baseline.select("feature", "bin", "cnt").collect()]
-            for part, feature, psi, ks in drift_scores_local(hist_rows, ctx, base_rows):
-                cur = best.get(part)
-                max_psi = max(psi, cur[0]) if cur else psi
-                max_ks = max(ks, cur[1]) if cur else ks
-                worst = feature if (cur is None or psi >= cur[0]) else cur[2]
-                best[part] = (max_psi, max_ks, worst)
-        else:
-            hist = (
-                stats.filter(F.col("kind") == "h")
-                .groupBy(F.col("part_id").alias(ctx.part_col), "feature", "bin")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-            for part, *v in drift_scores(hist, ctx, baseline).groupBy(ctx.part_col).agg(
-                F.max("psi"), F.max("ks"), F.max_by("feature", "psi"),
-            ).collect():
-                best[part] = tuple(v)
+        base_rows = None if baseline is None else [
+            tuple(r) for r in baseline.select("feature", "bin", "cnt").collect()]
+        for part, feature, psi, ks in drift_scores_local(hist_rows, ctx, base_rows):
+            cur = best.get(part)
+            max_psi = max(psi, cur[0]) if cur else psi
+            max_ks = max(ks, cur[1]) if cur else ks
+            worst = feature if (cur is None or psi >= cur[0]) else cur[2]
+            best[part] = (max_psi, max_ks, worst)
 
         verdicts, violations = [], []
         for part in sorted(n_rows):

@@ -26,8 +26,3 @@ def l2_norm(a: Column) -> Column:
 
 def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def zscore(x: Column, mean: Column, std: Column) -> Column:
-    """A7: z-score with zero-std guard (anomaly_scorer.py:74-76)."""
-    return F.when(std > 0, (x - mean) / std).otherwise(F.lit(0.0))

@@ -138,19 +138,6 @@ def read(spark: SparkSession, ledger_path: str) -> DataFrame | None:
     return spark.read.parquet(ledger_path)
 
 
-def completed_parts(
-    spark: SparkSession,
-    ledger_path: str,
-    check_id: str,
-    input_fingerprint: str,
-    config_hash: str,
-) -> set[int]:
-    """part_ids already done for this (check, input, config) lineage."""
-    return completed_map(spark, ledger_path, input_fingerprint, config_hash).get(
-        check_id, set()
-    )
-
-
 def completed_map(
     spark: SparkSession,
     ledger_path: str,

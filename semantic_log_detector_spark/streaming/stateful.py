@@ -26,19 +26,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..checks.drift import _ALPHA, BinSpec
+from ..checks.drift import BinSpec, smoothed_psi
 
 _OUT_SCHEMA = (
     "part_id int, batch_rows long, total_rows long, psi double, flagged boolean"
 )
 _STATE_SCHEMA = "counts array<long>, total long"
-
-
-def _psi(batch: np.ndarray, prior: np.ndarray) -> float:
-    nb = len(batch)
-    p = (batch + _ALPHA) / (batch.sum() + _ALPHA * nb)
-    q = (prior + _ALPHA) / (prior.sum() + _ALPHA * nb)
-    return float(((p - q) * np.log(p / q)).sum())
 
 
 def stream_rolling_drift(
@@ -75,7 +68,7 @@ def stream_rolling_drift(
                 )
                 new += np.bincount(idx, minlength=nb)
             n_batch += len(v)
-        psi = _psi(new, counts) if total > 0 and n_batch > 0 else 0.0
+        psi = float(smoothed_psi(new, counts)) if total > 0 and n_batch > 0 else 0.0
         counts = counts + new
         total = int(total) + n_batch
         state.update((counts.tolist(), total))
@@ -113,10 +106,11 @@ def stream_feature_drift(
     """Per-key rolling drift on DECODED AUDIO FEATURES of a clip stream.
 
     The streaming twin of the batch drift check's feature path
-    (checks/drift.py::stats_record_batch → drift_scores): each micro-batch
-    decodes its payloads (decode_clip_ex), featurizes (clip_features: mean
-    MFCC + rms + centroid), bins every feature with the SAME BinSpec grid
-    and scores the SAME Laplace-smoothed PSI as the batch check — so a
+    (checks/drift.py::stats_record_batch → drift_scores_local): each
+    micro-batch decodes its payloads (decode_clip_ex), featurizes
+    (clip_features: mean MFCC + rms + centroid), bins every feature with the
+    SAME BinSpec grid and scores the SAME Laplace-smoothed PSI
+    (checks/drift.py::smoothed_psi) as the batch check — so a
     psi_threshold calibrated offline on the batch path is directly portable
     to the stream, per feature, not just for a scalar proxy column.
 
@@ -176,7 +170,7 @@ def stream_feature_drift(
         out = []
         for j, f in enumerate(feats):
             nb_, pr = new[offs[j]:offs[j + 1]], counts[offs[j]:offs[j + 1]]
-            psi = _psi(nb_, pr) if total > 0 and n_batch > 0 else 0.0
+            psi = float(smoothed_psi(nb_, pr)) if total > 0 and n_batch > 0 else 0.0
             out.append(
                 {
                     "part_id": int(key[0]),

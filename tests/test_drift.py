@@ -1,13 +1,16 @@
 """Drift check: flags exactly the planted drifted partitions; decode errors
 become violations; per-partition verdicts stable across parallelism."""
 
+import json
+from pathlib import Path
+
 import pyspark.sql.functions as F
 
 from semantic_log_detector_spark.checks.base import RunContext
 from semantic_log_detector_spark.checks.drift import (
-    decode_features,
+    decode_stats,
     drift_check,
-    histogram_partials,
+    drift_scores_local,
 )
 
 CTX16 = RunContext(run_id="t", num_parts=16)
@@ -39,32 +42,49 @@ def test_decode_errors_are_violations_not_failures(drift_res):
     assert res.violations.filter("rule_id='R060_decode' AND clip_id IS NULL").count() == 0
 
 
+def _merged_stats(df):
+    """decode_stats' histogram ('h') and counter ('c') rows summed by
+    (kind, part, feature, bin)."""
+    return sorted(map(tuple, decode_stats(df, CTX16)
+                      .filter(F.col("kind").isin("c", "h"))
+                      .groupBy("kind", "part_id", "feature", "bin")
+                      .agg(F.sum("cnt")).collect()))
+
+
 def test_histograms_partition_invariant(clips_2k):
-    feats = decode_features(clips_2k, CTX16)
-    h1 = histogram_partials(feats, CTX16)
-    feats2 = decode_features(clips_2k.repartition(3), CTX16)
-    h2 = histogram_partials(feats2, CTX16)
-    assert h1.exceptAll(h2).count() == 0 and h2.exceptAll(h1).count() == 0
+    one = _merged_stats(clips_2k)
+    three = _merged_stats(clips_2k.repartition(3))
+    assert {r[0] for r in one} == {"c", "h"}
+    assert one == three
 
 
-def test_local_and_spark_scores_agree(clips_2k):
-    from semantic_log_detector_spark.checks.drift import drift_scores, drift_scores_local
+# A hand-made 3-part x 2-feature histogram (a part that hits one bin only,
+# histogram bins the stored baseline lacks, baseline bins no part hits) and
+# the (part, feature, psi, ks) scores the Spark window-plan scorer gave it.
+GOLDEN = json.loads((Path(__file__).parent / "data" / "drift_scores_golden.json")
+                    .read_text())
 
-    feats = decode_features(clips_2k, CTX16)
-    hist = histogram_partials(feats, CTX16).cache()
-    spark_side = {
-        (r["part_id"], r["feature"]): (r["psi"], r["ks"])
-        for r in drift_scores(hist, CTX16).collect()
-    }
-    local_side = {
-        (p, f): (psi, ks)
-        for p, f, psi, ks in drift_scores_local([tuple(r) for r in hist.collect()], CTX16)
-    }
-    hist.unpersist()
-    assert set(spark_side) == set(local_side)
-    for k, (psi, ks) in spark_side.items():
-        lp, lk = local_side[k]
-        assert abs(psi - lp) < 1e-9 and abs(ks - lk) < 1e-9
+
+def _assert_golden_scores(got, want):
+    got = {(p, f): (psi, ks) for p, f, psi, ks in got}
+    want = {(p, f): (psi, ks) for p, f, psi, ks in want}
+    assert set(got) == set(want) and len(want) == 6
+    for k, (psi, ks) in want.items():
+        assert abs(got[k][0] - psi) < 1e-12 and abs(got[k][1] - ks) < 1e-12, k
+
+
+def test_local_scores_match_golden_self_baseline():
+    hist = [tuple(r) for r in GOLDEN["hist"]]
+    _assert_golden_scores(drift_scores_local(hist, CTX16), GOLDEN["self_baseline"])
+
+
+def test_local_scores_match_golden_stored_baseline():
+    """A stored baseline: the baseline's bins only, histogram bins outside
+    them dropped, a baseline bin the parts never hit counted 0."""
+    hist = [tuple(r) for r in GOLDEN["hist"]]
+    baseline = [tuple(r) for r in GOLDEN["baseline"]]
+    _assert_golden_scores(drift_scores_local(hist, CTX16, baseline),
+                          GOLDEN["stored_baseline"])
 
 
 def test_normal_parts_psi_low(drift_res):
@@ -81,7 +101,6 @@ def test_payload_quality_rules_flag_exactly_planted(spark):
     — computed inside the same single decode pass (no extra payload read)."""
     import numpy as np
 
-    from semantic_log_detector_spark.checks.drift import decode_stats
     from semantic_log_detector_spark.sources.synth import (
         DEFECT_RATES, _u01, clips_table)
 
@@ -114,7 +133,6 @@ def test_bandwidth_rule_flags_exactly_planted_upsamples(spark):
     the planted spectrum."""
     import numpy as np
 
-    from semantic_log_detector_spark.checks.drift import decode_stats
     from semantic_log_detector_spark.sources.synth import (
         _CODEC_WEIGHTS, _CODECS, _u01, _weighted_pick, DEFECT_RATES,
         clips_table)
@@ -157,40 +175,6 @@ def test_payload_quality_verdicts_in_suite(spark):
                          and v["clip_id"] for v in viols)
 
 
-def test_local_scores_with_stored_baseline_match_spark(spark, clips_2k):
-    """A stored baseline is scored on the driver (drift_scores_local) with
-    the Spark plan's semantics: the baseline's bins only, histogram bins
-    outside them dropped, a baseline bin the parts never hit counted 0."""
-    from semantic_log_detector_spark.checks.drift import (
-        decode_stats, drift_scores, drift_scores_local)
-
-    hist = (decode_stats(clips_2k, CTX16).filter(F.col("kind") == "h")
-            .groupBy("part_id", "feature", "bin").agg(F.sum("cnt").alias("cnt"))
-            .cache())
-    # baseline: the even parts' histogram, without each feature's bin 3,
-    # plus one bin no part hits
-    even = (hist.filter(F.col("part_id") % 2 == 0).groupBy("feature", "bin")
-            .agg(F.sum("cnt").alias("cnt")).filter(F.col("bin") != 3))
-    baseline = even.unionByName(spark.createDataFrame(
-        [("rms", 15, 5)], "feature string, bin int, cnt long")).cache()
-    spark_side = {
-        (r["part_id"], r["feature"]): (r["psi"], r["ks"])
-        for r in drift_scores(hist, CTX16, baseline).collect()
-    }
-    local_side = {
-        (p, f): (psi, ks)
-        for p, f, psi, ks in drift_scores_local(
-            [tuple(r) for r in hist.collect()], CTX16,
-            [tuple(r) for r in baseline.collect()])
-    }
-    hist.unpersist()
-    baseline.unpersist()
-    assert set(spark_side) == set(local_side) and len(local_side) == 16 * 15
-    for k, (psi, ks) in spark_side.items():
-        lp, lk = local_side[k]
-        assert abs(psi - lp) < 1e-12 and abs(ks - lk) < 1e-12, k
-
-
 def test_observed_strings_match_spark_round_cast(spark):
     """The drift verdicts' observed numbers are formatted on the driver
     (base.spark_round_str) exactly as Spark prints CAST(round(x, 4) AS
@@ -214,13 +198,11 @@ def test_observed_strings_match_spark_round_cast(spark):
     assert len(want) >= 10_000 and bad == []
 
 
-def test_spark_scorer_above_part_cap_gives_same_verdicts(drift_res, clips_2k):
-    """Above LOCAL_PART_CAP the histogram is scored by the Spark plan and
-    only per-part maxima are collected; the driver-side assembly then
-    writes the same drift verdicts and violations as the local scorer."""
-    from semantic_log_detector_spark.checks.drift import LOCAL_PART_CAP
-
-    wide = RunContext(run_id="t", num_parts=LOCAL_PART_CAP + 1)  # same part_ids
+def test_drift_verdicts_independent_of_num_parts(drift_res, clips_2k):
+    """The R05x verdicts and violations depend on the data, not on
+    ``num_parts``: a context with 8193 parts (the same part_ids, already a
+    column of the table) scores the same histogram to the same rows."""
+    wide = RunContext(run_id="t", num_parts=8193)
     res = drift_check(clips_2k, wide)
 
     def rows(df):
