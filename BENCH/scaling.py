@@ -154,7 +154,7 @@ def run_level(cores: int, n: int) -> dict:
 
     out = tempfile.mkdtemp(prefix=f"sld_scale_{cores}_")
     t0 = time.time()
-    run_suite(spark, clips, transcripts, out, SuiteConfig(), input_fingerprint="timed", clips_path=cdir)
+    run_suite(spark, clips, transcripts, out, SuiteConfig(), input_fingerprint="timed")
     wall = time.time() - t0
     spark.stop()
     return {

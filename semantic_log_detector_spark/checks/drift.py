@@ -30,6 +30,7 @@ drift-score against *stored summaries* (outputs/reports/final_report.md:148).
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass
 
 import numpy as np
@@ -523,7 +524,6 @@ def drift_plan(
     ks_threshold: float = 0.2,
     baseline: DataFrame | None = None,
     bins: dict[str, BinSpec] | None = None,
-    payload_path: str | None = None,
     pending_parts: list[int] | None = None,
     strict_codecs: bool = False,
     noise: tuple[float, int] | None = None,
@@ -563,18 +563,36 @@ def drift_plan(
     judges R050/R051/R062 there at every part count; the sparse decode
     violations stay a Spark plan over the cached pass.
 
-    When ``payload_path`` names the parquet table backing ``clips`` (pure
-    scan, no transformations), the heavy pass runs as the Python-native
-    row-group reader (sources/payload_scan.py): payload bytes never cross
-    the JVM→worker socket. ``pending_parts`` scopes it for wave resume."""
-    speech = transcripts is not None
-    if payload_path is not None:
-        from ..sources.payload_scan import payload_stats_scan
+    The heavy pass routes itself from ``clips``: when it is a bare parquet
+    scan (``sources/payload_scan.py::bare_scan_files``), the Python-native
+    row-group reader runs it over those files and payload bytes never
+    cross the JVM→worker socket; any other frame goes through
+    ``decode_stats``. So pass the caller's frame as it came — a column
+    added to it (``ensure_part_id``) makes it no longer a bare scan.
+    ``pending_parts`` scopes either route to those parts (wave resume)."""
+    from ..sources.payload_scan import (
+        PAYLOAD_COLS,
+        bare_scan_files,
+        payload_stats_scan,
+        stored_part_ids_match,
+    )
 
+    speech = transcripts is not None
+    files = bare_scan_files(clips, PAYLOAD_COLS)
+    if files and ctx.part_col in clips.columns and not stored_part_ids_match(files, ctx):
+        logging.getLogger(__name__).warning(
+            "stored %s does not match pmod(xxhash64(clip_id), %d); the drift "
+            "payload pass falls back to the JVM-fed decode", ctx.part_col,
+            ctx.num_parts)
+        files = None
+    if files:
         stats = payload_stats_scan(
-            clips.sparkSession, payload_path, ctx, bins, pending_parts,
+            clips.sparkSession, files, ctx, bins, pending_parts,
             strict_codecs=strict_codecs, noise=noise, speech=speech)
     else:
+        clips = ensure_part_id(clips, ctx)
+        if pending_parts is not None:
+            clips = clips.filter(F.col(ctx.part_col).isin(pending_parts))
         stats = decode_stats(clips, ctx, bins, strict_codecs=strict_codecs,
                              noise=noise, speech=speech)
     stats.persist()

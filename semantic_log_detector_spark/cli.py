@@ -357,12 +357,6 @@ def main(argv: list[str] | None = None) -> int:
                 waves=args.waves,
                 checks=tuple(args.checks.split(",")),
             )
-        # a plain parquet-dir --input is a pure scan → the drift payload
-        # pass can use the Python-native row-group reader
-        payload_path = (
-            args.input if args.input and os.path.isdir(args.input)
-            and not os.path.isdir(os.path.join(args.input, "metadata")) else None
-        )
         if args.ann_index and not args.incremental:
             print("--ann-index rides the increment boundary: use it with "
                   "--incremental")
@@ -406,7 +400,6 @@ def main(argv: list[str] | None = None) -> int:
             result = run_suite(
                 spark, clips, transcripts, args.out, cfg,
                 input_fingerprint=fingerprint, max_waves=args.max_waves,
-                clips_path=payload_path,
             )
         report = write_report(spark, args.out)
         qmsg = ""

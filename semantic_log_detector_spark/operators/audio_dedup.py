@@ -203,16 +203,11 @@ def audio_fingerprint(
     for c in passthrough:
         schema += f", {c} {df.schema[c].dataType.simpleString()}"
 
-    from ..sources.payload_scan import bare_scan_files, list_row_groups
+    from ..sources.payload_scan import bare_scan_files, row_group_frame
 
     files = bare_scan_files(df, cols)
     if files:
-        spark = df.sparkSession
-        groups = list_row_groups(files, spark)
-        desc = spark.createDataFrame(
-            spark.sparkContext.parallelize(groups, max(len(groups), 1)),
-            "file string, row_group int",
-        )
+        desc = row_group_frame(df.sparkSession, files)
 
         def gen_scan(batches):
             import pyarrow.parquet as pq

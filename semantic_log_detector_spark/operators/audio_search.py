@@ -178,17 +178,11 @@ def audio_landmarks(
     cols = [id_col, bytes_col, codec_col]
     hop = int(FP_SR * hop_ms / 1000.0)
 
-    from ..sources.payload_scan import bare_scan_files, list_row_groups
+    from ..sources.payload_scan import bare_scan_files, row_group_frame
 
     files = bare_scan_files(df, cols)
     if files:
-        spark = df.sparkSession
-        groups = list_row_groups(files, spark)
-        # one row group per task (payload_scan's balanced-split finding)
-        desc = spark.createDataFrame(
-            spark.sparkContext.parallelize(groups, max(len(groups), 1)),
-            "file string, row_group int",
-        )
+        desc = row_group_frame(df.sparkSession, files)
 
         def gen_scan(batches):
             import pyarrow.parquet as pq

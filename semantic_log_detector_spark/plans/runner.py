@@ -145,11 +145,8 @@ def run_suite(
     (input_fingerprint, config) resumes: completed (check, part) pairs are
     skipped via the ledger anti-join.
 
-    ``clips_path``: when ``clips`` is a pure parquet scan of that path,
-    the drift check's payload pass runs as the Python-native row-group
-    reader (bytes never cross the JVM→worker socket). Only pass it for an
-    untransformed scan — filters applied to ``clips`` do NOT reach the
-    raw-file reader.
+    ``clips_path`` is accepted and ignored: the drift payload route comes
+    from ``clips`` itself (``checks/drift.py::drift_plan``).
 
     ``drift_baseline``: a stored (feature, bin, cnt) histogram table for
     CROSS-RUN drift — each partition is scored against it instead of the
@@ -158,20 +155,12 @@ def run_suite(
     run_id = run_id or uuid.uuid4().hex[:12]
     ctx = RunContext(run_id=run_id, num_parts=cfg.num_parts,
                      config_hash=cfg.config_hash())
-    if clips_path is not None:
-        from ..sources.payload_scan import validate_payload_path
-
-        reason = validate_payload_path(clips_path, cfg.num_parts)
-        if reason is not None:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "payload scan path %r rejected (%s); drift falls back to the "
-                "JVM-fed decode pass", clips_path, reason)
-            clips_path = None
     ledger_path = f"{out_dir}/ledger"
     t_start = time.time()
 
+    # drift routes its payload pass from the frame as the caller built it
+    # (ensure_part_id adds a column, and the result is no longer a bare scan)
+    caller_clips = clips
     clips = ensure_part_id(clips, ctx)
     result = RunResult(run_id=run_id, out_dir=out_dir, waves_run=0)
 
@@ -285,15 +274,12 @@ def run_suite(
                 raise ValueError(f"unknown check {check!r}")
 
             def build_drift(pend: list[int]) -> CheckPlan:
-                sub_full = clips.filter(F.col(ctx.part_col).isin(pend))
-                return drift_plan(sub_full, ctx,
+                return drift_plan(caller_clips, ctx,
                                   psi_threshold=cfg.psi_threshold,
                                   ks_threshold=cfg.ks_threshold,
                                   strict_codecs=cfg.strict_codecs,
                                   baseline=drift_baseline,
-                                  payload_path=clips_path,
-                                  pending_parts=(
-                                      pend if len(pend) < cfg.num_parts else None),
+                                  pending_parts=pend,
                                   transcripts=(
                                       transcripts.filter(tr_part.isin(pend))
                                       if cfg.speech_rate and transcripts is not None

@@ -21,40 +21,24 @@ bytes never touch the JVM; the socket carries descriptors in and tiny
 histogram/violation rows out.
 
 Correctness contract (tested): for a pure parquet-scan input, output rows
-== decode_stats(df) rows exactly. The runner only selects this path when
-the caller passes the table's path (cli --input, bench, scaling), never
-for arbitrary DataFrames — a filtered/transformed DF must use the general
-path since raw files bypass its plan. Row-group granularity preserves
-Spark's split parallelism; pending-partition filtering (wave resume)
-happens on the worker-computed part_id mask before decode.
+== decode_stats(df) rows exactly. The route is picked from the input
+frame itself (`bare_scan_files`), never from a path the caller passes: a
+filtered/transformed frame must use the general path, since the raw
+files bypass its plan. Row-group granularity preserves Spark's split
+parallelism; pending-partition filtering (wave resume) happens on the
+worker-computed part_id mask before decode.
 """
 
 from __future__ import annotations
 
-import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..checks.base import RunContext
 from ..checks.drift import DEFAULT_BINS, FEATURE_NAMES, _STATS_SCHEMA, BinSpec
 
-_COLS = ["clip_id", "bytes", "codec", "sr_hz", "dur_ms"]
-
-
-def _list_parquet_files(path: str) -> list[str]:
-    """All *.parquet files under ``path``, recursively — nested /
-    hive-partitioned (key=value subdir) layouts included, matching what
-    spark.read.parquet would pick up. Hidden/_-prefixed entries skipped."""
-    if not os.path.isdir(path):
-        return [path]
-    out: list[str] = []
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        out.extend(
-            os.path.join(root, f) for f in files
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-    return sorted(out)
+PAYLOAD_COLS = ["clip_id", "bytes", "codec", "sr_hz", "dur_ms"]
 
 
 # above this many files, footer listing runs as a Spark job instead of
@@ -87,10 +71,12 @@ def bare_scan_files(df: DataFrame, needed_cols: list[str]) -> list[str] | None:
     """Parquet files behind ``df`` when it is a PURE column-pruned scan —
     else None (round 6).
 
-    Lets payload operators (audio landmarks/fingerprints) route a plain
-    ``spark.read.parquet(dir)`` input through the Python-native row-group
-    reader — payload bytes never cross the JVM→worker socket — while any
-    transformed input falls back to the general mapInPandas path. The
+    The one route decision of every payload pass (the drift decode, audio
+    landmarks/fingerprints): a plain ``spark.read.parquet(dir)`` input —
+    an increment's ``spark.read.parquet(*files)`` too — goes through the
+    Python-native row-group reader, so payload bytes never cross the
+    JVM→worker socket, while any transformed input falls back to the
+    general JVM-fed path. The
     check is deliberately conservative (false negatives only): the
     OPTIMIZED logical plan must consist of nothing but attribute-only
     Project nodes over exactly one parquet Relation (a Filter, Generate,
@@ -110,7 +96,10 @@ def bare_scan_files(df: DataFrame, needed_cols: list[str]) -> list[str] | None:
         return None
     if not files or not all(f.endswith(".parquet") for f in files):
         return None
-    files = [f[len("file:"):] if f.startswith("file:") else f for f in files]
+    # file: URIs → local paths (percent-escapes decoded); other schemes
+    # stay as given, and the footer read below sends them to the general path
+    uris = [urlparse(f) for f in files]
+    files = [unquote(u.path) if u.scheme == "file" else f for u, f in zip(uris, files)]
     try:
         names = set(pq.ParquetFile(files[0]).schema_arrow.names)
     except Exception:
@@ -120,19 +109,15 @@ def bare_scan_files(df: DataFrame, needed_cols: list[str]) -> list[str] | None:
     return files
 
 
-def list_row_groups(path: str | list[str], spark: SparkSession | None = None) -> list[tuple[str, int]]:
-    """(file, row_group_index) descriptors for a parquet directory/file —
-    or for an explicit file list (round 6: the `bare_scan_files` route).
+def list_row_groups(files: list[str], spark: SparkSession | None = None) -> list[tuple[str, int]]:
+    """(file, row_group_index) descriptors for a parquet file list (the
+    `bare_scan_files` route).
 
     Footer reads are parallelized: a driver thread pool for small file
     counts, a distributed mapInArrow job over the file list when it is
     large (pyarrow releases the GIL on I/O, and at cluster scale the
     driver must not serially open 10^6 footers)."""
     import pyarrow.parquet as pq
-
-    files = list(path) if isinstance(path, (list, tuple)) else _list_parquet_files(path)
-    if not files:
-        raise ValueError(f"no parquet files under {path!r}")
 
     if spark is not None and len(files) > _DISTRIBUTED_LISTING_THRESHOLD:
         desc = spark.createDataFrame(
@@ -164,57 +149,54 @@ def list_row_groups(path: str | list[str], spark: SparkSession | None = None) ->
     return [(f, g) for f in files for g in range(counts[f])]
 
 
-def validate_payload_path(path: str, num_parts: int) -> str | None:
-    """Cheap preflight for the Python-native payload path; returns a human
-    reason string when the path must NOT be used (caller falls back to the
-    JVM-fed decode_stats), else None.
+def row_group_frame(spark: SparkSession, files: list[str]) -> DataFrame:
+    """(file, row_group) descriptor frame over ``files``, exactly ONE row
+    group per partition: parallelize slices by range, so every task reads
+    one group. A hash repartition over a tiny N-row descriptor table lands
+    2-3 groups on some tasks and 0 on others — measured a 2.5× straggler
+    tail on a 32-group/32-core pass (wall 7.2 s vs ~2.8 s balanced)
+    because the decode cost is uniform per group. Zero row groups (an
+    empty Spark-written table is one file without any) give zero rows."""
+    groups = list_row_groups(files, spark)
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(groups, max(len(groups), 1)),
+        "file string, row_group int",
+    )
 
-    Guards two silent-wrongness cases: (a) a file schema missing payload
-    columns (e.g. partition-directory columns the raw reader cannot see),
-    and (b) a stored part_id computed under a different num_parts /
-    formula than pmod(xxhash64(clip_id), num_parts) — wave resume and
-    drift verdicts would silently diverge from the other checks."""
+
+def stored_part_ids_match(files: list[str], ctx: RunContext) -> bool:
+    """Whether the ``ctx.part_col`` stored in ``files`` equals
+    pmod(xxhash64(clip_id), num_parts) on a sample (the first non-empty
+    batch). ``ensure_part_id`` trusts a stored column while the row-group
+    reader computes the key itself, so a table partitioned under another
+    num_parts or formula must not take the payload route: wave resume and
+    drift verdicts would silently diverge from the other checks. False
+    when the files do not store the column (a partition-directory column
+    the raw reader cannot see)."""
     import pyarrow.parquet as pq
 
-    files = _list_parquet_files(path)
-    if not files:
-        return "no parquet files"
-    pf = pq.ParquetFile(files[0])
-    names = set(pf.schema_arrow.names)
-    missing = sorted(set(_COLS) - names)
-    if missing:
-        return f"file schema missing columns {missing}"
-    if "part_id" in names:
-        from ..functions.sparkhash import xxhash64
+    from ..functions.sparkhash import xxhash64
 
-        # sample the first non-empty batch (Spark routinely writes empty
-        # part-00000 files; writers may also emit 0-row row groups that
-        # yield empty batches rather than none)
-        rb = None
-        for f in files:
-            for batch in pq.ParquetFile(f).iter_batches(
-                batch_size=256, columns=["clip_id", "part_id"]
-            ):
-                if batch.num_rows > 0:
-                    rb = batch
-                    break
-            if rb is not None:
-                break
-        for cid, pid in zip(rb.column("clip_id").to_pylist(),
-                            rb.column("part_id").to_pylist()) if rb is not None else ():
-            if cid is None or pid is None:
-                continue
-            if xxhash64(str(cid).encode("utf-8")) % num_parts != pid:
-                return (
-                    "stored part_id does not match pmod(xxhash64(clip_id), "
-                    f"{num_parts}) — table was partitioned differently"
-                )
-    return None
+    cols = ["clip_id", ctx.part_col]
+    for f in files:
+        pf = pq.ParquetFile(f)
+        if not set(cols) <= set(pf.schema_arrow.names):
+            return False
+        # Spark routinely writes empty part-00000 files; writers may also
+        # emit 0-row row groups that yield empty batches rather than none
+        for rb in pf.iter_batches(batch_size=256, columns=cols):
+            if rb.num_rows > 0:
+                return all(
+                    cid is None or pid is None
+                    or xxhash64(str(cid).encode("utf-8")) % ctx.num_parts == pid
+                    for cid, pid in zip(rb.column("clip_id").to_pylist(),
+                                        rb.column(ctx.part_col).to_pylist()))
+    return True
 
 
 def payload_stats_scan(
     spark: SparkSession,
-    path: str,
+    files: list[str],
     ctx: RunContext,
     bins: dict[str, BinSpec] | None = None,
     pending_parts: list[int] | None = None,
@@ -225,7 +207,7 @@ def payload_stats_scan(
     noise: tuple[float, int] | None = None,
     speech: bool = False,
 ) -> DataFrame:
-    """decode_stats-equivalent DataFrame, read Python-side from ``path``.
+    """decode_stats-equivalent DataFrame, read Python-side from ``files``.
 
     One Spark task per parquet row group; workers stream ``batch_rows``-row
     slices of the payload columns directly from the file (no JVM transfer),
@@ -236,20 +218,11 @@ def payload_stats_scan(
     specs = [(i, name, bins[name]) for i, name in enumerate(FEATURE_NAMES)]
     n_feat = len(FEATURE_NAMES)
     num_parts = ctx.num_parts
-    pend = sorted(pending_parts) if pending_parts is not None else None
+    # worker-computed keys lie in [0, num_parts): a full set filters nothing
+    pend = (sorted(set(pending_parts)) if pending_parts is not None
+            and len(set(pending_parts)) < num_parts else None)
 
-    groups = list_row_groups(path, spark)
-    if not groups:
-        raise ValueError(f"no parquet row groups under {path!r}")
-    # exactly ONE row group per partition: parallelize slices by range, so
-    # every task decodes one group. A hash repartition over a tiny N-row
-    # descriptor table lands 2-3 groups on some tasks and 0 on others —
-    # measured a 2.5× straggler tail on a 32-group/32-core pass (wall 7.2 s
-    # vs ~2.8 s balanced) because the decode cost is uniform per group.
-    desc = spark.createDataFrame(
-        spark.sparkContext.parallelize(groups, len(groups)),
-        "file string, row_group int",
-    )
+    desc = row_group_frame(spark, files)
 
     def gen(batches):
         import numpy as np
@@ -264,7 +237,7 @@ def payload_stats_scan(
                                    b.column("row_group").to_pylist()):
                 pf = pq.ParquetFile(file)
                 for rb in pf.iter_batches(batch_size=batch_rows,
-                                          row_groups=[group], columns=_COLS):
+                                          row_groups=[group], columns=PAYLOAD_COLS):
                     clip_ids = rb.column("clip_id").to_pylist()
                     parts = np.fromiter(
                         (xxhash64(c.encode("utf-8")) % num_parts for c in clip_ids),

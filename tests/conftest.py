@@ -36,3 +36,20 @@ def meta_4k(spark):
     df.count()
     yield df
     df.unpersist()
+
+
+@pytest.fixture
+def payload_scan_calls(monkeypatch):
+    """Arguments of each ``payload_stats_scan`` call made during the test
+    (``drift_plan`` looks the name up in its module at call time)."""
+    from semantic_log_detector_spark.sources import payload_scan
+
+    calls = []
+    real = payload_scan.payload_stats_scan
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(payload_scan, "payload_stats_scan", spy)
+    return calls

@@ -85,6 +85,37 @@ def test_uniform_drift_caught_by_stored_baseline(spark, tmp_path):
     assert self_failed <= N_PARTS // 2 < failed
 
 
+def test_delta_takes_payload_route_with_jvm_route_verdicts(spark, tmp_path,
+                                                           payload_scan_calls):
+    """A delta is read as spark.read.parquet(*files) — a bare scan — so its
+    drift pass runs on the payload route, with the verdicts and violations
+    of the JVM-fed route over the same files and stored baseline."""
+    table = str(tmp_path / "table")
+    out = str(tmp_path / "out")
+    _write_batch(spark, table, 300, seed=1)
+    validate_increment(spark, table, out, CFG)
+    assert len(payload_scan_calls) == 1  # the bootstrap scans the table dir
+    before = set(f for f, _ in list_data_files(table))
+    _write_batch(spark, table, 200, seed=2, drift_parts=(3,))
+    added = [f for f, _ in list_data_files(table) if f not in before]
+
+    _, res2 = validate_increment(spark, table, out, CFG)
+    assert len(payload_scan_calls) == 2
+    ref = str(tmp_path / "ref")
+    run_suite(spark, spark.read.parquet(*added).repartition(2), None, ref, CFG,
+              drift_baseline=spark.read.parquet(f"{out}/drift_baseline"))
+    assert len(payload_scan_calls) == 2  # not a bare scan: the JVM route
+
+    def rows(d, run_id=None):
+        df = spark.read.parquet(d)
+        if run_id is not None:
+            df = df.filter(F.col("run_id") == run_id)
+        return sorted(map(tuple, df.drop("run_id").collect()), key=repr)
+
+    for kind in ("verdicts", "violations"):
+        assert rows(f"{out}/{kind}", res2.run_id) == rows(f"{ref}/{kind}")
+
+
 def test_rejects_remote_uri(spark):
     with pytest.raises(ValueError, match="local/NFS"):
         list_data_files("s3://bucket/table")
