@@ -8,9 +8,10 @@ MFCC/log-mel feature histograms.
 
 Pipeline (ONE Arrow-UDF pass over the payload bytes; tiny shuffles after):
 
-1. ``decode_stats`` (or ``sources/payload_scan.py::payload_stats_scan``, the
-   Python-native reader of the same kernel): a single mapInArrow over
-   (clip_id, part_id, bytes, codec, sr_hz, dur_ms) that decodes,
+1. ``decode_stats``: one Arrow pass over (clip_id, part_id, bytes, codec,
+   sr_hz, dur_ms) through the shared payload reader
+   (``sources/payload_scan.py::map_payloads``: row-group tasks on a bare
+   parquet scan, a JVM-fed mapInArrow otherwise) that decodes,
    feature-extracts, bins features into per-batch fixed-bin histogram
    partials (hand-rolled map-side combine), and emits R060 decode / R061
    duration violations inline. Bytes are read exactly once; nothing
@@ -30,7 +31,6 @@ drift-score against *stored summaries* (outputs/reports/final_report.md:148).
 
 from __future__ import annotations
 
-import logging
 from dataclasses import dataclass
 
 import numpy as np
@@ -40,12 +40,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.audio import clip_features_ex, decode_clip_ex
+from ..sources.payload_scan import PAYLOAD_COLS, map_payloads
 from .base import (
     CheckPlan,
     CheckResult,
     RunContext,
     check_result,
-    ensure_part_id,
     spark_round_str,
 )
 
@@ -64,6 +64,9 @@ R_DC = "R065_dc_offset"
 CLIP_LEVEL, CLIP_MAX_RATIO = 0.97, 0.02
 SIL_LEVEL, SIL_MIN_RATIO = 2e-3, 0.98
 DC_MAX = 0.1
+# R061 duration consistency (and R068's container duration): decoded vs
+# declared duration may differ by max(DUR_TOL_MS, DUR_TOL_REL × declared)
+DUR_TOL_MS, DUR_TOL_REL = 20.0, 0.02
 
 # R066 effective bandwidth: flag clips whose spectral energy at/above
 # HF_FRAC × Nyquist is below HF_FLOOR_DB of the total — the signature of
@@ -85,6 +88,9 @@ R_CONTAINER = "R068_container_meta"
 # R067 speech rate: transcript word count vs MEASURED (VAD) speech seconds
 # — the decoded twin of the metadata chars/sec rule (R018). See drift_check.
 R_SPEECH_RATE = "R067_speech_rate"
+# R067 applies its too-fast bound from MIN_WORDS_FAST words and its
+# too-slow bound from MIN_SPEECH_SLOW_S seconds of measured speech
+MIN_WORDS_FAST, MIN_SPEECH_SLOW_S = 3, 2.0
 HF_FRAC = 0.55
 HF_FLOOR_DB = -32.0
 HF_EXEMPT_CODECS = frozenset({"adpcm_ima"})
@@ -126,21 +132,15 @@ _STATS_SCHEMA = (
 
 
 def stats_record_batch(
-    clip_ids: list,
-    parts,
-    payloads,
-    codecs: list,
-    decl_sr: list,
-    decl_dur: list,
-    specs: list,
-    n_feat: int,
-    dur_tol_ms: float = 20.0,
-    dur_tol_rel: float = 0.02,
+    batch: pa.RecordBatch,
+    part_col: str,
     strict_codecs: bool = False,
     noise: tuple[float, int] | None = None,
     speech: bool = False,
-):
-    """Decode + featurize + bin ONE Arrow batch into _STATS_SCHEMA rows.
+) -> pa.RecordBatch:
+    """Decode + featurize + bin ONE Arrow batch of (clip_id, ``part_col``,
+    bytes, codec, sr_hz, dur_ms) into _STATS_SCHEMA rows, over the
+    DEFAULT_BINS histogram grid.
 
     ``speech=True`` additionally emits one kind='s' row per honestly-decoded
     clip carrying its VAD speech time (feature='speech_ms', cnt=ms) — the
@@ -165,16 +165,17 @@ def stats_record_batch(
     ``strict_codecs`` the clip instead becomes an R062 violation and is
     excluded from the histograms.
 
-    Shared kernel of the two payload readers: ``decode_stats`` (JVM scan →
-    mapInArrow) and ``sources/payload_scan.py`` (Python-native parquet
-    row-group reader). ``payloads`` is a pyarrow binary array (zero-copy
-    memoryview slicing); ``parts`` is an int ndarray aligned with rows.
+    The kernel ``decode_stats`` hands `map_payloads`; payloads are sliced
+    from the Arrow binary column as zero-copy memoryviews.
     """
-    import numpy as np
-    import pyarrow as pa
-
+    clip_ids = batch.column("clip_id").to_pylist()
+    parts = batch.column(part_col).to_numpy(zero_copy_only=False)
+    payloads = batch.column("bytes")
+    codecs = batch.column("codec").to_pylist()
+    decl_sr = batch.column("sr_hz").to_pylist()
+    decl_dur = batch.column("dur_ms").to_pylist()
     n = len(clip_ids)
-    feats = np.zeros((n, n_feat))
+    feats = np.zeros((n, len(FEATURE_NAMES)))
     ok = np.zeros(n, dtype=bool)
     fake = np.zeros(n, dtype=bool)
     probed = np.zeros(n, dtype=bool)  # R068: container-validated, undecodable
@@ -277,7 +278,7 @@ def stats_record_batch(
             dd, dsr = decl_dur[i], decl_sr[i]
             if dd is not None and dd > 0 and dsr is not None and dsr == sr:
                 decoded_ms = len(pcm) * 1000.0 / sr
-                if abs(decoded_ms - dd) > max(dur_tol_ms, abs(dd) * dur_tol_rel):
+                if abs(decoded_ms - dd) > max(DUR_TOL_MS, abs(dd) * DUR_TOL_REL):
                     viol(R_DURATION, parts[i], clip_ids[i],
                          str(round(decoded_ms, 1)), str(dd))
         except NotImplementedError as e:
@@ -304,7 +305,7 @@ def stats_record_batch(
             dd = decl_dur[i]
             cd = meta.get("duration_ms")
             if dd is not None and dd > 0 and cd is not None:
-                tol = max(dur_tol_ms, abs(dd) * dur_tol_rel,
+                tol = max(DUR_TOL_MS, abs(dd) * DUR_TOL_REL,
                           meta.get("duration_grain_ms", 0.0))
                 if abs(cd - dd) > tol:
                     viol(R_CONTAINER, parts[i], clip_ids[i],
@@ -351,7 +352,8 @@ def stats_record_batch(
         sub = feats[sel & ok]
         if len(sub) == 0:
             continue
-        for fi, name, spec in specs:
+        for fi, name in enumerate(FEATURE_NAMES):
+            spec = DEFAULT_BINS[name]
             idx = np.clip(
                 ((sub[:, fi] - spec.lo) / (spec.hi - spec.lo) * spec.n).astype(int),
                 0, spec.n - 1,
@@ -386,53 +388,35 @@ def stats_record_batch(
 def decode_stats(
     df: DataFrame,
     ctx: RunContext,
-    bins: dict[str, BinSpec] | None = None,
-    dur_tol_ms: float = 20.0,
-    dur_tol_rel: float = 0.02,
     strict_codecs: bool = False,
     noise: tuple[float, int] | None = None,
     speech: bool = False,
+    pending_parts: list[int] | None = None,
 ) -> DataFrame:
-    """ONE mapInArrow pass over (clip_id, part_id, bytes, codec, sr_hz,
-    dur_ms): decode + feature-extract each clip, bin features into fixed
-    per-batch histogram partials, and emit R060/R061 violations inline.
+    """ONE Arrow pass over (clip_id, part_id, bytes, codec, sr_hz, dur_ms)
+    of the clips in ``pending_parts`` (all when None): decode +
+    feature-extract each clip, bin features into fixed per-batch histogram
+    partials, and emit R060/R061 violations inline.
 
     Output rows (see _STATS_SCHEMA):
       kind='h' → (part_id, feature, bin, cnt) histogram partial
       kind='v' → (part_id, feature=rule_id, clip_id, observed, expected)
       kind='c' → (part_id, feature='rows', cnt) per-batch row counter
 
-    mapInArrow, not mapInPandas: Arrow binary columns slice as zero-copy
-    memoryviews (pandas would materialize every payload as Python bytes).
-    The downstream groupBy merges 'h'/'c' partials — the shuffle carries
-    ≤ parts×features×bins rows per task, never per-clip rows.
+    `stats_record_batch` over `map_payloads`, which routes the pass from
+    ``df`` itself: a bare parquet scan is read in the Python workers and
+    its payload bytes never cross the JVM→worker socket; any other frame
+    is fed by the JVM. Arrow, not pandas: binary columns slice as
+    zero-copy memoryviews. The downstream groupBy merges 'h'/'c' partials
+    — the shuffle carries ≤ parts×features×bins rows per task, never
+    per-clip rows.
     """
-    bins = bins or DEFAULT_BINS
-    df = ensure_part_id(df, ctx)
     part_col = ctx.part_col
-    cols = ["clip_id", part_col, "bytes", "codec", "sr_hz", "dur_ms"]
-    specs = [(i, name, bins[name]) for i, name in enumerate(FEATURE_NAMES)]
-    n_feat = len(FEATURE_NAMES)
 
-    def gen(batches):
-        from semantic_log_detector_spark.checks.drift import stats_record_batch
-        from semantic_log_detector_spark.functions.arrowio import prefetch_batches
+    def kernel(batch):
+        yield stats_record_batch(batch, part_col, strict_codecs, noise, speech)
 
-        # prefetch: overlap the JVM scan/serialize with decode (the socket
-        # buffer alone is far too small to pipeline ~100 MB batches)
-        for batch in prefetch_batches(batches):
-            yield stats_record_batch(
-                batch.column("clip_id").to_pylist(),
-                np.asarray(batch.column(part_col).to_numpy(zero_copy_only=False)),
-                batch.column("bytes"),
-                batch.column("codec").to_pylist(),
-                batch.column("sr_hz").to_pylist(),
-                batch.column("dur_ms").to_pylist(),
-                specs, n_feat, dur_tol_ms, dur_tol_rel, strict_codecs, noise,
-                speech,
-            )
-
-    return df.select(*cols).mapInArrow(gen, schema=_STATS_SCHEMA)
+    return map_payloads(df, PAYLOAD_COLS, kernel, _STATS_SCHEMA, ctx, pending_parts)
 
 
 # ------------------------------------------------------------------ scoring
@@ -523,14 +507,11 @@ def drift_plan(
     psi_threshold: float = 0.2,
     ks_threshold: float = 0.2,
     baseline: DataFrame | None = None,
-    bins: dict[str, BinSpec] | None = None,
     pending_parts: list[int] | None = None,
     strict_codecs: bool = False,
     noise: tuple[float, int] | None = None,
     transcripts: DataFrame | None = None,
     wps_range: tuple[float, float] = (0.4, 8.0),
-    min_words_fast: int = 3,
-    min_speech_slow_s: float = 2.0,
 ) -> CheckPlan:
     """Full drift + decode check, as a :class:`CheckPlan` for the shared
     verdict assembly (``drift_check`` runs it on its own). Verdicts per
@@ -541,10 +522,10 @@ def drift_plan(
     decoded-PCM twin of the metadata chars/sec row rule (R018). The decode
     pass emits each clip's VAD speech time (kind='s' rows, zero extra FFT)
     and the transcript's whitespace word count — computed JVM-side — must
-    be plausible against it: a transcript with ≥ ``min_words_fast`` words
+    be plausible against it: a transcript with ≥ MIN_WORDS_FAST words
     needs speech time ≥ words/max_wps (catches transcripts paired with
     silence or the wrong clip — metadata rules can't see decoded silence),
-    and ≥ ``min_speech_slow_s`` s of measured speech needs ≥
+    and ≥ MIN_SPEECH_SLOW_S s of measured speech needs ≥
     min_wps × speech_s words (catches truncated/empty transcripts under
     speechy audio). Inner join on clip_id: clips with no transcript row are
     the referential check's finding, not double-reported here. Bounds are
@@ -563,38 +544,14 @@ def drift_plan(
     judges R050/R051/R062 there at every part count; the sparse decode
     violations stay a Spark plan over the cached pass.
 
-    The heavy pass routes itself from ``clips``: when it is a bare parquet
-    scan (``sources/payload_scan.py::bare_scan_files``), the Python-native
-    row-group reader runs it over those files and payload bytes never
-    cross the JVM→worker socket; any other frame goes through
-    ``decode_stats``. So pass the caller's frame as it came — a column
-    added to it (``ensure_part_id``) makes it no longer a bare scan.
+    The heavy pass routes itself from ``clips`` (``decode_stats``): a bare
+    parquet scan is read by the Python-native row-group reader, so pass
+    the caller's frame as it came — a column added to it
+    (``ensure_part_id``) makes it no longer a bare scan.
     ``pending_parts`` scopes either route to those parts (wave resume)."""
-    from ..sources.payload_scan import (
-        PAYLOAD_COLS,
-        bare_scan_files,
-        payload_stats_scan,
-        stored_part_ids_match,
-    )
-
     speech = transcripts is not None
-    files = bare_scan_files(clips, PAYLOAD_COLS)
-    if files and ctx.part_col in clips.columns and not stored_part_ids_match(files, ctx):
-        logging.getLogger(__name__).warning(
-            "stored %s does not match pmod(xxhash64(clip_id), %d); the drift "
-            "payload pass falls back to the JVM-fed decode", ctx.part_col,
-            ctx.num_parts)
-        files = None
-    if files:
-        stats = payload_stats_scan(
-            clips.sparkSession, files, ctx, bins, pending_parts,
-            strict_codecs=strict_codecs, noise=noise, speech=speech)
-    else:
-        clips = ensure_part_id(clips, ctx)
-        if pending_parts is not None:
-            clips = clips.filter(F.col(ctx.part_col).isin(pending_parts))
-        stats = decode_stats(clips, ctx, bins, strict_codecs=strict_codecs,
-                             noise=noise, speech=speech)
+    stats = decode_stats(clips, ctx, strict_codecs=strict_codecs, noise=noise,
+                         speech=speech, pending_parts=pending_parts)
     stats.persist()
     try:
         # Arrow, not Row objects: at 8192 parts the collect is ≈2M rows
@@ -707,9 +664,9 @@ def drift_plan(
                 (F.col("cnt") / 1000.0).alias("speech_s"))
             # multiplication forms, not words/speech_s: ANSI mode + no
             # div-by-zero branch needed for silent clips (speech_s = 0)
-            too_fast = (F.col("words") >= min_words_fast) & (
+            too_fast = (F.col("words") >= MIN_WORDS_FAST) & (
                 F.col("words") > F.col("speech_s") * max_wps)
-            too_slow = (F.col("speech_s") >= min_speech_slow_s) & (
+            too_slow = (F.col("speech_s") >= MIN_SPEECH_SLOW_S) & (
                 F.col("words") < F.col("speech_s") * min_wps)
             sr_viols = sp.join(wc, "clip_id").filter(too_fast | too_slow).select(
                 F.lit(ctx.run_id).alias("run_id"),

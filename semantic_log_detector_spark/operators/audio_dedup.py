@@ -6,7 +6,7 @@ shares no bytes and no transcript guarantee. The reference has no audio
 dedup (its payloads are log lines); this closes the dedup ladder over the
 graft's payload axis with the same machinery the text ladder uses:
 
-1. ``audio_fingerprint`` — one mapInPandas pass decodes each payload
+1. ``audio_fingerprint`` — one Arrow pass decodes each payload
    (real codecs only: `functions/audio.py` registry) and computes a
    60-bit **melody fingerprint**: the clip is cut into 15 equal segments,
    each segment's centered 512-sample Hann window is FFT'd, its energy is
@@ -26,16 +26,15 @@ graft's payload axis with the same machinery the text ladder uses:
    with the text SimHash path (`dedup.hamming60_pairs`): 4 bands × 15
    bits, complete for k ≤ 3, bucket guard surfaced.
 
-Scale shape: the payload pass is the same one-pass mapInPandas streaming
-shape as the drift check (payloads never cached, only 8-byte fingerprints
-shuffle); the pair search shuffles (id, sh) pairs only — at 10^12 clips
-the heavy bytes stay in the scan stage.
+Scale shape: the payload pass runs through the drift check's reader
+(`sources/payload_scan.py::map_payloads`: payloads never cached, only
+8-byte fingerprints shuffle); the pair search shuffles (id, sh) pairs
+only — at 10^12 clips the heavy bytes stay in the scan stage.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -160,27 +159,32 @@ def audio_fingerprint(
     ``passthrough`` columns are carried to the output unchanged (e.g. the
     event-time column for the streaming twin).
 
-    When ``df`` is a PURE parquet scan (``bare_scan_files``), the pass
-    runs as the Python-native row-group reader (round 6 — the drift
-    check's payload_scan device): payload bytes never cross the
-    JVM→worker socket; descriptors go in, 8-byte fingerprints come out.
-    Transformed inputs fall back to the JVM-fed mapInPandas path; both
-    run the same kernel, so rows are identical (tested)."""
-    cols = [id_col, bytes_col, codec_col, *passthrough]
+    The pass is one kernel over `sources/payload_scan.py::map_payloads`:
+    a bare parquet scan is read by the Python-native row-group reader, so
+    payload bytes never cross the JVM→worker socket; any other frame is
+    fed by the JVM. Both routes hand the kernel the same rows (tested)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
-    def fp_batch(ids, payloads, codecs):
-        """(fps, fakes) for one batch of raw payloads — shared kernel."""
-        import pyarrow as pa
+    from ..sources.payload_scan import map_payloads
 
+    # a passthrough column read from parquet may carry another Arrow type
+    # than the JVM sends for it (Spark's INT96 timestamps read as ns)
+    pass_types = [to_arrow_type(df.schema[c].dataType) for c in passthrough]
+
+    def kernel(rb):
         from ..functions.audio import decode_clip_ex, predecode_batch
 
-        # batch path for adpcm (predecode_batch wants a pyarrow array);
-        # values are (pcm, sr) or a deferred per-row Exception
-        pre = predecode_batch(pa.array(payloads, type=pa.binary()), codecs)
+        ids = [str(x) for x in rb.column(id_col).to_pylist()]
+        payloads = rb.column(bytes_col)
+        codecs = rb.column(codec_col).to_pylist()
+        # batch path for adpcm; values are (pcm, sr) or a deferred
+        # per-row Exception
+        pre = predecode_batch(payloads, codecs)
         pcms: list[np.ndarray | None] = []
         srs: list[int] = []
         fakes: list[bool] = []
-        for i, (buf, codec) in enumerate(zip(payloads, codecs)):
+        for i, codec in enumerate(codecs):
             try:
                 hit = pre.get(i)
                 if isinstance(hit, Exception):
@@ -189,7 +193,7 @@ def audio_fingerprint(
                     pcm, sr = hit
                     fake = False
                 else:
-                    pcm, sr, fake = decode_clip_ex(bytes(buf), codec)
+                    pcm, sr, fake = decode_clip_ex(bytes(payloads[i].as_py()), codec)
                 pcms.append(pcm)
                 srs.append(sr)
                 fakes.append(bool(fake))
@@ -197,55 +201,17 @@ def audio_fingerprint(
                 pcms.append(None)
                 srs.append(0)
                 fakes.append(False)
-        return _fingerprint_rows(pcms, srs), fakes
+        yield pa.record_batch(
+            [pa.array(ids, pa.string()),
+             pa.array(_fingerprint_rows(pcms, srs), pa.int64()),
+             pa.array(fakes, pa.bool_()),
+             *[rb.column(c).cast(t) for c, t in zip(passthrough, pass_types)]],
+            names=["id", "fp", "fake", *passthrough])
 
     schema = "id string, fp long, fake boolean"
     for c in passthrough:
         schema += f", {c} {df.schema[c].dataType.simpleString()}"
-
-    from ..sources.payload_scan import bare_scan_files, row_group_frame
-
-    files = bare_scan_files(df, cols)
-    if files:
-        desc = row_group_frame(df.sparkSession, files)
-
-        def gen_scan(batches):
-            import pyarrow.parquet as pq
-
-            for b in batches:
-                for file, group in zip(b["file"], b["row_group"]):
-                    pf = pq.ParquetFile(file)
-                    for rb in pf.iter_batches(batch_size=1024,
-                                              row_groups=[int(group)],
-                                              columns=cols):
-                        ids = [str(x) for x in rb.column(id_col).to_pylist()]
-                        fps, fakes = fp_batch(
-                            ids, rb.column(bytes_col).to_pylist(),
-                            rb.column(codec_col).to_pylist())
-                        out = {"id": pd.Series(ids, dtype=object),
-                               "fp": pd.array(fps, dtype="Int64"),
-                               "fake": fakes}
-                        for c in passthrough:
-                            out[c] = rb.column(c).to_pandas()
-                        yield pd.DataFrame(out)
-
-        return desc.mapInPandas(gen_scan, schema=schema)
-
-    def gen(batches):
-        for pdf in batches:
-            fps, fakes = fp_batch(
-                pdf[id_col].astype(str).tolist(),
-                pdf[bytes_col].tolist(), pdf[codec_col].tolist())
-            out = {
-                "id": pdf[id_col].astype(str),
-                "fp": pd.array(fps, dtype="Int64"),
-                "fake": fakes,
-            }
-            for c in passthrough:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
-
-    return df.select(*cols).mapInPandas(gen, schema=schema)
+    return map_payloads(df, [id_col, bytes_col, codec_col, *passthrough], kernel, schema)
 
 
 def audio_dup_pairs(

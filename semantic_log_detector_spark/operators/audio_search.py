@@ -11,7 +11,8 @@ is a fragment, not the whole file.
 
 Design (landmark voting, the Wang/Shazam scheme re-expressed for Spark):
 
-1. ``audio_landmarks`` — one mapInPandas pass per table: decode (real
+1. ``audio_landmarks`` — one Arrow pass per table through the shared
+   payload reader (`sources/payload_scan.py::map_payloads`): decode (real
    codec registry), canonicalize to FP_SR, compute the dominant log-band
    per 512-sample window on a fixed hop, run-length-compress the band
    sequence into note events, and emit one 20-bit key per consecutive
@@ -42,7 +43,7 @@ Strength Audio Search Algorithm" (ISMIR 2003).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -82,9 +83,9 @@ def _event_keys(bands: np.ndarray, times: np.ndarray):
     return keys, et[:-2].astype(np.int64)
 
 
-def _landmark_batch(ids: list, payloads: list, codecs: list, hop: int) -> pd.DataFrame:
-    """Shared landmark kernel for ONE batch of clips — identical rows from
-    the JVM-fed mapInPandas path and the Python-native row-group reader.
+def _landmark_batch(ids: list, payloads: pa.BinaryArray, codecs: list,
+                    hop: int) -> pa.RecordBatch:
+    """Landmark kernel for ONE batch of clips (`audio_landmarks`).
 
     STREAMED per-clip processing in float32. The previous shape (gather
     every row's windows into one batch matrix, then one rfft over all of
@@ -94,8 +95,6 @@ def _landmark_batch(ids: list, payloads: list, codecs: list, hop: int) -> pd.Dat
     for a pass whose compute is ~2 s/task). Per-clip float32 chunks keep
     the working set cache-sized; measured 65 s → single-digit seconds for
     the 5k-clip / 11-hour bench corpus."""
-    import pyarrow as pa
-
     from ..functions.audio import (
         decode_clip_ex,
         predecode_batch,
@@ -104,11 +103,11 @@ def _landmark_batch(ids: list, payloads: list, codecs: list, hop: int) -> pd.Dat
 
     masks = _band_masks(FP_SR)
     half = FP_WIN // 2
-    pre = predecode_batch(pa.array(payloads, type=pa.binary()), codecs)
+    pre = predecode_batch(payloads, codecs)
     win32 = np.hanning(FP_WIN).astype(np.float32)
     offs = np.arange(-half, half)[None, :]
     out = {"id": [], "key": [], "t": [], "fake": []}
-    for i, (buf, codec) in enumerate(zip(payloads, codecs)):
+    for i, codec in enumerate(codecs):
         try:
             hit = pre.get(i)
             if isinstance(hit, Exception):
@@ -117,7 +116,7 @@ def _landmark_batch(ids: list, payloads: list, codecs: list, hop: int) -> pd.Dat
                 pcm, sr = hit
                 fake = False
             else:
-                pcm, sr, fake = decode_clip_ex(bytes(buf), codec)
+                pcm, sr, fake = decode_clip_ex(bytes(payloads[i].as_py()), codec)
         except Exception:
             continue
         if pcm is None or len(pcm) == 0 or sr <= 0:
@@ -144,12 +143,10 @@ def _landmark_batch(ids: list, payloads: list, codecs: list, hop: int) -> pd.Dat
         out["key"].extend(keys.tolist())
         out["t"].extend(anchors.tolist())
         out["fake"].extend([bool(fake)] * len(keys))
-    return pd.DataFrame({
-        "id": pd.Series(out["id"], dtype=object),
-        "key": pd.Series(out["key"], dtype="int64"),
-        "t": pd.Series(out["t"], dtype="int64"),
-        "fake": pd.Series(out["fake"], dtype=bool),
-    })
+    return pa.record_batch(
+        [pa.array(out["id"], pa.string()), pa.array(out["key"], pa.int64()),
+         pa.array(out["t"], pa.int64()), pa.array(out["fake"], pa.bool_())],
+        names=["id", "key", "t", "fake"])
 
 
 _LM_SCHEMA = "id string, key long, t long, fake boolean"
@@ -168,50 +165,20 @@ def audio_landmarks(
     emit no rows; ``fake`` marks fake-decoder rows (exclude downstream —
     `audio_snippet_search` does by default).
 
-    When ``df`` is a PURE parquet scan (``bare_scan_files``), the pass
-    runs as the Python-native row-group reader (round 6, the drift
-    check's payload_scan device): payload bytes never cross the
-    JVM→worker socket — the socket carries (file, row_group) descriptors
-    in and 20-byte landmark rows out. Any transformed input falls back
-    to the JVM-fed mapInPandas path; both run `_landmark_batch`, so rows
-    are identical (tested)."""
-    cols = [id_col, bytes_col, codec_col]
+    One kernel over `sources/payload_scan.py::map_payloads`: a bare
+    parquet scan is read by the Python-native row-group reader, so the
+    socket carries (file, row_group) descriptors in and 20-byte landmark
+    rows out; any other frame is fed by the JVM. Both routes hand the
+    kernel the same rows (tested)."""
+    from ..sources.payload_scan import map_payloads
+
     hop = int(FP_SR * hop_ms / 1000.0)
 
-    from ..sources.payload_scan import bare_scan_files, row_group_frame
+    def kernel(rb):
+        yield _landmark_batch([str(x) for x in rb.column(id_col).to_pylist()],
+                              rb.column(bytes_col), rb.column(codec_col).to_pylist(), hop)
 
-    files = bare_scan_files(df, cols)
-    if files:
-        desc = row_group_frame(df.sparkSession, files)
-
-        def gen_scan(batches):
-            import pyarrow.parquet as pq
-
-            for b in batches:
-                for file, group in zip(b["file"], b["row_group"]):
-                    pf = pq.ParquetFile(file)
-                    for rb in pf.iter_batches(batch_size=1024,
-                                              row_groups=[int(group)],
-                                              columns=cols):
-                        yield _landmark_batch(
-                            [str(x) for x in rb.column(id_col).to_pylist()],
-                            rb.column(bytes_col).to_pylist(),
-                            rb.column(codec_col).to_pylist(),
-                            hop,
-                        )
-
-        return desc.mapInPandas(gen_scan, schema=_LM_SCHEMA)
-
-    def gen(batches):
-        for pdf in batches:
-            yield _landmark_batch(
-                pdf[id_col].astype(str).tolist(),
-                pdf[bytes_col].tolist(),
-                pdf[codec_col].tolist(),
-                hop,
-            )
-
-    return df.select(*cols).mapInPandas(gen, schema=_LM_SCHEMA)
+    return map_payloads(df, [id_col, bytes_col, codec_col], kernel, _LM_SCHEMA)
 
 
 def audio_snippet_search(

@@ -57,6 +57,24 @@ METADATA_CHECKS = ("row_rules", "stats", "uniqueness", "referential",
                    "frequency", "transcript_quality")
 
 
+# The batched wave action runs with AQE off. The suite's verdict/violation
+# plans have fixed shapes (per-part aggregates over a cached slice, one
+# equi-join) that the static planner already gets right; AQE's
+# stage-by-stage re-planning serializes the N independent check subtrees
+# inside the one batched action (measured 3.4× on the collect: 7.7 s →
+# 2.3 s at 60k clips / 32 cores). part_id is pmod(xxhash64) — uniform by
+# construction — so skew splitting buys nothing here.
+#
+# Shuffle-partition count for the batched wave action. The frames shuffled
+# there are tiny by construction — verdicts are at most parts×rules rows
+# and violations are example-capped — so the session default (sized for
+# the big dedup/join queries) buys nothing and costs ~0.25 s of
+# task-launch latency per exchange × ~10 exchanges. Measured at 60k clips
+# / 32 cores: 8 partitions takes the combined collect from 6.8 s to
+# ~3.7 s. Session settings are untouched outside the action window.
+WAVE_SHUFFLE_PARTITIONS = 8
+
+
 @dataclass(frozen=True)
 class SuiteConfig:
     num_parts: int = 64
@@ -79,24 +97,6 @@ class SuiteConfig:
     # reported per partition in the R062 verdict (never silent)
     strict_codecs: bool = False
     waves: int = 1
-    # AQE during the batched wave actions. The suite's verdict/violation
-    # plans have fixed shapes (per-part aggregates over a cached slice, one
-    # equi-join) that the static planner already gets right; AQE's
-    # stage-by-stage re-planning serializes the N independent check
-    # subtrees inside the one batched action (measured 3.4× on the
-    # collect: 7.7 s → 2.3 s at 60k clips / 32 cores). part_id is
-    # pmod(xxhash64) — uniform by construction — so skew splitting buys
-    # nothing here. Set True if the transcript join key is pathologically
-    # skewed. Session AQE settings are untouched outside the action window.
-    adaptive_wave_exec: bool = False
-    # shuffle-partition count for the batched wave action. The frames
-    # shuffled here are tiny by construction — verdicts are at most
-    # parts×rules rows and violations are example-capped — so the session
-    # default (sized for the big dedup/join queries) buys nothing and costs
-    # ~0.25 s of task-launch latency per exchange × ~10 exchanges.
-    # Measured at 60k clips / 32 cores: 8 partitions takes the combined
-    # collect from 6.8 s to ~3.7 s. None = leave the session value.
-    wave_shuffle_partitions: int | None = 8
     stats_expectations: tuple = tuple(
         (c, tuple(exps)) for c, exps in DEFAULT_EXPECTATIONS.items()
     )
@@ -221,7 +221,7 @@ def run_suite(
             n_scan = meta_slice.rdd.getNumPartitions()
         except Exception:
             n_scan = 0
-        n_cache_parts = max(cfg.wave_shuffle_partitions or 8, n_scan // 8)
+        n_cache_parts = max(WAVE_SHUFFLE_PARTITIONS, n_scan // 8)
         wave_meta = meta_slice.coalesce(n_cache_parts).cache()
 
         tr_part = F.pmod(F.xxhash64("clip_id"), F.lit(cfg.num_parts)).cast("int")
@@ -322,11 +322,9 @@ def run_suite(
                 sp_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
                 sparse = None
                 try:
-                    if not cfg.adaptive_wave_exec:
-                        spark.conf.set("spark.sql.adaptive.enabled", "false")
-                    if cfg.wave_shuffle_partitions is not None:
-                        spark.conf.set("spark.sql.shuffle.partitions",
-                                       str(cfg.wave_shuffle_partitions))
+                    spark.conf.set("spark.sql.adaptive.enabled", "false")
+                    spark.conf.set("spark.sql.shuffle.partitions",
+                                   str(WAVE_SHUFFLE_PARTITIONS))
                     t0 = time.time()
                     verdict_rows, local_viols, sparse = execute(
                         [plan for _, _, plan, _ in built], ctx)

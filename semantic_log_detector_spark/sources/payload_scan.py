@@ -1,6 +1,9 @@
-"""Python-native parquet payload scan for the drift check.
+"""The one payload reader: every payload pass (the drift decode, audio
+fingerprints, audio landmarks, the streaming payload rules) hands
+`map_payloads` a per-batch kernel, and `map_payloads` picks the route and
+feeds it.
 
-Why this exists: Spark 4's single-threaded Python runner caps JVM→worker
+Why two routes: Spark 4's single-threaded Python runner caps JVM→worker
 pipelining at the kernel socket buffer (~200 KB against ~100 MB Arrow
 batches of audio), so a `scan → mapInArrow(decode)` plan pays
 scan+serialize+transfer *in series* with the decode — measured 14.5 s of
@@ -9,36 +12,41 @@ drift check drops to ~0.69 because the feed does not parallelize past the
 runner. At 100 TB the payload bytes would cross the JVM→Python socket
 twice for zero benefit.
 
-The fix is the pattern Spark 4 itself introduced with the Python Data
-Source API: move the *reader* into the Python worker. Here the driver
-lists (file, row_group) descriptors from the parquet footerss, Spark
-distributes the descriptors (a few KB), and each Arrow worker opens its
-row group with pyarrow, streams 1024-row batches of only the needed
-columns, computes the engine partition key with the bit-exact xxhash64
-twin (functions/sparkhash.py), and runs the SAME per-batch kernel
-(checks/drift.py::stats_record_batch) the JVM-fed path uses. Payload
-bytes never touch the JVM; the socket carries descriptors in and tiny
-histogram/violation rows out.
+So a bare parquet scan (`bare_scan_files`) moves the *reader* into the
+Python worker, the pattern Spark 4 itself introduced with the Python Data
+Source API: the driver lists (file, row_group) descriptors from the
+parquet footers, Spark distributes the descriptors (a few KB), and each
+Arrow worker opens its row group with pyarrow, streams ``BATCH_ROWS``-row
+batches of only the needed columns, computes the engine partition key with the
+bit-exact xxhash64 twin (functions/sparkhash.py) and runs the kernel.
+Payload bytes never touch the JVM; the socket carries descriptors in and
+the kernel's small rows out. Any other frame — filtered, transformed,
+in-memory, streaming — is fed by ``df.select(cols).mapInArrow`` with an
+in-worker read-ahead (functions/arrowio.py::prefetch_batches).
 
-Correctness contract (tested): for a pure parquet-scan input, output rows
-== decode_stats(df) rows exactly. The route is picked from the input
-frame itself (`bare_scan_files`), never from a path the caller passes: a
-filtered/transformed frame must use the general path, since the raw
-files bypass its plan. Row-group granularity preserves Spark's split
-parallelism; pending-partition filtering (wave resume) happens on the
-worker-computed part_id mask before decode.
+Correctness contract (tested): both routes hand the kernel the same rows,
+so a pass's output over a bare scan equals its output over any
+transformed frame of the same rows. The route is picked from the input
+frame itself, never from a path the caller passes: a filtered frame must
+use the JVM route, since the raw files bypass its plan. Row-group
+granularity preserves Spark's split parallelism; pending-partition
+filtering (wave resume) happens on the worker-computed part key mask
+before the kernel runs.
 """
 
 from __future__ import annotations
 
+import logging
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ..checks.base import RunContext
-from ..checks.drift import DEFAULT_BINS, FEATURE_NAMES, _STATS_SCHEMA, BinSpec
+from ..checks.base import RunContext, ensure_part_id
 
 PAYLOAD_COLS = ["clip_id", "bytes", "codec", "sr_hz", "dur_ms"]
+# rows per batch the row-group reader hands a kernel
+BATCH_ROWS = 1024
 
 
 # above this many files, footer listing runs as a Spark job instead of
@@ -194,74 +202,82 @@ def stored_part_ids_match(files: list[str], ctx: RunContext) -> bool:
     return True
 
 
-def payload_stats_scan(
-    spark: SparkSession,
-    files: list[str],
-    ctx: RunContext,
-    bins: dict[str, BinSpec] | None = None,
-    pending_parts: list[int] | None = None,
-    dur_tol_ms: float = 20.0,
-    dur_tol_rel: float = 0.02,
-    batch_rows: int = 1024,
-    strict_codecs: bool = False,
-    noise: tuple[float, int] | None = None,
-    speech: bool = False,
-) -> DataFrame:
-    """decode_stats-equivalent DataFrame, read Python-side from ``files``.
+def map_payloads(df: DataFrame, cols: list[str], fn, schema: str,
+                 ctx: RunContext | None = None,
+                 pending_parts: list[int] | None = None) -> DataFrame:
+    """``fn`` over ``df``'s ``cols`` as Arrow record batches: ``fn`` takes
+    one batch and returns (or yields) the batches it emits, of ``schema``.
 
-    One Spark task per parquet row group; workers stream ``batch_rows``-row
-    slices of the payload columns directly from the file (no JVM transfer),
-    filter to ``pending_parts`` (wave resume) via the worker-computed
-    part key, and emit _STATS_SCHEMA rows.
-    """
-    bins = bins or DEFAULT_BINS
-    specs = [(i, name, bins[name]) for i, name in enumerate(FEATURE_NAMES)]
-    n_feat = len(FEATURE_NAMES)
-    num_parts = ctx.num_parts
-    # worker-computed keys lie in [0, num_parts): a full set filters nothing
-    pend = (sorted(set(pending_parts)) if pending_parts is not None
-            and len(set(pending_parts)) < num_parts else None)
+    The one route decision and both readers of every payload pass. A bare
+    parquet scan (`bare_scan_files`) is read by the row-group reader, one
+    task per row group, ``BATCH_ROWS`` rows per batch; any other frame by
+    ``df.select(cols).mapInArrow`` with an in-worker read-ahead.
 
-    desc = row_group_frame(spark, files)
+    With ``ctx``, every batch also carries ``ctx.part_col`` and only the
+    rows of ``pending_parts`` (all parts when None) reach ``fn``: the
+    row-group reader computes the key in the worker (the xxhash64 twin of
+    `ensure_part_id`), the JVM route takes `ensure_part_id`'s column. A
+    frame that carries the column keeps the JVM route unless the stored
+    values match the computed ones (`stored_part_ids_match`)."""
+    files = bare_scan_files(df, cols)
+    if (files and ctx is not None and ctx.part_col in df.columns
+            and not stored_part_ids_match(files, ctx)):
+        logging.getLogger(__name__).warning(
+            "stored %s does not match pmod(xxhash64(clip_id), %d); the payload "
+            "pass falls back to the JVM-fed reader", ctx.part_col, ctx.num_parts)
+        files = None
+    if files:
+        # worker-computed keys lie in [0, num_parts): a full set filters nothing
+        pend = (sorted(set(pending_parts)) if ctx is not None and pending_parts is not None
+                and len(set(pending_parts)) < ctx.num_parts else None)
 
-    def gen(batches):
-        import numpy as np
-        import pyarrow.parquet as pq
+        def read(batches):
+            import numpy as np
+            import pyarrow as pa
+            import pyarrow.parquet as pq
 
-        from semantic_log_detector_spark.checks.drift import stats_record_batch
-        from semantic_log_detector_spark.functions.sparkhash import xxhash64
+            from semantic_log_detector_spark.functions.sparkhash import xxhash64
 
-        pend_set = set(pend) if pend is not None else None
-        for b in batches:
-            for file, group in zip(b.column("file").to_pylist(),
-                                   b.column("row_group").to_pylist()):
-                pf = pq.ParquetFile(file)
-                for rb in pf.iter_batches(batch_size=batch_rows,
-                                          row_groups=[group], columns=PAYLOAD_COLS):
-                    clip_ids = rb.column("clip_id").to_pylist()
-                    parts = np.fromiter(
-                        (xxhash64(c.encode("utf-8")) % num_parts for c in clip_ids),
-                        dtype=np.int64, count=len(clip_ids),
-                    )
-                    payloads = rb.column("bytes")
-                    codecs = rb.column("codec").to_pylist()
-                    decl_sr = rb.column("sr_hz").to_pylist()
-                    decl_dur = rb.column("dur_ms").to_pylist()
-                    if pend_set is not None:
-                        keep = [i for i, p in enumerate(parts) if int(p) in pend_set]
-                        if not keep:
-                            continue
-                        if len(keep) < len(clip_ids):
-                            clip_ids = [clip_ids[i] for i in keep]
-                            codecs = [codecs[i] for i in keep]
-                            decl_sr = [decl_sr[i] for i in keep]
-                            decl_dur = [decl_dur[i] for i in keep]
-                            payloads = payloads.take(keep)
-                            parts = parts[keep]
-                    yield stats_record_batch(
-                        clip_ids, parts, payloads, codecs, decl_sr, decl_dur,
-                        specs, n_feat, dur_tol_ms, dur_tol_rel, strict_codecs,
-                        noise, speech,
-                    )
+            for b in batches:
+                for file, group in zip(b.column("file").to_pylist(),
+                                       b.column("row_group").to_pylist()):
+                    for rb in pq.ParquetFile(file).iter_batches(
+                            batch_size=BATCH_ROWS, row_groups=[group], columns=cols):
+                        if ctx is not None:
+                            parts = np.fromiter(
+                                (xxhash64(c.encode("utf-8")) % ctx.num_parts
+                                 for c in rb.column("clip_id").to_pylist()),
+                                dtype=np.int32, count=rb.num_rows)
+                            rb = rb.append_column(ctx.part_col, pa.array(parts))
+                            if pend is not None:
+                                keep = np.isin(parts, pend)
+                                if not keep.any():
+                                    continue
+                                if not keep.all():
+                                    rb = rb.filter(pa.array(keep))
+                        yield from fn(rb)
 
-    return desc.mapInArrow(gen, schema=_STATS_SCHEMA)
+        return row_group_frame(df.sparkSession, files).mapInArrow(read, schema)
+
+    if ctx is not None:
+        df = ensure_part_id(df, ctx)
+        if pending_parts is not None:
+            df = df.filter(F.col(ctx.part_col).isin(pending_parts))
+
+    def feed(batches):
+        from semantic_log_detector_spark.functions.arrowio import prefetch_batches
+
+        for rb in prefetch_batches(batches):
+            yield from fn(rb)
+
+    return df.select(*cols, *([] if ctx is None else [ctx.part_col])).mapInArrow(
+        feed, schema)
+
+
+def payload_stats_scan(spark: SparkSession, files: list[str], ctx: RunContext,
+                       **kwargs) -> DataFrame:
+    """``decode_stats`` over the parquet ``files`` — kept only as a name
+    the benchmark's tracer wraps; the engine calls ``decode_stats``."""
+    from ..checks import drift
+
+    return drift.decode_stats(spark.read.parquet(*files), ctx, **kwargs)

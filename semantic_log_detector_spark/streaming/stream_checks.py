@@ -111,8 +111,8 @@ def stream_audio_dups(
     max_ids: int = 20,
 ) -> DataFrame:
     """Online acoustic content-dup detection: the batch melody-fingerprint
-    kernel (`operators/audio_dedup.audio_fingerprint` — stateless
-    mapInPandas, so Structured Streaming runs it unchanged per
+    kernel (`operators/audio_dedup.audio_fingerprint` — a stateless
+    mapInArrow, so Structured Streaming runs it unchanged per
     micro-batch) keyed into the same bounded-state window/watermark shape
     as `stream_duplicate_ids`.
 
@@ -177,18 +177,17 @@ def stream_payload_violations(
     stream_df: DataFrame,
     ctx: RunContext,
     wps_range: tuple[float, float] | None = None,
-    min_words_fast: int = 3,
-    min_speech_slow_s: float = 2.0,
 ) -> DataFrame:
     """Per-clip payload violations (R060 decode, R061 duration, R063
     clipping, R064 silence, R065 DC offset, R066 bandwidth) on a STREAM
     of clips.
 
-    Stateless: ``checks.drift.decode_stats`` is a mapInArrow kernel, which
-    Structured Streaming runs unchanged per micro-batch — the exact batch
-    rule code (same thresholds, same one-pass decode) emitting the sparse
-    violation rows only. Pair with ``stateful.stream_feature_drift`` for
-    the distribution-level signal; this is the per-clip level.
+    Stateless: ``checks.drift.decode_stats`` is an Arrow kernel over
+    `sources/payload_scan.py::map_payloads`, which Structured Streaming
+    runs unchanged per micro-batch — the exact batch rule code (same
+    thresholds, same one-pass decode) emitting the sparse violation rows
+    only. Pair with ``stateful.stream_feature_drift`` for the
+    distribution-level signal; this is the per-clip level.
 
     ``wps_range`` switches on the R067 speech-rate twin when the stream
     rows carry a ``transcript`` column inline (the input-table shape):
@@ -201,83 +200,65 @@ def stream_payload_violations(
     Duplicate clip_ids inside one micro-batch evaluate against one
     measured speech time (duplicate ids are the dup-id check's finding).
     """
-    from ..checks.drift import R_SPEECH_RATE, decode_stats
+    from ..checks.drift import (
+        _STATS_SCHEMA,
+        MIN_SPEECH_SLOW_S,
+        MIN_WORDS_FAST,
+        R_SPEECH_RATE,
+        decode_stats,
+        stats_record_batch,
+    )
+    from ..sources.payload_scan import PAYLOAD_COLS, map_payloads
 
-    speech = wps_range is not None and "transcript" in stream_df.columns
-    if not speech:
+    if wps_range is None or "transcript" not in stream_df.columns:
         stats = decode_stats(stream_df, ctx)
     else:
-        from ..checks.base import ensure_part_id
-        from ..checks.drift import (
-            _STATS_SCHEMA,
-            DEFAULT_BINS,
-            FEATURE_NAMES,
-        )
-
-        df = ensure_part_id(stream_df, ctx)
         part_col = ctx.part_col
-        cols = ["clip_id", part_col, "bytes", "codec", "sr_hz", "dur_ms",
-                "transcript"]
-        specs = [(i, name, DEFAULT_BINS[name])
-                 for i, name in enumerate(FEATURE_NAMES)]
-        n_feat = len(FEATURE_NAMES)
         min_wps, max_wps = wps_range
 
-        def gen(batches):
-            import numpy as np
+        def kernel(batch):
             import pyarrow as pa
 
-            from semantic_log_detector_spark.checks.drift import (
-                stats_record_batch,
+            rb = stats_record_batch(batch, part_col, speech=True)
+            yield rb
+            kinds = rb.column("kind").to_pylist()
+            sids = rb.column("clip_id").to_pylist()
+            cnts = rb.column("cnt").to_pylist()
+            speech_ms = {sids[i]: cnts[i]
+                         for i in range(len(kinds)) if kinds[i] == "s"}
+            out: list[tuple] = []
+            for cid, part, txt in zip(batch.column("clip_id").to_pylist(),
+                                      batch.column(part_col).to_pylist(),
+                                      batch.column("transcript").to_pylist()):
+                ms = speech_ms.get(cid)
+                if ms is None:  # undecodable/fake: not evaluated
+                    continue
+                words = len(txt.split()) if txt else 0
+                s = ms / 1000.0
+                fast = words >= MIN_WORDS_FAST and words > s * max_wps
+                slow = s >= MIN_SPEECH_SLOW_S and words < s * min_wps
+                if fast or slow:
+                    out.append((int(part), cid,
+                                f"words={words} speech_s={round(s, 2)}"))
+            yield pa.record_batch(
+                [
+                    pa.array(["v"] * len(out), type=pa.string()),
+                    pa.array([p for p, _, _ in out], type=pa.int32()),
+                    pa.array([R_SPEECH_RATE] * len(out), type=pa.string()),
+                    pa.array([None] * len(out), type=pa.int32()),
+                    pa.array([None] * len(out), type=pa.int64()),
+                    pa.array([c for _, c, _ in out], type=pa.string()),
+                    pa.array([o for _, _, o in out], type=pa.string()),
+                    pa.array(
+                        [f"{min_wps} <= words/speech_s <= {max_wps}"] * len(out),
+                        type=pa.string()),
+                ],
+                names=["kind", "part_id", "feature", "bin", "cnt",
+                       "clip_id", "observed", "expected"],
             )
 
-            for batch in batches:
-                clip_ids = batch.column("clip_id").to_pylist()
-                parts = np.asarray(
-                    batch.column(part_col).to_numpy(zero_copy_only=False))
-                rb = stats_record_batch(
-                    clip_ids, parts, batch.column("bytes"),
-                    batch.column("codec").to_pylist(),
-                    batch.column("sr_hz").to_pylist(),
-                    batch.column("dur_ms").to_pylist(),
-                    specs, n_feat, speech=True)
-                yield rb
-                kinds = rb.column("kind").to_pylist()
-                sids = rb.column("clip_id").to_pylist()
-                cnts = rb.column("cnt").to_pylist()
-                speech_ms = {sids[i]: cnts[i]
-                             for i in range(len(kinds)) if kinds[i] == "s"}
-                out: list[tuple] = []
-                for cid, part, txt in zip(
-                        clip_ids, parts, batch.column("transcript").to_pylist()):
-                    ms = speech_ms.get(cid)
-                    if ms is None:  # undecodable/fake: not evaluated
-                        continue
-                    words = len(txt.split()) if txt else 0
-                    s = ms / 1000.0
-                    fast = words >= min_words_fast and words > s * max_wps
-                    slow = s >= min_speech_slow_s and words < s * min_wps
-                    if fast or slow:
-                        out.append((int(part), cid,
-                                    f"words={words} speech_s={round(s, 2)}"))
-                yield pa.record_batch(
-                    [
-                        pa.array(["v"] * len(out), type=pa.string()),
-                        pa.array([p for p, _, _ in out], type=pa.int32()),
-                        pa.array([R_SPEECH_RATE] * len(out), type=pa.string()),
-                        pa.array([None] * len(out), type=pa.int32()),
-                        pa.array([None] * len(out), type=pa.int64()),
-                        pa.array([c for _, c, _ in out], type=pa.string()),
-                        pa.array([o for _, _, o in out], type=pa.string()),
-                        pa.array(
-                            [f"{min_wps} <= words/speech_s <= {max_wps}"] * len(out),
-                            type=pa.string()),
-                    ],
-                    names=["kind", "part_id", "feature", "bin", "cnt",
-                           "clip_id", "observed", "expected"],
-                )
-
-        stats = df.select(*cols).mapInArrow(gen, _STATS_SCHEMA)
+        stats = map_payloads(stream_df, [*PAYLOAD_COLS, "transcript"], kernel,
+                             _STATS_SCHEMA, ctx)
 
     return (
         stats

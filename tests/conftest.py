@@ -40,16 +40,17 @@ def meta_4k(spark):
 
 @pytest.fixture
 def payload_scan_calls(monkeypatch):
-    """Arguments of each ``payload_stats_scan`` call made during the test
-    (``drift_plan`` looks the name up in its module at call time)."""
+    """Arguments of each row-group read (``row_group_frame``) made during
+    the test: one per payload pass that took the row-group route
+    (``map_payloads`` looks the name up in its module at call time)."""
     from semantic_log_detector_spark.sources import payload_scan
 
     calls = []
-    real = payload_scan.payload_stats_scan
+    real = payload_scan.row_group_frame
 
     def spy(*args, **kwargs):
         calls.append(args)
         return real(*args, **kwargs)
 
-    monkeypatch.setattr(payload_scan, "payload_stats_scan", spy)
+    monkeypatch.setattr(payload_scan, "row_group_frame", spy)
     return calls

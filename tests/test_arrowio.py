@@ -8,7 +8,7 @@ from semantic_log_detector_spark.functions.arrowio import prefetch_batches
 
 
 def test_prefetch_passthrough_order_and_exhaustion():
-    assert list(prefetch_batches(iter(range(100)), depth=2)) == list(range(100))
+    assert list(prefetch_batches(iter(range(100)))) == list(range(100))
 
 
 def test_prefetch_propagates_source_error():
@@ -16,7 +16,7 @@ def test_prefetch_propagates_source_error():
         yield 1
         raise RuntimeError("boom")
 
-    g = prefetch_batches(src(), depth=2)
+    g = prefetch_batches(src())
     assert next(g) == 1
     try:
         next(g)
@@ -35,7 +35,7 @@ def test_prefetch_abandoned_consumer_stops_reader():
             progressed.append(i)
             yield i
 
-    g = prefetch_batches(src(), depth=1)
+    g = prefetch_batches(src())
     assert next(g) == 0
     g.close()  # GeneratorExit with the queue full and the source mid-stream
 

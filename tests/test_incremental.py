@@ -94,17 +94,19 @@ def test_delta_takes_payload_route_with_jvm_route_verdicts(spark, tmp_path,
     out = str(tmp_path / "out")
     _write_batch(spark, table, 300, seed=1)
     validate_increment(spark, table, out, CFG)
-    assert len(payload_scan_calls) == 1  # the bootstrap scans the table dir
+    # the bootstrap scans the table dir twice: its drift pass and the
+    # baseline's decode
+    assert len(payload_scan_calls) == 2
     before = set(f for f, _ in list_data_files(table))
     _write_batch(spark, table, 200, seed=2, drift_parts=(3,))
     added = [f for f, _ in list_data_files(table) if f not in before]
 
     _, res2 = validate_increment(spark, table, out, CFG)
-    assert len(payload_scan_calls) == 2
+    assert len(payload_scan_calls) == 3
     ref = str(tmp_path / "ref")
     run_suite(spark, spark.read.parquet(*added).repartition(2), None, ref, CFG,
               drift_baseline=spark.read.parquet(f"{out}/drift_baseline"))
-    assert len(payload_scan_calls) == 2  # not a bare scan: the JVM route
+    assert len(payload_scan_calls) == 3  # not a bare scan: the JVM route
 
     def rows(d, run_id=None):
         df = spark.read.parquet(d)

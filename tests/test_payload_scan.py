@@ -1,6 +1,7 @@
-"""Python-native payload scan: xxhash64 parity, stats equality vs the
-JVM-fed path, wave-resume filtering, suite verdict equivalence, and the
-route decision taken from the input frame itself."""
+"""The one payload reader: xxhash64 parity, identical rows from the
+row-group and JVM-fed routes for every payload pass, wave-resume
+filtering, suite verdict equivalence, and the route decision taken from
+the input frame itself."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -8,13 +9,14 @@ import pytest
 from semantic_log_detector_spark.checks.base import RunContext
 from semantic_log_detector_spark.checks.drift import decode_stats
 from semantic_log_detector_spark.functions.sparkhash import part_id, xxhash64
+from semantic_log_detector_spark.operators.audio_dedup import audio_fingerprint
+from semantic_log_detector_spark.operators.audio_search import audio_landmarks
 from semantic_log_detector_spark.plans.runner import SuiteConfig, run_suite
 from semantic_log_detector_spark.sources import payload_scan
 from semantic_log_detector_spark.sources.payload_scan import (
     PAYLOAD_COLS,
     bare_scan_files,
     list_row_groups,
-    payload_stats_scan,
     stored_part_ids_match,
 )
 
@@ -69,22 +71,67 @@ def _agg(df):
     return hist, counts, viols
 
 
-def test_scan_matches_decode_stats(spark, clips_2k, clips_files):
-    jvm = decode_stats(clips_2k, CTX16)
-    py = payload_stats_scan(spark, clips_files, CTX16)
+def _same(a, b):
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_scan_matches_decode_stats(spark, clips_parquet, payload_scan_calls):
+    scan = spark.read.parquet(clips_parquet)
+    py = decode_stats(scan, CTX16)
+    jvm = decode_stats(scan.repartition(3), CTX16)
+    assert len(payload_scan_calls) == 1  # the bare scan only
     for a, b in zip(_agg(jvm), _agg(py)):
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+        _same(a, b)
 
 
-def test_scan_pending_parts_filter(spark, clips_2k, clips_files):
+def test_scan_pending_parts_filter(spark, clips_parquet, payload_scan_calls):
     pend = [0, 3, 7]
-    py = payload_stats_scan(spark, clips_files, CTX16, pending_parts=pend)
+    scan = spark.read.parquet(clips_parquet)
+    py = decode_stats(scan, CTX16, pending_parts=pend)
     got = {r["part_id"] for r in py.select("part_id").distinct().collect()}
     assert got <= set(pend)
-    # and the kept slice matches the JVM path filtered the same way
-    jvm = decode_stats(clips_2k.filter(F.col("part_id").isin(pend)), CTX16)
+    # and the kept slice matches the JVM route filtered the same way
+    jvm = decode_stats(scan.repartition(3), CTX16, pending_parts=pend)
+    assert len(payload_scan_calls) == 1
     for a, b in zip(_agg(jvm), _agg(py)):
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+        _same(a, b)
+
+
+@pytest.fixture(scope="module")
+def small_parquet(spark, tmp_path_factory):
+    """300 clips in several files, with an event-time column."""
+    from semantic_log_detector_spark.sources.synth import clips_table
+
+    path = str(tmp_path_factory.mktemp("pscan_small") / "clips")
+    (clips_table(spark, 300, num_parts=16, drift_parts=(7,), with_bytes=True)
+     .withColumn("ts", F.timestamp_seconds("idx")).repartition(3)
+     .write.parquet(path))
+    return path
+
+
+@pytest.mark.parametrize("pass_", ["drift", "fingerprints", "landmarks"])
+def test_payload_pass_rows_identical_on_both_routes(spark, small_parquet, pass_,
+                                                    payload_scan_calls):
+    """Every payload pass gives the same rows over a bare scan (the
+    row-group reader) and over ``.repartition(3)`` of it (the JVM feed).
+    Drift's histogram partials are merged first: batch boundaries differ
+    between the routes."""
+    run = {
+        "drift": lambda df: decode_stats(df, CTX16, speech=True),
+        "fingerprints": lambda df: audio_fingerprint(df, passthrough=("ts",)),
+        "landmarks": audio_landmarks,
+    }[pass_]
+    scan = spark.read.parquet(small_parquet)
+    py, jvm = run(scan), run(scan.repartition(3))
+    assert len(payload_scan_calls) == 1
+    if pass_ == "drift":
+        speech = [df.filter("kind = 's'").select("part_id", "clip_id", "cnt")
+                  for df in (jvm, py)]
+        for a, b in [*zip(_agg(jvm), _agg(py)), speech]:
+            _same(a, b)
+        return
+    rows = [sorted(map(tuple, df.collect()), key=repr) for df in (jvm, py)]
+    assert rows[0] and rows[0] == rows[1]
 
 
 def test_suite_verdicts_identical_with_payload_scan(spark, clips_2k, clips_parquet,
