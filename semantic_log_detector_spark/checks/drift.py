@@ -39,7 +39,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.audio import clip_features_ex, decode_clip_ex
+from ..functions.audio import clip_features_ex, decode_batch
 from ..sources.payload_scan import PAYLOAD_COLS, map_payloads
 from .base import (
     CheckPlan,
@@ -198,23 +198,11 @@ def stats_record_batch(
         o_obs.append(obs)
         o_exp.append(exp)
 
-    # cross-row batch decode for batch-friendly codecs (adpcm): one
-    # vectorized pass for the whole Arrow batch, per-row error semantics
-    from semantic_log_detector_spark.functions.audio import predecode_batch
-
-    pre = predecode_batch(payloads, codecs)
-
-    for i in range(n):
+    for i, r in enumerate(decode_batch(payloads, codecs)):
         try:
-            if i in pre:
-                r = pre[i]
-                if isinstance(r, Exception):
-                    raise r
-                pcm, sr, is_fake = r[0], r[1], False
-            else:
-                v = payloads[i]
-                buf = None if not v.is_valid else memoryview(v.as_buffer())
-                pcm, sr, is_fake = decode_clip_ex(buf, codecs[i])
+            if isinstance(r, Exception):
+                raise r
+            pcm, sr, is_fake = r
             if is_fake:
                 fake[i] = True
                 if strict_codecs:

@@ -3,8 +3,9 @@
 The reference embeds *text* with Sentence-BERT (`src/detection/pipeline.py:65-68`,
 contract in SURVEY.md §0.1/X1); this graft's payload is audio, so the
 "embedding" seam becomes PCM decode → log-mel / MFCC features. Everything
-here is batch-vectorized numpy intended to run inside Arrow-batched pandas
-UDFs (see checks/drift.py) — never per-row Python on the Spark hot path.
+here is batch-vectorized numpy intended to run inside the Arrow kernels of
+the payload passes (`decode_batch` is their one decoder; see
+sources/payload_scan.py) — never per-row Python on the Spark hot path.
 
 Codec support — five REAL in-container codecs: ``pcm_s16le`` (RIFF/WAV,
 layout-complete: 8/16/24/32-bit PCM, IEEE float, G.711-in-WAV,
@@ -375,29 +376,40 @@ def decode_clip(buf: bytes, codec: str | None) -> tuple[np.ndarray, int]:
     return pcm, sr
 
 
-def predecode_batch(payloads, codecs: list) -> dict:
-    """Cross-row batch decode for codecs where per-clip vectorization is
-    overhead-dominated (currently adpcm_ima: its in-block position loop is
-    ~500 tiny numpy steps per clip — batching pays it once per Arrow batch
-    by concatenating every clip's state-independent blocks into one
-    matrix; see functions/adpcm.py::decode_adpcm_batch).
+def decode_batch(payloads, codecs: list):
+    """The one decoder of every payload pass: yields, in row order, each
+    row's ``decode_clip_ex`` result ``(pcm, sr, fake)`` or the exception
+    its decode raised — one bad payload never fails the batch.
 
-    ``payloads`` is a pyarrow binary array, ``codecs`` the aligned labels.
-    Returns {row_index: (pcm, sr) | Exception} for the rows it handled —
-    the per-row loop consumes these and falls back to ``decode_clip_ex``
-    for everything else. Exceptions are re-raised per row by the caller,
-    so error semantics are identical to the scalar path.
+    ``payloads`` is a pyarrow binary array (rows handed over as zero-copy
+    memoryviews, NULL as None), ``codecs`` the aligned labels. adpcm_ima
+    rows are decoded together up front: per-clip vectorization is
+    overhead-dominated there (~500 tiny numpy steps per clip), so every
+    clip's state-independent blocks share one matrix
+    (functions/adpcm.py::decode_adpcm_batch). Every other row is decoded
+    only when the consumer reaches it, so a kernel that works clip by clip
+    holds one PCM at a time.
     """
-    idxs = [i for i, c in enumerate(codecs) if c == "adpcm_ima"]
-    if not idxs:
-        return {}
-    from .adpcm import decode_adpcm_batch
-
-    bufs = []
-    for i in idxs:
+    def buf(i):
         v = payloads[i]
-        bufs.append(None if not v.is_valid else memoryview(v.as_buffer()))
-    return dict(zip(idxs, decode_adpcm_batch(bufs)))
+        return memoryview(v.as_buffer()) if v.is_valid else None
+
+    pre = {}
+    idxs = [i for i, c in enumerate(codecs) if c == "adpcm_ima"]
+    if idxs:
+        from .adpcm import decode_adpcm_batch
+
+        pre = dict(zip(idxs, decode_adpcm_batch([buf(i) for i in idxs])))
+    for i, codec in enumerate(codecs):
+        if i in pre:
+            r = pre.pop(i)
+            r = r if isinstance(r, Exception) else (*r, False)
+        else:
+            try:
+                r = decode_clip_ex(buf(i), codec)
+            except Exception as e:  # per-row failure, surfaced to the consumer
+                r = e
+        yield r
 
 
 # ------------------------------------------------------- spectral feature path

@@ -24,7 +24,6 @@ every input clip lands in exactly one `audio_curation_summary` bucket.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -67,112 +66,88 @@ def audio_profile(
     Undecodable clips keep their row with decode_ok=false and nulls —
     accounting needs them. ``passthrough`` columns are carried unchanged
     (e.g. the event-time column for the streaming twin)."""
-    cols = [id_col, bytes_col, codec_col, *passthrough]
+    from ..sources.payload_scan import kernel_output, map_payloads
+
     frame_s, hop_s = FRAME_MS / 1000.0, HOP_MS / 1000.0
     min_speech_s, min_gap_s = min_speech_ms / 1000.0, min_gap_ms / 1000.0
+    schema, emit = kernel_output(
+        df, "clip_id string, decode_ok boolean, fake boolean, fp long,"
+            " total_s double, speech_s double, speech_ratio double,"
+            " n_segments int, loudness_lufs double, snr_db double,"
+            " median_f0_hz double, f0_spread_hz double, voiced_ratio double",
+        passthrough)
 
-    def gen(batches):
-        import pyarrow as pa
+    def kernel(rb):
+        from ..functions.audio import decode_batch
 
-        from ..functions.audio import decode_clip_ex, predecode_batch
+        n = rb.num_rows
+        pcms: list = [None] * n
+        srs = [0] * n
+        fakes = [False] * n
+        ok = [False] * n
+        for i, r in enumerate(decode_batch(rb.column(bytes_col),
+                                           rb.column(codec_col).to_pylist())):
+            if isinstance(r, Exception):
+                continue
+            pcm, sr, fake = r
+            if pcm is not None and len(pcm) > 0 and sr > 0:
+                pcms[i], srs[i], fakes[i], ok[i] = (
+                    np.asarray(pcm, np.float64), int(sr), bool(fake), True,
+                )
+        fps = _fingerprint_rows(pcms, srs)
+        total_s = [None] * n
+        speech_s = [None] * n
+        n_segs = [None] * n
+        lufs = [None] * n
+        snrs = [None] * n
+        f0_med = [None] * n
+        f0_spr = [None] * n
+        f0_vr = [None] * n
+        for i in range(n):
+            if not ok[i]:
+                continue
+            if with_pitch:
+                from ..functions.audio import clip_f0_stats
 
-        for pdf in batches:
-            payloads = pdf[bytes_col].tolist()
-            codecs = pdf[codec_col].tolist()
-            n = len(payloads)
-            pcms: list = [None] * n
-            srs = [0] * n
-            fakes = [False] * n
-            ok = [False] * n
-            pre = predecode_batch(pa.array(payloads, type=pa.binary()), codecs)
-            for i, (buf, codec) in enumerate(zip(payloads, codecs)):
-                try:
-                    hit = pre.get(i)
-                    if isinstance(hit, Exception):
-                        raise hit
-                    if hit is not None:
-                        pcm, sr = hit
-                        fake = False
-                    else:
-                        pcm, sr, fake = decode_clip_ex(bytes(buf), codec)
-                    if pcm is not None and len(pcm) > 0 and sr > 0:
-                        pcms[i], srs[i], fakes[i], ok[i] = (
-                            np.asarray(pcm, np.float64), int(sr), bool(fake), True,
-                        )
-                except Exception:
-                    pass
-            fps = _fingerprint_rows(pcms, srs)
-            total_s = [None] * n
-            speech_s = [None] * n
-            n_segs = [None] * n
-            lufs = [None] * n
-            snrs = [None] * n
-            f0_med = [None] * n
-            f0_spr = [None] * n
-            f0_vr = [None] * n
-            for i in range(n):
-                if not ok[i]:
-                    continue
-                if with_pitch:
-                    from ..functions.audio import clip_f0_stats
+                m, sp, vr = clip_f0_stats(
+                    pcms[i].astype(np.float32), srs[i])
+                f0_med[i], f0_spr[i], f0_vr[i] = m, sp, vr
+            db = _frame_rms_db(pcms[i], srs[i], FRAME_MS, HOP_MS)
+            segs = _segments_from_mask(db >= threshold_dbfs, hop_s, frame_s,
+                                       min_speech_s, min_gap_s)
+            dur = len(pcms[i]) / float(srs[i])
+            total_s[i] = round(dur, 4)
+            speech_s[i] = round(sum(min(t1, dur) - t0 for t0, t1 in segs), 4)
+            n_segs[i] = len(segs)
+            if with_loudness:
+                lv = integrated_lufs(pcms[i], srs[i])
+                lufs[i] = None if lv is None else round(lv, 2)
+            # estimated SNR: mean frame power inside the VAD segments
+            # vs outside them (the noise floor) — the standard
+            # low-SNR curation gate, from the SAME frame-RMS array
+            # (zero extra DSP). None when the clip has no speech or
+            # no noise frames to estimate from.
+            if segs:
+                centers = np.arange(len(db)) * hop_s + frame_s / 2.0
+                in_speech = np.zeros(len(db), dtype=bool)
+                for t0, t1 in segs:
+                    in_speech |= (centers >= t0) & (centers < t1)
+                if in_speech.any() and (~in_speech).any():
+                    p = 10.0 ** (db / 10.0)  # frame power (rms^2)
+                    ps, pn = p[in_speech].mean(), p[~in_speech].mean()
+                    if pn > 0:
+                        snrs[i] = round(10.0 * np.log10(ps / pn), 2)
+        yield emit({
+            "clip_id": rb.column(id_col).cast("string"),
+            "decode_ok": ok, "fake": fakes, "fp": fps,
+            "total_s": total_s, "speech_s": speech_s,
+            "speech_ratio": [None if (t is None or t <= 0) else round(s / t, 4)
+                             for s, t in zip(speech_s, total_s)],
+            "n_segments": n_segs, "loudness_lufs": lufs, "snr_db": snrs,
+            "median_f0_hz": f0_med, "f0_spread_hz": f0_spr, "voiced_ratio": f0_vr,
+        }, rb)
 
-                    m, sp, vr = clip_f0_stats(
-                        pcms[i].astype(np.float32), srs[i])
-                    f0_med[i], f0_spr[i], f0_vr[i] = m, sp, vr
-                db = _frame_rms_db(pcms[i], srs[i], FRAME_MS, HOP_MS)
-                segs = _segments_from_mask(db >= threshold_dbfs, hop_s, frame_s,
-                                           min_speech_s, min_gap_s)
-                dur = len(pcms[i]) / float(srs[i])
-                total_s[i] = round(dur, 4)
-                speech_s[i] = round(sum(min(t1, dur) - t0 for t0, t1 in segs), 4)
-                n_segs[i] = len(segs)
-                if with_loudness:
-                    lv = integrated_lufs(pcms[i], srs[i])
-                    lufs[i] = None if lv is None else round(lv, 2)
-                # estimated SNR: mean frame power inside the VAD segments
-                # vs outside them (the noise floor) — the standard
-                # low-SNR curation gate, from the SAME frame-RMS array
-                # (zero extra DSP). None when the clip has no speech or
-                # no noise frames to estimate from.
-                if segs:
-                    centers = np.arange(len(db)) * hop_s + frame_s / 2.0
-                    in_speech = np.zeros(len(db), dtype=bool)
-                    for t0, t1 in segs:
-                        in_speech |= (centers >= t0) & (centers < t1)
-                    if in_speech.any() and (~in_speech).any():
-                        p = 10.0 ** (db / 10.0)  # frame power (rms^2)
-                        ps, pn = p[in_speech].mean(), p[~in_speech].mean()
-                        if pn > 0:
-                            snrs[i] = round(10.0 * np.log10(ps / pn), 2)
-            out = {
-                "clip_id": pdf[id_col].astype(str),
-                "decode_ok": pd.Series(ok, dtype=bool),
-                "fake": pd.Series(fakes, dtype=bool),
-                "fp": pd.array(fps, dtype="Int64"),
-                "total_s": pd.array(total_s, dtype="Float64"),
-                "speech_s": pd.array(speech_s, dtype="Float64"),
-                "speech_ratio": pd.array(
-                    [None if (t is None or t <= 0) else round(s / t, 4)
-                     for s, t in zip(speech_s, total_s)],
-                    dtype="Float64"),
-                "n_segments": pd.array(n_segs, dtype="Int32"),
-                "loudness_lufs": pd.array(lufs, dtype="Float64"),
-                "snr_db": pd.array(snrs, dtype="Float64"),
-                "median_f0_hz": pd.array(f0_med, dtype="Float64"),
-                "f0_spread_hz": pd.array(f0_spr, dtype="Float64"),
-                "voiced_ratio": pd.array(f0_vr, dtype="Float64"),
-            }
-            for c in passthrough:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
-
-    schema = ("clip_id string, decode_ok boolean, fake boolean, fp long,"
-              " total_s double, speech_s double, speech_ratio double,"
-              " n_segments int, loudness_lufs double, snr_db double,"
-              " median_f0_hz double, f0_spread_hz double, voiced_ratio double")
-    for c in passthrough:
-        schema += f", {c} {df.schema[c].dataType.simpleString()}"
-    return df.select(*cols).mapInPandas(gen, schema=schema)
+    return map_payloads(df, [id_col, bytes_col, codec_col, *passthrough], kernel, schema)
 
 
 def curate_audio_corpus(

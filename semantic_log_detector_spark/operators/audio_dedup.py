@@ -163,54 +163,22 @@ def audio_fingerprint(
     a bare parquet scan is read by the Python-native row-group reader, so
     payload bytes never cross the JVM→worker socket; any other frame is
     fed by the JVM. Both routes hand the kernel the same rows (tested)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
+    from ..sources.payload_scan import kernel_output, map_payloads
 
-    from ..sources.payload_scan import map_payloads
-
-    # a passthrough column read from parquet may carry another Arrow type
-    # than the JVM sends for it (Spark's INT96 timestamps read as ns)
-    pass_types = [to_arrow_type(df.schema[c].dataType) for c in passthrough]
+    schema, emit = kernel_output(df, "id string, fp long, fake boolean", passthrough)
 
     def kernel(rb):
-        from ..functions.audio import decode_clip_ex, predecode_batch
+        from ..functions.audio import decode_batch
 
-        ids = [str(x) for x in rb.column(id_col).to_pylist()]
-        payloads = rb.column(bytes_col)
-        codecs = rb.column(codec_col).to_pylist()
-        # batch path for adpcm; values are (pcm, sr) or a deferred
-        # per-row Exception
-        pre = predecode_batch(payloads, codecs)
-        pcms: list[np.ndarray | None] = []
-        srs: list[int] = []
-        fakes: list[bool] = []
-        for i, codec in enumerate(codecs):
-            try:
-                hit = pre.get(i)
-                if isinstance(hit, Exception):
-                    raise hit
-                if hit is not None:
-                    pcm, sr = hit
-                    fake = False
-                else:
-                    pcm, sr, fake = decode_clip_ex(bytes(payloads[i].as_py()), codec)
-                pcms.append(pcm)
-                srs.append(sr)
-                fakes.append(bool(fake))
-            except Exception:
-                pcms.append(None)
-                srs.append(0)
-                fakes.append(False)
-        yield pa.record_batch(
-            [pa.array(ids, pa.string()),
-             pa.array(_fingerprint_rows(pcms, srs), pa.int64()),
-             pa.array(fakes, pa.bool_()),
-             *[rb.column(c).cast(t) for c, t in zip(passthrough, pass_types)]],
-            names=["id", "fp", "fake", *passthrough])
+        pcms, srs, fakes = [], [], []
+        for r in decode_batch(rb.column(bytes_col), rb.column(codec_col).to_pylist()):
+            pcm, sr, fake = (None, 0, False) if isinstance(r, Exception) else r
+            pcms.append(pcm)
+            srs.append(sr)
+            fakes.append(bool(fake))
+        yield emit({"id": rb.column(id_col).cast("string"),
+                    "fp": _fingerprint_rows(pcms, srs), "fake": fakes}, rb)
 
-    schema = "id string, fp long, fake boolean"
-    for c in passthrough:
-        schema += f", {c} {df.schema[c].dataType.simpleString()}"
     return map_payloads(df, [id_col, bytes_col, codec_col, *passthrough], kernel, schema)
 
 

@@ -95,30 +95,17 @@ def _landmark_batch(ids: list, payloads: pa.BinaryArray, codecs: list,
     for a pass whose compute is ~2 s/task). Per-clip float32 chunks keep
     the working set cache-sized; measured 65 s → single-digit seconds for
     the 5k-clip / 11-hour bench corpus."""
-    from ..functions.audio import (
-        decode_clip_ex,
-        predecode_batch,
-        resample_linear,
-    )
+    from ..functions.audio import decode_batch, resample_linear
 
     masks = _band_masks(FP_SR)
     half = FP_WIN // 2
-    pre = predecode_batch(payloads, codecs)
     win32 = np.hanning(FP_WIN).astype(np.float32)
     offs = np.arange(-half, half)[None, :]
     out = {"id": [], "key": [], "t": [], "fake": []}
-    for i, codec in enumerate(codecs):
-        try:
-            hit = pre.get(i)
-            if isinstance(hit, Exception):
-                raise hit
-            if hit is not None:
-                pcm, sr = hit
-                fake = False
-            else:
-                pcm, sr, fake = decode_clip_ex(bytes(payloads[i].as_py()), codec)
-        except Exception:
+    for i, r in enumerate(decode_batch(payloads, codecs)):
+        if isinstance(r, Exception):
             continue
+        pcm, sr, fake = r
         if pcm is None or len(pcm) == 0 or sr <= 0:
             continue
         pcm = resample_linear(
@@ -175,7 +162,7 @@ def audio_landmarks(
     hop = int(FP_SR * hop_ms / 1000.0)
 
     def kernel(rb):
-        yield _landmark_batch([str(x) for x in rb.column(id_col).to_pylist()],
+        yield _landmark_batch(rb.column(id_col).cast("string").to_pylist(),
                               rb.column(bytes_col), rb.column(codec_col).to_pylist(), hop)
 
     return map_payloads(df, [id_col, bytes_col, codec_col], kernel, _LM_SCHEMA)

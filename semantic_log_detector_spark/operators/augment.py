@@ -4,7 +4,8 @@ ASR/audio-LM training corpora are routinely expanded with speed
 perturbation (the classic 0.9×/1.1× three-way of Kaldi-style recipes),
 gain perturbation, additive noise at a target SNR, and loudness
 normalization. This operator is the scale version of that recipe: ONE
-mapInPandas pass over the clip table decodes each payload once, applies
+Arrow pass over the clip table (the shared payload reader,
+`sources/payload_scan.py::map_payloads`) decodes each payload once, applies
 every requested augmentation, and emits one new row per (clip, spec) with
 the augmented payload re-encoded as pcm_s16le WAV — payload bytes never
 leave the scan stage, nothing shuffles, and the k× output streams straight
@@ -28,7 +29,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..functions.sparkhash import xxhash64
@@ -156,89 +156,59 @@ def augment_clips(
     variants of fake-decoded payloads (they carry synthetic spectra, not
     the recording) — those rows come back ok=false with err='fake_decode'.
     """
+    from ..sources.payload_scan import kernel_output, map_payloads
+
     passthrough = tuple(c for c in passthrough if c in df.columns)
-    cols = [id_col, bytes_col, codec_col, *passthrough]
+    schema, emit = kernel_output(
+        df, "clip_id string, src_clip_id string, aug string, ok boolean,"
+            " err string, bytes binary, codec string, sr_hz int, dur_ms int",
+        passthrough)
 
-    def gen(batches):
-        import pyarrow as pa
+    def kernel(rb):
+        from ..functions.audio import decode_batch, encode_wav
 
-        from ..functions.audio import decode_clip_ex, encode_wav, predecode_batch
+        ids = rb.column(id_col).cast("string").to_pylist()
+        out: dict[str, list] = {
+            "clip_id": [], "src_clip_id": [], "aug": [], "ok": [],
+            "err": [], "bytes": [], "codec": [], "sr_hz": [], "dur_ms": [],
+        }
+        src_rows: list[int] = []
+        for i, r in enumerate(decode_batch(rb.column(bytes_col),
+                                           rb.column(codec_col).to_pylist())):
+            pcm, err = None, None
+            if isinstance(r, Exception):
+                err = f"{type(r).__name__}: {r}"[:200]
+            else:
+                pcm, sr, fake = r
+                if fake and skip_fake:
+                    pcm, err = None, "fake_decode"
+                elif pcm is None or len(pcm) == 0 or sr <= 0:
+                    pcm, err = None, "empty_decode"
 
-        for pdf in batches:
-            payloads = pdf[bytes_col].tolist()
-            codecs = pdf[codec_col].tolist()
-            ids = pdf[id_col].astype(str).tolist()
-            n = len(payloads)
-            pre = predecode_batch(pa.array(payloads, type=pa.binary()), codecs)
-            out_rows: dict[str, list] = {
-                "clip_id": [], "src_clip_id": [], "aug": [], "ok": [],
-                "err": [], "bytes": [], "codec": [], "sr_hz": [], "dur_ms": [],
-            }
-            pass_vals: dict[str, list] = {c: [] for c in passthrough}
+            cid = ids[i]
+            for spec in specs:
+                src_rows.append(i)
+                out["src_clip_id"].append(cid)
+                out["clip_id"].append(None if cid is None else f"{cid}#{spec.name}")
+                out["aug"].append(spec.name)
+                if pcm is None:
+                    out["ok"].append(False)
+                    out["err"].append(err)
+                    out["bytes"].append(None)
+                    out["codec"].append(None)
+                    out["sr_hz"].append(None)
+                    out["dur_ms"].append(None)
+                    continue
+                key = xxhash64(f"{cid}|{spec.name}".encode("utf-8")) ^ (
+                    seed & 0xFFFFFFFF)
+                res = spec.apply(np.asarray(pcm, np.float32), sr, key)
+                aug, out_sr = res if isinstance(res, tuple) else (res, sr)
+                out["ok"].append(True)
+                out["err"].append(None)
+                out["bytes"].append(encode_wav(aug, out_sr))
+                out["codec"].append("pcm_s16le")
+                out["sr_hz"].append(out_sr)
+                out["dur_ms"].append(int(round(len(aug) * 1000.0 / out_sr)))
+        yield emit(out, rb, src_rows)
 
-            for i in range(n):
-                pcm, sr, err = None, 0, None
-                try:
-                    hit = pre.get(i)
-                    if isinstance(hit, Exception):
-                        raise hit
-                    if hit is not None:
-                        pcm, sr = hit
-                        fake = False
-                    else:
-                        buf = payloads[i]
-                        pcm, sr, fake = decode_clip_ex(
-                            None if buf is None else bytes(buf), codecs[i])
-                    if fake and skip_fake:
-                        pcm, err = None, "fake_decode"
-                    elif pcm is None or len(pcm) == 0 or sr <= 0:
-                        pcm, err = None, "empty_decode"
-                except Exception as e:
-                    pcm, err = None, f"{type(e).__name__}: {e}"[:200]
-
-                for spec in specs:
-                    out_rows["src_clip_id"].append(ids[i])
-                    out_rows["clip_id"].append(f"{ids[i]}#{spec.name}")
-                    out_rows["aug"].append(spec.name)
-                    for c in passthrough:
-                        pass_vals[c].append(pdf[c].iloc[i])
-                    if pcm is None:
-                        out_rows["ok"].append(False)
-                        out_rows["err"].append(err)
-                        out_rows["bytes"].append(None)
-                        out_rows["codec"].append(None)
-                        out_rows["sr_hz"].append(None)
-                        out_rows["dur_ms"].append(None)
-                        continue
-                    key = xxhash64(f"{ids[i]}|{spec.name}".encode("utf-8")) ^ (
-                        seed & 0xFFFFFFFF)
-                    res = spec.apply(np.asarray(pcm, np.float32), sr, key)
-                    aug, out_sr = res if isinstance(res, tuple) else (res, sr)
-                    out_rows["ok"].append(True)
-                    out_rows["err"].append(None)
-                    out_rows["bytes"].append(encode_wav(aug, out_sr))
-                    out_rows["codec"].append("pcm_s16le")
-                    out_rows["sr_hz"].append(out_sr)
-                    out_rows["dur_ms"].append(
-                        int(round(len(aug) * 1000.0 / out_sr)))
-
-            out = pd.DataFrame({
-                "clip_id": out_rows["clip_id"],
-                "src_clip_id": out_rows["src_clip_id"],
-                "aug": out_rows["aug"],
-                "ok": pd.Series(out_rows["ok"], dtype=bool),
-                "err": out_rows["err"],
-                "bytes": pd.Series(out_rows["bytes"], dtype=object),
-                "codec": out_rows["codec"],
-                "sr_hz": pd.array(out_rows["sr_hz"], dtype="Int32"),
-                "dur_ms": pd.array(out_rows["dur_ms"], dtype="Int32"),
-            })
-            for c in passthrough:
-                out[c] = pd.Series(pass_vals[c], index=out.index)
-            yield out
-
-    schema = ("clip_id string, src_clip_id string, aug string, ok boolean,"
-              " err string, bytes binary, codec string, sr_hz int, dur_ms int")
-    for c in passthrough:
-        schema += f", {c} {df.schema[c].dataType.simpleString()}"
-    return df.select(*cols).mapInPandas(gen, schema=schema)
+    return map_payloads(df, [id_col, bytes_col, codec_col, *passthrough], kernel, schema)

@@ -50,88 +50,57 @@ def extract_features(
     """
     if kind not in ("mfcc", "logmel"):
         raise ValueError(f"kind must be mfcc|logmel, got {kind!r}")
+    from ..sources.payload_scan import kernel_output, map_payloads
+
     passthrough = tuple(c for c in passthrough if c in df.columns)
-    cols = [id_col, bytes_col, codec_col, *passthrough]
+    schema, emit = kernel_output(
+        df, "clip_id string, ok boolean, err string, sr_hz int, n_frames int,"
+            " feats array<array<float>>, f_sum array<double>, f_sumsq array<double>",
+        passthrough)
 
-    def gen(batches):
-        import pyarrow as pa
+    def kernel(rb):
+        from ..functions.audio import decode_batch, log_mel_frames, mfcc
 
-        from ..functions.audio import (
-            decode_clip_ex,
-            log_mel_frames,
-            mfcc,
-            predecode_batch,
-        )
+        n = rb.num_rows
+        out = {"clip_id": rb.column(id_col).cast("string"), "ok": [False] * n,
+               "err": [None] * n, "sr_hz": [None] * n, "n_frames": [None] * n,
+               "feats": [None] * n, "f_sum": [None] * n, "f_sumsq": [None] * n}
+        for i, r in enumerate(decode_batch(rb.column(bytes_col),
+                                           rb.column(codec_col).to_pylist())):
+            try:
+                if isinstance(r, Exception):
+                    raise r
+                pcm, sr, fake = r
+                if fake and skip_fake:
+                    out["err"][i] = "fake_decode"
+                    continue
+                if pcm is None or len(pcm) == 0 or sr <= 0:
+                    out["err"][i] = "empty_decode"
+                    continue
+                # no float64 pre-cast (round 6): the framing kernel
+                # casts to float32 internally, and f32→f64→f32 is an
+                # exact round-trip, so results are bit-identical
+                if kind == "mfcc":
+                    m = mfcc(pcm, sr, n_mfcc=n_coeffs, n_mels=n_mels)
+                else:
+                    m = log_mel_frames(pcm, sr, n_mels=n_mels)
+                m = np.atleast_2d(np.asarray(m, np.float64))
+                out["ok"][i] = True
+                out["sr_hz"][i] = int(sr)
+                out["n_frames"][i] = int(m.shape[0])
+                # hand Arrow the ndarrays directly (round 6): the old
+                # per-frame .tolist() materialized ~n_frames×n_coeffs
+                # Python floats per clip — pure conversion overhead;
+                # pyarrow consumes nested ndarrays natively and the
+                # wire values are identical (same float32 cast)
+                out["feats"][i] = list(m.astype(np.float32))
+                out["f_sum"][i] = m.sum(axis=0)
+                out["f_sumsq"][i] = (m * m).sum(axis=0)
+            except Exception as e:
+                out["err"][i] = f"{type(e).__name__}: {e}"[:200]
+        yield emit(out, rb)
 
-        for pdf in batches:
-            payloads = pdf[bytes_col].tolist()
-            codecs = pdf[codec_col].tolist()
-            n = len(payloads)
-            pre = predecode_batch(pa.array(payloads, type=pa.binary()), codecs)
-            out = {
-                "clip_id": pdf[id_col].astype(str),
-                "ok": [False] * n, "err": [None] * n, "sr_hz": [None] * n,
-                "n_frames": [None] * n, "feats": [None] * n,
-                "f_sum": [None] * n, "f_sumsq": [None] * n,
-            }
-            for i in range(n):
-                try:
-                    hit = pre.get(i)
-                    if isinstance(hit, Exception):
-                        raise hit
-                    if hit is not None:
-                        pcm, sr, fake = hit[0], hit[1], False
-                    else:
-                        buf = payloads[i]
-                        pcm, sr, fake = decode_clip_ex(
-                            None if buf is None else bytes(buf), codecs[i])
-                    if fake and skip_fake:
-                        out["err"][i] = "fake_decode"
-                        continue
-                    if pcm is None or len(pcm) == 0 or sr <= 0:
-                        out["err"][i] = "empty_decode"
-                        continue
-                    # no float64 pre-cast (round 6): the framing kernel
-                    # casts to float32 internally, and f32→f64→f32 is an
-                    # exact round-trip, so results are bit-identical
-                    if kind == "mfcc":
-                        m = mfcc(pcm, sr, n_mfcc=n_coeffs, n_mels=n_mels)
-                    else:
-                        m = log_mel_frames(pcm, sr, n_mels=n_mels)
-                    m = np.atleast_2d(np.asarray(m, np.float64))
-                    out["ok"][i] = True
-                    out["sr_hz"][i] = int(sr)
-                    out["n_frames"][i] = int(m.shape[0])
-                    # hand Arrow the ndarrays directly (round 6): the old
-                    # per-frame .tolist() materialized ~n_frames×n_coeffs
-                    # Python floats per clip — pure conversion overhead;
-                    # pyarrow consumes nested ndarrays natively and the
-                    # wire values are identical (same float32 cast)
-                    out["feats"][i] = list(m.astype(np.float32))
-                    out["f_sum"][i] = m.sum(axis=0)
-                    out["f_sumsq"][i] = (m * m).sum(axis=0)
-                except Exception as e:
-                    out["err"][i] = f"{type(e).__name__}: {e}"[:200]
-            res = pd.DataFrame({
-                "clip_id": out["clip_id"],
-                "ok": pd.Series(out["ok"], dtype=bool),
-                "err": out["err"],
-                "sr_hz": pd.array(out["sr_hz"], dtype="Int32"),
-                "n_frames": pd.array(out["n_frames"], dtype="Int32"),
-                "feats": pd.Series(out["feats"], dtype=object),
-                "f_sum": pd.Series(out["f_sum"], dtype=object),
-                "f_sumsq": pd.Series(out["f_sumsq"], dtype=object),
-            })
-            for c in passthrough:
-                res[c] = pdf[c].reset_index(drop=True)
-            yield res
-
-    schema = ("clip_id string, ok boolean, err string, sr_hz int,"
-              " n_frames int, feats array<array<float>>,"
-              " f_sum array<double>, f_sumsq array<double>")
-    for c in passthrough:
-        schema += f", {c} {df.schema[c].dataType.simpleString()}"
-    return df.select(*cols).mapInPandas(gen, schema=schema)
+    return map_payloads(df, [id_col, bytes_col, codec_col, *passthrough], kernel, schema)
 
 
 def cmvn_stats(feats: DataFrame) -> DataFrame:
@@ -295,8 +264,9 @@ def pitch_features(
     fmax: float = 500.0,
 ) -> DataFrame:
     """Per-clip pitch profile: (clip_id, ok, median_f0_hz, f0_spread_hz,
-    voiced_ratio) from one decode pass (mapInPandas; payloads stay in the
-    scan stage, five thin columns come out).
+    voiced_ratio) from one decode pass (one Arrow kernel over
+    `sources/payload_scan.py::map_payloads`; payloads stay in the scan
+    stage, five thin columns come out).
 
     What it buys a speech-corpus pipeline: human speech sits in a known
     F0 band with a WANDERING track (wide IQR spread); synthetic tones,
@@ -305,37 +275,31 @@ def pitch_features(
     separate speech from the non-speech contamination a 100 TB scrape
     carries. Autocorrelation per 40 ms frame via the chunked FFT kernel
     (functions/audio.py::frame_f0)."""
+    from ..sources.payload_scan import kernel_output, map_payloads
 
-    def gen(batches):
-        from ..functions.audio import clip_f0_stats, decode_clip_ex
+    schema, emit = kernel_output(
+        df, "clip_id string, ok boolean, median_f0_hz double, f0_spread_hz double,"
+            " voiced_ratio double")
 
-        for pdf in batches:
-            n = len(pdf)
-            ok = [False] * n
-            med = [None] * n
-            spread = [None] * n
-            vr = [None] * n
-            for i, (buf, codec) in enumerate(
-                    zip(pdf[bytes_col].tolist(), pdf[codec_col].tolist())):
-                try:
-                    pcm, sr, _fake = decode_clip_ex(
-                        None if buf is None else bytes(buf), codec)
-                    if pcm is None or len(pcm) == 0 or sr <= 0:
-                        continue
-                    m, s, r = clip_f0_stats(pcm, sr, fmin=fmin, fmax=fmax)
-                    ok[i], med[i], spread[i], vr[i] = True, m, s, r
-                except Exception:
-                    pass
-            yield pd.DataFrame({
-                "clip_id": pdf[id_col].astype(str),
-                "ok": pd.Series(ok, dtype=bool),
-                "median_f0_hz": pd.array(med, dtype="Float64"),
-                "f0_spread_hz": pd.array(spread, dtype="Float64"),
-                "voiced_ratio": pd.array(vr, dtype="Float64"),
-            })
+    def kernel(rb):
+        from ..functions.audio import clip_f0_stats, decode_batch
 
-    return df.select(id_col, bytes_col, codec_col).mapInPandas(
-        gen,
-        schema="clip_id string, ok boolean, median_f0_hz double,"
-               " f0_spread_hz double, voiced_ratio double",
-    )
+        n = rb.num_rows
+        ok, med, spread, vr = [False] * n, [None] * n, [None] * n, [None] * n
+        for i, r in enumerate(decode_batch(rb.column(bytes_col),
+                                           rb.column(codec_col).to_pylist())):
+            try:
+                if isinstance(r, Exception):
+                    raise r
+                pcm, sr, _fake = r
+                if pcm is None or len(pcm) == 0 or sr <= 0:
+                    continue
+                m, s, v = clip_f0_stats(pcm, sr, fmin=fmin, fmax=fmax)
+                ok[i], med[i], spread[i], vr[i] = True, m, s, v
+            except Exception:
+                pass
+        yield emit({"clip_id": rb.column(id_col).cast("string"), "ok": ok,
+                    "median_f0_hz": med, "f0_spread_hz": spread,
+                    "voiced_ratio": vr}, rb)
+
+    return map_payloads(df, [id_col, bytes_col, codec_col], kernel, schema)

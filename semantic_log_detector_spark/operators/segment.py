@@ -9,8 +9,9 @@ payload rung with the standard energy VAD used as the first pass in
 production speech pipelines (WebRTC VAD's energy tier, Kaldi's
 compute-vad): frame RMS → threshold → hangover merge.
 
-Everything is one mapInPandas pass in the same scale shape as the drift
-check and the acoustic fingerprint: payload bytes never leave the scan
+Everything is one Arrow kernel over the shared payload reader
+(`sources/payload_scan.py::map_payloads`), the same scale shape as the
+drift check and the acoustic fingerprint: payload bytes never leave the scan
 stage; only (clip_id, start_s, end_s, rms_db) segment rows — a few dozen
 bytes per utterance — shuffle. At 10^12 clips the segments table is
 ~100× smaller than the input and partitions by clip naturally.
@@ -23,7 +24,6 @@ boundaries (±1 hop of the planted burst edges).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -135,65 +135,47 @@ def speech_segments(
     decoder — such segments describe the fake waveform, not real audio,
     and downstream consumers must exclude them (same honesty contract as
     `audio_dedup.audio_fingerprint`)."""
-    cols = [id_col, bytes_col, codec_col]
+    from ..sources.payload_scan import kernel_output, map_payloads
+
     frame_s, hop_s = frame_ms / 1000.0, hop_ms / 1000.0
     min_speech_s, min_gap_s = min_speech_ms / 1000.0, min_gap_ms / 1000.0
+    schema, emit = kernel_output(
+        df, "clip_id string, seg_idx int, start_s double, end_s double,"
+            " dur_s double, rms_db double, fake boolean")
 
-    def gen(batches):
-        import pyarrow as pa
+    def kernel(rb):
+        from ..functions.audio import decode_batch
 
-        from ..functions.audio import decode_clip_ex, predecode_batch
+        ids = rb.column(id_col).cast("string").to_pylist()
+        out_id, out_k, out_t0, out_t1, out_db, out_fake = [], [], [], [], [], []
+        for i, r in enumerate(decode_batch(rb.column(bytes_col),
+                                           rb.column(codec_col).to_pylist())):
+            if isinstance(r, Exception):
+                continue
+            pcm, sr, fake = r
+            if pcm is None or len(pcm) == 0 or sr <= 0:
+                continue
+            db = _frame_rms_db(np.asarray(pcm, dtype=np.float64), int(sr),
+                               frame_ms, hop_ms)
+            segs = _segments_from_mask(db >= threshold_dbfs, hop_s, frame_s,
+                                       min_speech_s, min_gap_s)
+            dur_total = len(pcm) / float(sr)
+            for k, (t0, t1) in enumerate(segs):
+                t1 = min(t1, dur_total)
+                f0 = int(t0 / hop_s)
+                f1 = max(f0 + 1, min(int(np.ceil(t1 / hop_s)), len(db)))
+                out_id.append(ids[i])
+                out_k.append(k)
+                out_t0.append(round(t0, 4))
+                out_t1.append(round(t1, 4))
+                out_db.append(round(float(np.mean(db[f0:f1])), 2))
+                out_fake.append(bool(fake))
+        yield emit({"clip_id": out_id, "seg_idx": out_k, "start_s": out_t0,
+                    "end_s": out_t1,
+                    "dur_s": [round(b - a, 4) for a, b in zip(out_t0, out_t1)],
+                    "rms_db": out_db, "fake": out_fake}, rb)
 
-        for pdf in batches:
-            payloads = pdf[bytes_col].tolist()
-            codecs = pdf[codec_col].tolist()
-            ids = pdf[id_col].astype(str).tolist()
-            pre = predecode_batch(pa.array(payloads, type=pa.binary()), codecs)
-            out_id, out_k, out_t0, out_t1, out_db, out_fake = [], [], [], [], [], []
-            for i, (buf, codec) in enumerate(zip(payloads, codecs)):
-                try:
-                    hit = pre.get(i)
-                    if isinstance(hit, Exception):
-                        raise hit
-                    if hit is not None:
-                        pcm, sr = hit
-                        fake = False
-                    else:
-                        pcm, sr, fake = decode_clip_ex(bytes(buf), codec)
-                except Exception:
-                    continue
-                if pcm is None or len(pcm) == 0 or sr <= 0:
-                    continue
-                db = _frame_rms_db(np.asarray(pcm, dtype=np.float64), int(sr),
-                                   frame_ms, hop_ms)
-                segs = _segments_from_mask(db >= threshold_dbfs, hop_s, frame_s,
-                                           min_speech_s, min_gap_s)
-                dur_total = len(pcm) / float(sr)
-                for k, (t0, t1) in enumerate(segs):
-                    t1 = min(t1, dur_total)
-                    f0 = int(t0 / hop_s)
-                    f1 = max(f0 + 1, min(int(np.ceil(t1 / hop_s)), len(db)))
-                    out_id.append(ids[i])
-                    out_k.append(k)
-                    out_t0.append(round(t0, 4))
-                    out_t1.append(round(t1, 4))
-                    out_db.append(round(float(np.mean(db[f0:f1])), 2))
-                    out_fake.append(bool(fake))
-            yield pd.DataFrame({
-                "clip_id": pd.Series(out_id, dtype=object),
-                "seg_idx": pd.Series(out_k, dtype="int32"),
-                "start_s": pd.Series(out_t0, dtype="float64"),
-                "end_s": pd.Series(out_t1, dtype="float64"),
-                "dur_s": pd.Series(
-                    [round(b - a, 4) for a, b in zip(out_t0, out_t1)],
-                    dtype="float64"),
-                "rms_db": pd.Series(out_db, dtype="float64"),
-                "fake": pd.Series(out_fake, dtype=bool),
-            })
-
-    schema = ("clip_id string, seg_idx int, start_s double, end_s double,"
-              " dur_s double, rms_db double, fake boolean")
-    return df.select(*cols).mapInPandas(gen, schema=schema)
+    return map_payloads(df, [id_col, bytes_col, codec_col], kernel, schema)
 
 
 def speech_ratio(
@@ -266,109 +248,82 @@ def cut_segments(
     covers every input clip. Same scale shape as the VAD pass: one decode
     per clip, payloads stay in the scan stage, no shuffle.
     """
+    from ..sources.payload_scan import kernel_output, map_payloads
+
     passthrough = tuple(c for c in passthrough if c in df.columns)
-    cols = [id_col, bytes_col, codec_col, *passthrough]
     frame_s, hop_s = FRAME_MS / 1000.0, HOP_MS / 1000.0
     min_speech_s, min_gap_s = min_speech_ms / 1000.0, min_gap_ms / 1000.0
     pad_s = pad_ms / 1000.0
+    schema, emit = kernel_output(
+        df, "clip_id string, src_clip_id string, seg_idx int,"
+            " start_s double, end_s double, ok boolean, err string,"
+            " bytes binary, codec string, sr_hz int, dur_ms int",
+        passthrough)
 
-    def gen(batches):
-        import pyarrow as pa
+    def kernel(rb):
+        from ..functions.audio import decode_batch, encode_wav
 
-        from ..functions.audio import decode_clip_ex, encode_wav, predecode_batch
+        ids = rb.column(id_col).cast("string").to_pylist()
+        rows: dict[str, list] = {
+            "clip_id": [], "src_clip_id": [], "seg_idx": [],
+            "start_s": [], "end_s": [], "ok": [], "err": [],
+            "bytes": [], "codec": [], "sr_hz": [], "dur_ms": [],
+        }
+        src_rows: list[int] = []
 
-        for pdf in batches:
-            payloads = pdf[bytes_col].tolist()
-            codecs = pdf[codec_col].tolist()
-            ids = pdf[id_col].astype(str).tolist()
-            pre = predecode_batch(pa.array(payloads, type=pa.binary()), codecs)
-            rows: dict[str, list] = {
-                "clip_id": [], "src_clip_id": [], "seg_idx": [],
-                "start_s": [], "end_s": [], "ok": [], "err": [],
-                "bytes": [], "codec": [], "sr_hz": [], "dur_ms": [],
-            }
-            pass_vals: dict[str, list] = {c: [] for c in passthrough}
+        def emit_row(i, seg_idx, t0, t1, ok, err, buf, sr):
+            cid = ids[i]
+            src_rows.append(i)
+            rows["src_clip_id"].append(cid)
+            rows["clip_id"].append(
+                f"{cid}#s{seg_idx:02d}" if ok and cid is not None else cid)
+            rows["seg_idx"].append(seg_idx if ok else None)
+            rows["start_s"].append(round(t0, 4) if ok else None)
+            rows["end_s"].append(round(t1, 4) if ok else None)
+            rows["ok"].append(ok)
+            rows["err"].append(err)
+            rows["bytes"].append(buf)
+            rows["codec"].append("pcm_s16le" if ok else None)
+            rows["sr_hz"].append(sr if ok else None)
+            rows["dur_ms"].append(
+                int(round((t1 - t0) * 1000.0)) if ok else None)
 
-            def emit(i, seg_idx, t0, t1, ok, err, buf, sr):
-                rows["src_clip_id"].append(ids[i])
-                rows["clip_id"].append(
-                    f"{ids[i]}#s{seg_idx:02d}" if ok else ids[i])
-                rows["seg_idx"].append(seg_idx if ok else None)
-                rows["start_s"].append(round(t0, 4) if ok else None)
-                rows["end_s"].append(round(t1, 4) if ok else None)
-                rows["ok"].append(ok)
-                rows["err"].append(err)
-                rows["bytes"].append(buf)
-                rows["codec"].append("pcm_s16le" if ok else None)
-                rows["sr_hz"].append(sr if ok else None)
-                rows["dur_ms"].append(
-                    int(round((t1 - t0) * 1000.0)) if ok else None)
-                for c in passthrough:
-                    pass_vals[c].append(pdf[c].iloc[i])
-
-            for i, (buf, codec) in enumerate(zip(payloads, codecs)):
-                pcm, sr, err = None, 0, None
-                try:
-                    hit = pre.get(i)
-                    if isinstance(hit, Exception):
-                        raise hit
-                    if hit is not None:
-                        pcm, sr, fake = hit[0], hit[1], False
-                    else:
-                        pcm, sr, fake = decode_clip_ex(
-                            None if buf is None else bytes(buf), codec)
-                    if fake and skip_fake:
-                        pcm, err = None, "fake_decode"
-                    elif pcm is None or len(pcm) == 0 or sr <= 0:
-                        pcm, err = None, "empty_decode"
-                except Exception as e:
-                    pcm, err = None, f"{type(e).__name__}: {e}"[:200]
-                if pcm is None:
-                    emit(i, -1, 0.0, 0.0, False, err, None, 0)
-                    continue
-                pcm = np.asarray(pcm, dtype=np.float64)
-                db = _frame_rms_db(pcm, int(sr), FRAME_MS, HOP_MS)
-                segs = _segments_from_mask(db >= threshold_dbfs, hop_s,
-                                           frame_s, min_speech_s, min_gap_s)
-                dur_total = len(pcm) / float(sr)
-                pieces = []
-                for (t0, t1) in segs:
-                    t0, t1 = max(t0 - pad_s, 0.0), min(t1 + pad_s, dur_total)
-                    if max_segment_s is not None and t1 - t0 > max_segment_s:
-                        edges = np.arange(t0, t1, max_segment_s).tolist() + [t1]
-                        pieces += [(a, b) for a, b in zip(edges, edges[1:])
-                                   if b - a > 1e-9]
-                    else:
-                        pieces.append((t0, t1))
-                if not pieces:
-                    emit(i, -1, 0.0, 0.0, False, "no_speech", None, 0)
-                    continue
-                for k, (t0, t1) in enumerate(pieces):
-                    s0, s1 = int(round(t0 * sr)), int(round(t1 * sr))
-                    seg_pcm = pcm[s0:max(s1, s0 + 1)].astype(np.float32)
-                    emit(i, k, t0, t1, True, None,
+        for i, r in enumerate(decode_batch(rb.column(bytes_col),
+                                           rb.column(codec_col).to_pylist())):
+            pcm, err = None, None
+            if isinstance(r, Exception):
+                err = f"{type(r).__name__}: {r}"[:200]
+            else:
+                pcm, sr, fake = r
+                if fake and skip_fake:
+                    pcm, err = None, "fake_decode"
+                elif pcm is None or len(pcm) == 0 or sr <= 0:
+                    pcm, err = None, "empty_decode"
+            if pcm is None:
+                emit_row(i, -1, 0.0, 0.0, False, err, None, 0)
+                continue
+            pcm = np.asarray(pcm, dtype=np.float64)
+            db = _frame_rms_db(pcm, int(sr), FRAME_MS, HOP_MS)
+            segs = _segments_from_mask(db >= threshold_dbfs, hop_s,
+                                       frame_s, min_speech_s, min_gap_s)
+            dur_total = len(pcm) / float(sr)
+            pieces = []
+            for (t0, t1) in segs:
+                t0, t1 = max(t0 - pad_s, 0.0), min(t1 + pad_s, dur_total)
+                if max_segment_s is not None and t1 - t0 > max_segment_s:
+                    edges = np.arange(t0, t1, max_segment_s).tolist() + [t1]
+                    pieces += [(a, b) for a, b in zip(edges, edges[1:])
+                               if b - a > 1e-9]
+                else:
+                    pieces.append((t0, t1))
+            if not pieces:
+                emit_row(i, -1, 0.0, 0.0, False, "no_speech", None, 0)
+                continue
+            for k, (t0, t1) in enumerate(pieces):
+                s0, s1 = int(round(t0 * sr)), int(round(t1 * sr))
+                seg_pcm = pcm[s0:max(s1, s0 + 1)].astype(np.float32)
+                emit_row(i, k, t0, t1, True, None,
                          encode_wav(seg_pcm, int(sr)), int(sr))
+        yield emit(rows, rb, src_rows)
 
-            out = pd.DataFrame({
-                "clip_id": rows["clip_id"],
-                "src_clip_id": rows["src_clip_id"],
-                "seg_idx": pd.array(rows["seg_idx"], dtype="Int32"),
-                "start_s": pd.array(rows["start_s"], dtype="Float64"),
-                "end_s": pd.array(rows["end_s"], dtype="Float64"),
-                "ok": pd.Series(rows["ok"], dtype=bool),
-                "err": rows["err"],
-                "bytes": pd.Series(rows["bytes"], dtype=object),
-                "codec": rows["codec"],
-                "sr_hz": pd.array(rows["sr_hz"], dtype="Int32"),
-                "dur_ms": pd.array(rows["dur_ms"], dtype="Int32"),
-            })
-            for c in passthrough:
-                out[c] = pd.Series(pass_vals[c], index=out.index)
-            yield out
-
-    schema = ("clip_id string, src_clip_id string, seg_idx int,"
-              " start_s double, end_s double, ok boolean, err string,"
-              " bytes binary, codec string, sr_hz int, dur_ms int")
-    for c in passthrough:
-        schema += f", {c} {df.schema[c].dataType.simpleString()}"
-    return df.select(*cols).mapInPandas(gen, schema=schema)
+    return map_payloads(df, [id_col, bytes_col, codec_col, *passthrough], kernel, schema)

@@ -52,12 +52,14 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # Reused workers used to degrade run-over-run on the old
         # mapInPandas decode (bytes materialized as Python objects: 43s →
-        # 126s within a session). The mapInArrow single-pass decode slices
-        # payloads as zero-copy memoryviews and shows NO degradation with
-        # reuse on (7.1 → 7.6 → 7.5 s over repeated 60k-clip passes), while
-        # reuse=false pays a fresh interpreter + numpy/pyarrow import per
-        # TASK (~25% slower at 8 cores, worse at higher parallelism where
-        # 32 simultaneous interpreter spawns contend).
+        # 126s within a session). No audio payload pass uses mapInPandas
+        # now: each is an Arrow kernel over sources/payload_scan.py::
+        # map_payloads that slices payloads as zero-copy memoryviews, and
+        # that decode shows NO degradation with reuse on (7.1 → 7.6 → 7.5 s
+        # over repeated 60k-clip passes), while reuse=false pays a fresh
+        # interpreter + numpy/pyarrow import per TASK (~25% slower at 8
+        # cores, worse at higher parallelism where 32 simultaneous
+        # interpreter spawns contend).
         .config("spark.python.worker.reuse", "true")
         # Pin BLAS/OpenMP to one thread per Python worker. Task-level
         # parallelism already saturates the cores; OpenBLAS spinning up its

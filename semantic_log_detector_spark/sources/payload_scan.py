@@ -1,7 +1,10 @@
-"""The one payload reader: every payload pass (the drift decode, audio
-fingerprints, audio landmarks, the streaming payload rules) hands
-`map_payloads` a per-batch kernel, and `map_payloads` picks the route and
-feeds it.
+"""The one payload reader: every payload pass (the drift decode and its
+streaming R067 twin, audio fingerprints and landmarks, frame features,
+pitch, the curation profile, augmentation, speech and utterance segments)
+hands `map_payloads` a per-batch kernel, and `map_payloads` picks the
+route and feeds it. Each kernel decodes through
+functions/audio.py::decode_batch and builds its output with
+`kernel_output`.
 
 Why two routes: Spark 4's single-threaded Python runner caps JVM→worker
 pipelining at the kernel socket buffer (~200 KB against ~100 MB Arrow
@@ -79,13 +82,12 @@ def bare_scan_files(df: DataFrame, needed_cols: list[str]) -> list[str] | None:
     """Parquet files behind ``df`` when it is a PURE column-pruned scan —
     else None (round 6).
 
-    The one route decision of every payload pass (the drift decode, audio
-    landmarks/fingerprints): a plain ``spark.read.parquet(dir)`` input —
-    an increment's ``spark.read.parquet(*files)`` too — goes through the
-    Python-native row-group reader, so payload bytes never cross the
-    JVM→worker socket, while any transformed input falls back to the
-    general JVM-fed path. The
-    check is deliberately conservative (false negatives only): the
+    The one route decision of every payload pass (`map_payloads`): a
+    plain ``spark.read.parquet(dir)`` input — an increment's
+    ``spark.read.parquet(*files)`` too — goes through the Python-native
+    row-group reader, so payload bytes never cross the JVM→worker socket,
+    while any transformed input falls back to the general JVM-fed path.
+    The check is deliberately conservative (false negatives only): the
     OPTIMIZED logical plan must consist of nothing but attribute-only
     Project nodes over exactly one parquet Relation (a Filter, Generate,
     expression or join anywhere → None), and every needed column must
@@ -272,6 +274,38 @@ def map_payloads(df: DataFrame, cols: list[str], fn, schema: str,
 
     return df.select(*cols, *([] if ctx is None else [ctx.part_col])).mapInArrow(
         feed, schema)
+
+
+def kernel_output(df: DataFrame, schema: str, passthrough: tuple[str, ...] = ()):
+    """The output side of a payload kernel: ``(schema, emit)``, where the
+    schema is ``schema`` plus ``df``'s ``passthrough`` columns and
+    ``emit(cols, rb, rows=None)`` builds one output batch from ``cols``
+    (name → Python list or Arrow array) and the passthrough values of the
+    input batch ``rb`` at source rows ``rows`` (every row when None) — a
+    pass that emits several rows per clip, or none, names each output
+    row's clip. Every column is converted to the Arrow type Spark expects
+    for it (the row-group route reads a parquet INT96 timestamp as ns); a
+    float NaN in a Python list becomes NULL, as pandas output did."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    for c in passthrough:
+        schema += f", {c} {df.schema[c].dataType.simpleString()}"
+    arrow = to_arrow_schema(StructType.fromDDL(schema))
+
+    def emit(cols: dict, rb, rows=None):
+        take = None if rows is None else pa.array(rows, pa.int64())
+        for c in passthrough:
+            cols[c] = rb.column(c) if take is None else rb.column(c).take(take)
+        arrays = []
+        for f in arrow:
+            v = cols[f.name]
+            arrays.append(v.cast(f.type) if isinstance(v, pa.Array)
+                          else pa.array(v, f.type, from_pandas=True))
+        return pa.RecordBatch.from_arrays(arrays, schema=arrow)
+
+    return schema, emit
 
 
 def payload_stats_scan(spark: SparkSession, files: list[str], ctx: RunContext,

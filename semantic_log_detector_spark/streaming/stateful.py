@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -107,7 +108,7 @@ def stream_feature_drift(
 
     The streaming twin of the batch drift check's feature path
     (checks/drift.py::stats_record_batch → drift_scores_local): each
-    micro-batch decodes its payloads (decode_clip_ex), featurizes
+    micro-batch decodes its payloads (decode_batch), featurizes
     (clip_features: mean MFCC + rms + centroid), bins every feature with the
     SAME BinSpec grid and scores the SAME Laplace-smoothed PSI
     (checks/drift.py::smoothed_psi) as the batch check — so a
@@ -126,7 +127,7 @@ def stream_feature_drift(
     feature vector itself, decoded inside the stateful operator.
     """
     from ..checks.drift import DEFAULT_BINS, FEATURE_NAMES, N_MFCC
-    from ..functions.audio import clip_features, decode_clip_ex
+    from ..functions.audio import clip_features, decode_batch
 
     if bins is None:
         bins = DEFAULT_BINS
@@ -145,12 +146,13 @@ def stream_feature_drift(
         n_batch = 0
         n_err = 0
         for pdf in pdfs:
-            payloads = pdf[payload_col].to_numpy(dtype=object)
-            codecs = pdf[codec_col].to_numpy(dtype=object)
             fv_rows = []
-            for buf, codec in zip(payloads, codecs):
+            for r in decode_batch(pa.array(pdf[payload_col], pa.binary()),
+                                  pdf[codec_col].tolist()):
                 try:
-                    pcm, sr, _fake = decode_clip_ex(buf, codec)
+                    if isinstance(r, Exception):
+                        raise r
+                    pcm, sr, _fake = r
                     fv = clip_features(pcm, sr, n_mfcc=N_MFCC)
                     if not np.isfinite(fv).all():
                         raise ValueError("non-finite features")

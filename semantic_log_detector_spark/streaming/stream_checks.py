@@ -284,8 +284,8 @@ def stream_speech_health(
     """Windowed speech-health monitor on a clip stream: is a feed going
     silent, undecodable, or fake-routed? The per-clip kernel is
     `audio_curate.audio_profile` — the SAME one-decode pass the batch
-    curation capstone runs, unchanged per micro-batch (stateless
-    mapInPandas; Structured Streaming only adds the window/watermark agg
+    curation capstone runs, unchanged per micro-batch (a stateless Arrow
+    kernel over `map_payloads`; Structured Streaming only adds the window/watermark agg
     on the thin profile rows, never on payloads). Append-mode compatible.
 
     Emits per (window): n_clips, n_undecodable, n_fake, n_low_speech,

@@ -9,8 +9,15 @@ import pytest
 from semantic_log_detector_spark.checks.base import RunContext
 from semantic_log_detector_spark.checks.drift import decode_stats
 from semantic_log_detector_spark.functions.sparkhash import part_id, xxhash64
+from semantic_log_detector_spark.operators.audio_curate import audio_profile
 from semantic_log_detector_spark.operators.audio_dedup import audio_fingerprint
 from semantic_log_detector_spark.operators.audio_search import audio_landmarks
+from semantic_log_detector_spark.operators.augment import augment_clips
+from semantic_log_detector_spark.operators.features import (
+    extract_features,
+    pitch_features,
+)
+from semantic_log_detector_spark.operators.segment import cut_segments, speech_segments
 from semantic_log_detector_spark.plans.runner import SuiteConfig, run_suite
 from semantic_log_detector_spark.sources import payload_scan
 from semantic_log_detector_spark.sources.payload_scan import (
@@ -109,17 +116,28 @@ def small_parquet(spark, tmp_path_factory):
     return path
 
 
-@pytest.mark.parametrize("pass_", ["drift", "fingerprints", "landmarks"])
+@pytest.mark.parametrize("pass_", ["drift", "fingerprints", "landmarks", "features",
+                                   "pitch", "profile", "augment", "speech_segments",
+                                   "cut_segments"])
 def test_payload_pass_rows_identical_on_both_routes(spark, small_parquet, pass_,
                                                     payload_scan_calls):
     """Every payload pass gives the same rows over a bare scan (the
     row-group reader) and over ``.repartition(3)`` of it (the JVM feed).
     Drift's histogram partials are merged first: batch boundaries differ
-    between the routes."""
+    between the routes. Frame tensors and payloads are compared by hash."""
     run = {
         "drift": lambda df: decode_stats(df, CTX16, speech=True),
         "fingerprints": lambda df: audio_fingerprint(df, passthrough=("ts",)),
         "landmarks": audio_landmarks,
+        "features": lambda df: extract_features(df, passthrough=("ts",))
+        .withColumn("feats", F.xxhash64("feats")),
+        "pitch": pitch_features,
+        "profile": lambda df: audio_profile(df, passthrough=("ts",)),
+        "augment": lambda df: augment_clips(df, passthrough=("transcript", "ts"))
+        .withColumn("bytes", F.xxhash64("bytes")),
+        "speech_segments": speech_segments,
+        "cut_segments": lambda df: cut_segments(df, passthrough=("ts",))
+        .withColumn("bytes", F.xxhash64("bytes")),
     }[pass_]
     scan = spark.read.parquet(small_parquet)
     py, jvm = run(scan), run(scan.repartition(3))
