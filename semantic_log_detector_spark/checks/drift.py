@@ -417,7 +417,7 @@ _ALPHA = 0.5
 def smoothed_psi(counts: np.ndarray, base: np.ndarray) -> np.ndarray:
     """PSI of each row of ``counts`` (last axis: bins) against the ``base``
     histogram over the same bins, both add-α smoothed. The one PSI
-    definition of the batch check and the streaming operators."""
+    definition of the drift check, for self- and stored baselines alike."""
     nb = counts.shape[-1]
     p = (counts + _ALPHA) / (counts.sum(axis=-1, keepdims=True) + _ALPHA * nb)
     q = (base + _ALPHA) / (base.sum() + _ALPHA * nb)

@@ -261,9 +261,16 @@ def audio_curation_summary(
     bucket (undecodable / fake / low_speech / out_of_duration /
     out_of_loudness / low_snr / flat_pitch / dup_removed / kept), so
     n_total is provably the sum — the "no silent drops" contract at
-    corpus level."""
-    k = kept.select("clip_id", F.lit(True).alias("__kept"))
-    p = profile.join(k, "clip_id", "left")
+    corpus level.
+
+    The dup keep is an anti-join on clip_id, so a gated-in clip is kept
+    exactly when its id is among the kept ids: membership is tested
+    against the distinct kept ids, NULL-safe. A NULL id never pairs, so
+    a NULL-id clip that passes every gate is kept, and a repeated id
+    counts each of its rows once."""
+    k = (kept.select(F.col("clip_id").alias("__kid")).distinct()
+         .withColumn("__kept", F.lit(True)))
+    p = profile.join(k, profile["clip_id"].eqNullSafe(k["__kid"]), "left")
     loudness_ok = F.lit(True)
     if min_lufs is not None:
         loudness_ok = loudness_ok & (F.col("loudness_lufs") >= F.lit(min_lufs))

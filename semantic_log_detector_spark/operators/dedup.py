@@ -497,48 +497,20 @@ def minhash_lsh_pairs(
 # -------------------------------------------------------------------- SimHash
 
 
-def simhash64(text_col: Column) -> Column:
-    """64-bit SimHash of token set, built from bit-vote aggregation over the
-    token array — single narrow projection, no explode/shuffle.
-
-    Bit masks are a powers-of-two literal array (shiftleft needs a literal
-    count, so bits are tested with bitwiseAND against element_at). The sign
-    bit's mask is long-min, which also keeps the final sum in long range.
-    """
-    toks = F.array_distinct(tokens(text_col))
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    masks = F.array(
-        *[F.lit((1 << b) if b < 63 else -(1 << 63)).cast("long") for b in range(64)]
-    )
-    # votes[b] = Σ_tokens (bit b set ? +1 : −1); bit b of result = votes[b] > 0
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(63)),
-        F.lit(0).cast("long"),
-        lambda acc, b: acc
-        + F.when(
-            F.aggregate(
-                hashes,
-                F.lit(0),
-                lambda vacc, h: vacc
-                + F.when(h.bitwiseAND(F.element_at(masks, b + 1)) != 0, 1).otherwise(-1),
-            )
-            > 0,
-            F.element_at(masks, b + 1),
-        ).otherwise(F.lit(0).cast("long")),
-    )
-
-
 def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
 def simhash60_md5(text_col: Column) -> Column:
-    """60-bit SimHash with an md5-derived token hash (first 15 hex chars →
-    long). Unlike xxhash64, md5 is available in ANSI-SQL engines, so this
-    variant is bit-reproducible by a DuckDB oracle — the machine-checkable
-    twin of ``simhash64``. Same bit-vote construction; 60 bits keep the
-    value positive (no sign-bit special case) and split into 4×15-bit
-    pigeonhole bands."""
+    """60-bit SimHash of the token set, built from bit-vote aggregation
+    over the token array — single narrow projection, no explode/shuffle.
+
+    The token hash is md5-derived (first 15 hex chars → long): unlike
+    xxhash64, md5 is available in ANSI-SQL engines, so the signature is
+    bit-reproducible by a DuckDB oracle. Bits are tested with bitwiseAND
+    against a powers-of-two literal array (shiftleft needs a literal
+    count); 60 bits keep the value positive and split into 4×15-bit
+    pigeonhole bands (`hamming60_pairs`)."""
     toks = F.array_distinct(tokens(text_col))
     hashes = F.transform(
         toks, lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
@@ -643,63 +615,6 @@ def simhash_hamming_pairs(
     )
     return hamming60_pairs(
         base, max_hamming, max_bucket, drop_stats, op="simhash_hamming_pairs"
-    )
-
-
-def simhash_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-    max_bucket: int | None = 1000,
-    drop_stats: dict | None = None,
-) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash) ≤ k, using the 4-band pigeonhole
-    trick (k<16 ⇒ some 16-bit band equal) to avoid all-pairs.
-
-    Over-sized buckets are dropped with the drop surfaced via log +
-    ``drop_stats`` (see ``minhash_lsh_pairs``)."""
-    # lazy checkpoint: sizes-broadcast + both self-join sides consume it
-    base = _spread_small_input(df).select(
-        F.col(id_col).alias("id"), simhash64(F.col(text_col)).alias("sh")
-    ).localCheckpoint(eager=False)
-    banded = base.select(
-        "id",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("sh", b * 16).bitwiseAND(F.lit(0xFFFF)).alias("key"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "sh", "bb.band", "bb.key")
-    if max_bucket is not None:  # None = explicit unbounded mode
-        sizes = banded.groupBy("band", "key").agg(F.count(F.lit(1)).alias("bsz"))
-        sizes = _surface_bucket_drops(sizes, max_bucket, "simhash_pairs", drop_stats)
-        banded = banded.join(
-            F.broadcast(sizes.filter(F.col("bsz") > max_bucket)),
-            ["band", "key"], "left_anti",
-        )
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            hamming64(F.col("a.sh"), F.col("b.sh")).alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .filter(F.col("hamming") <= max_hamming)
     )
 
 

@@ -23,17 +23,9 @@ STOPWORDS = {
 
 
 def token_count(col: Column) -> Column:
-    """Whitespace token count (BPE-ish proxy: see `bpe_token_estimate`)."""
+    """Whitespace token count (a cheap proxy for BPE token counts)."""
     t = F.trim(col)
     return F.when(F.length(t) == 0, 0).otherwise(F.size(F.split(t, r"\s+")))
-
-
-def bpe_token_estimate(col: Column) -> Column:
-    """Rough BPE token estimate: word-piece regex splits on boundaries +
-    ~4 chars/token heuristic for long words. Deterministic, oracle-able."""
-    words = token_count(col)
-    chars = F.length(F.trim(col))
-    return F.greatest(words, F.ceil(chars / 4.0)).cast("long")
 
 
 def _stopword_pattern(words: tuple[str, ...]) -> str:

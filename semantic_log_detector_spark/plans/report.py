@@ -125,47 +125,6 @@ def summarize(spark: SparkSession, out_dir: str) -> dict:
             wall[r["check_id"]] = max(wall.get(r["check_id"], 0.0), r["wall_ms"])
         report["timings_ms"] = {c: round(ms, 1) for c, ms in wall.items()}
 
-    # streaming acoustic-dedup coverage (round-4 verdict #9): when both
-    # the batch authority's pair table and the online twin's window
-    # matches are in out_dir, quantify exactly what the online path did
-    # NOT cover — the twin matches exact fingerprints within a window, so
-    # Hamming-1..3 pairs and pairs straddling closed windows defer to
-    # batch; those deferral counts belong in the run report, not only in
-    # a docstring
-    ab_path = f"{out_dir}/audio_dups_batch"
-    ao_path = f"{out_dir}/audio_dups_online"
-    if _has_parquet(ab_path) and _has_parquet(ao_path):
-        brow = (
-            spark.read.parquet(ab_path)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.sum((F.col("hamming") > 0).cast("long")), F.lit(0)
-                ).alias("h"),
-            )
-            .first()
-        )
-        orow = (
-            spark.read.parquet(ao_path)
-            .agg(
-                F.coalesce(
-                    F.sum(F.col("n_clips") * (F.col("n_clips") - 1) / 2),
-                    F.lit(0.0),
-                ).alias("n")
-            )
-            .first()
-        )
-        n_batch, n_h0plus = int(brow["n"]), int(brow["h"])
-        n_online = int(orow["n"])
-        deferred = max(0, n_batch - n_online)
-        report["streaming_audio_dedup"] = {
-            "batch_pairs": n_batch,
-            "online_pairs": n_online,
-            "deferred_pairs": deferred,
-            "deferred_hamming_gt0": n_h0plus,
-            "deferred_cross_window": max(0, deferred - n_h0plus),
-        }
-
     rob_path = f"{out_dir}/robustness_report.json"
     if os.path.exists(rob_path):
         with open(rob_path) as f:
@@ -401,26 +360,11 @@ def _md(report: dict) -> str:
         ]
         for c in dc["largest"]:
             lines.append(f"| {c['cluster_id']} | {c['size']} |")
-    sad = report.get("streaming_audio_dedup")
-    if sad:
-        lines += [
-            "",
-            "## 10. Streaming acoustic dedup coverage",
-            "",
-            f"- batch-confirmed duplicate pairs: **{sad['batch_pairs']:,}**",
-            f"- found online (exact-fingerprint, in-window): "
-            f"**{sad['online_pairs']:,}**",
-            f"- deferred to the batch authority: **{sad['deferred_pairs']:,}**"
-            f" — {sad['deferred_hamming_gt0']:,} at Hamming 1–3 (the online"
-            " twin matches exact fingerprints only) and"
-            f" {sad['deferred_cross_window']:,} crossing window boundaries"
-            " past the watermark",
-        ]
     inc = report.get("increments")
     if inc:
         lines += [
             "",
-            "## 11. Incremental validation",
+            "## 10. Incremental validation",
             "",
             f"- increments: **{inc['n_increments']}** covering "
             f"**{inc['n_files_total']:,}** files "

@@ -4,16 +4,17 @@ The reference's "streaming" is an asyncio queue drained by a background
 task (`src/api/main.py:64-75,142-149`) and in-process deques for windows
 (`src/detection/time_aware.py:38-52`, `src/rules/engine.py:54-77` — which
 silently uses *arrival* time). Here the same semantics run on Structured
-Streaming with explicit event-time + watermarks:
+Streaming with explicit event-time + watermarks. The functions below feed
+the sinks of the CLI ``stream`` command:
 
 - ``stream_row_violations``: the single-scan row-rule projection applied to
   a streaming DataFrame — stateless, so it runs unchanged on a stream.
-- ``stream_windowed_counts``: W5 (failed-login burst) as a tumbling
-  event-time window with a watermark for late data.
-- ``stream_suite``: foreachBatch micro-batch driver that reuses the batch
-  check suite per micro-batch and appends verdicts/violations/ledger —
-  the streaming twin of the wave runner (plans/runner.py), sharing all
-  check code.
+- ``stream_payload_violations``: the per-clip payload rules, the batch
+  decode kernel run per micro-batch.
+- ``stream_duplicate_ids``: windowed clip_id uniqueness (bounded state).
+- ``stream_speech_health``: a windowed decode/speech/fake monitor.
+- ``stream_vocab_drift``: windowed vocabulary PSI against a batch baseline
+  (``vocab_bucket_counts``).
 
 The batch wave runner remains the primary 10^12-row path per north_rule
 (batch-at-scale with a resumable ledger); this module is the online mode.
@@ -36,34 +37,6 @@ def stream_row_violations(stream_df: DataFrame, rules: list[RowRule],
     rules = [r for r in rules if r.column in stream_df.columns]
     df = ensure_part_id(stream_df, ctx)
     return violation_projection(df, rules, ctx)
-
-
-def stream_windowed_counts(
-    stream_df: DataFrame,
-    ts_col: str,
-    key_col: str,
-    window: str = "60 seconds",
-    watermark: str = "2 minutes",
-    min_count: int = 5,
-    predicate=None,
-) -> DataFrame:
-    """W5 with real event-time semantics: tumbling window + watermark
-    (the reference used datetime.now() — arrival time — and could not
-    handle late data; SURVEY.md §2.5 note)."""
-    d = stream_df.withWatermark(ts_col, watermark)
-    if predicate is not None:
-        d = d.filter(predicate)
-    return (
-        d.groupBy(F.window(F.col(ts_col), window).alias("win"), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= min_count)
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            key_col,
-            "n",
-        )
-    )
 
 
 def stream_duplicate_ids(
@@ -100,79 +73,6 @@ def stream_duplicate_ids(
     )
 
 
-def stream_audio_dups(
-    stream_df: DataFrame,
-    ts_col: str = "ts",
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    window: str = "60 seconds",
-    watermark: str = "10 minutes",
-    max_ids: int = 20,
-) -> DataFrame:
-    """Online acoustic content-dup detection: the batch melody-fingerprint
-    kernel (`operators/audio_dedup.audio_fingerprint` — a stateless
-    mapInArrow, so Structured Streaming runs it unchanged per
-    micro-batch) keyed into the same bounded-state window/watermark shape
-    as `stream_duplicate_ids`.
-
-    Two documented narrowings vs the batch authority (`audio_dup_pairs`):
-    matches are EXACT fingerprint equality (Hamming 0 — which is what the
-    codec-invariant fingerprint measures for true re-encodes; the
-    Hamming-≤3 banded search stays batch-side where state is free), and
-    pairs straddling windows past the watermark defer to the batch pass —
-    bounded state, never a silent contract.
-
-    Emits, in append mode once the watermark closes a window:
-    (window_start, window_end, fp, n_clips, clip_ids[≤max_ids])."""
-    from ..operators.audio_dedup import audio_fingerprint
-
-    fps = audio_fingerprint(
-        stream_df, id_col, bytes_col, codec_col, passthrough=(ts_col,)
-    ).filter((~F.col("fake")) & F.col("fp").isNotNull())
-    return (
-        fps.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("win"), "fp")
-        .agg(
-            F.count(F.lit(1)).alias("n_clips"),
-            F.slice(F.sort_array(F.collect_set("id")), 1, max_ids).alias("clip_ids"),
-        )
-        .filter(F.col("n_clips") > 1)
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "fp",
-            "n_clips",
-            "clip_ids",
-        )
-    )
-
-
-def stream_suite(
-    stream_df: DataFrame,
-    out_dir: str,
-    ctx: RunContext,
-    rules: list[RowRule],
-    checkpoint_dir: str,
-    trigger_once: bool = True,
-):
-    """foreachBatch micro-batch driver: per micro-batch, run the stateless
-    checks and append outputs — exactly-once via the streaming checkpoint
-    (the stream-side analog of the wave ledger)."""
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        viol = stream_row_violations(batch_df, rules, ctx)
-        viol.write.mode("append").parquet(f"{out_dir}/violations")
-
-    writer = (
-        stream_df.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def stream_payload_violations(
     stream_df: DataFrame,
     ctx: RunContext,
@@ -186,8 +86,7 @@ def stream_payload_violations(
     `sources/payload_scan.py::map_payloads`, which Structured Streaming
     runs unchanged per micro-batch — the exact batch rule code (same
     thresholds, same one-pass decode) emitting the sparse violation rows
-    only. Pair with ``stateful.stream_feature_drift`` for the
-    distribution-level signal; this is the per-clip level.
+    only: the per-clip level of the batch drift check.
 
     ``wps_range`` switches on the R067 speech-rate twin when the stream
     rows carry a ``transcript`` column inline (the input-table shape):
@@ -298,7 +197,7 @@ def stream_speech_health(
     when disabled). The batch authority for anything deeper (dedup,
     curation keep/drop) remains `curate_audio_corpus`; this twin
     deliberately carries NO cross-window state (same deferral contract
-    as stream_audio_dups)."""
+    as stream_duplicate_ids)."""
     from ..operators.audio_curate import _flat_pitch, audio_profile
 
     prof = audio_profile(stream_df, passthrough=(ts_col,),

@@ -105,6 +105,32 @@ def test_summary_buckets_account_for_every_clip(spark, corpus):
     unpersist_all(stats)
 
 
+def test_summary_counts_null_and_repeated_ids_once(spark):
+    # two NULL ids and one id shared by two different clips: all six are
+    # kept, and the summary must say so row for row (a plain join on
+    # clip_id drops NULL ids from the kept side and pairs a shared id 2x2)
+    ids = F.col("clip_id")
+    clips = melody_clips(spark, 6, seed=3).withColumn(
+        "clip_id",
+        F.when(ids.isin("m0000000000", "m0000000001"), F.lit(None).cast("string"))
+        .when(ids.isin("m0000000002", "m0000000003"), F.lit("twin"))
+        .otherwise(ids),
+    ).cache()
+    stats = {}
+    kept = curate_audio_corpus(clips, min_speech_ratio=0.0, drop_stats=stats)
+    n_kept = kept.count()
+    buckets = {
+        r["bucket"]: r["n_clips"]
+        for r in audio_curation_summary(audio_profile(clips), kept,
+                                        min_speech_ratio=0.0).collect()
+    }
+    assert n_kept == 6
+    assert buckets == {"kept": n_kept}
+    assert sum(buckets.values()) == clips.count()
+    unpersist_all(stats)
+    clips.unpersist()
+
+
 def test_profile_single_pass_fields(spark, corpus):
     full, _ = corpus
     prof = audio_profile(full).toPandas().set_index("clip_id")

@@ -7,8 +7,8 @@ from semantic_log_detector_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    simhash64,
-    simhash_pairs,
+    simhash60_md5,
+    simhash_hamming_pairs,
     token_shingles,
 )
 from semantic_log_detector_spark.operators.knn import (
@@ -68,11 +68,11 @@ def test_ngram_jaccard_exact_baseline(docs):
 
 
 def test_simhash_identical_and_pairs(spark, docs):
-    sh = docs.select("doc_id", simhash64(F.col("text")).alias("sh")).collect()
+    sh = docs.select("doc_id", simhash60_md5(F.col("text")).alias("sh")).collect()
     by_id = {r["doc_id"]: r["sh"] for r in sh}
     assert by_id[1] == by_id[4]  # identical text → identical simhash
     pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in
-             simhash_pairs(docs, "text", "doc_id", max_hamming=3).collect()}
+             simhash_hamming_pairs(docs, "text", "doc_id", max_hamming=3).collect()}
     assert pairs[(1, 4)] == 0
 
 
@@ -202,7 +202,8 @@ def test_simhash_bucket_drop_is_surfaced(spark):
         ["doc_id", "text"],
     )
     stats: dict = {}
-    out = simhash_pairs(df, "text", "doc_id", max_hamming=3, max_bucket=5, drop_stats=stats)
+    out = simhash_hamming_pairs(df, "text", "doc_id", max_hamming=3, max_bucket=5,
+                                drop_stats=stats)
     assert out.count() == 0
     assert stats["dropped_buckets"] > 0
 
@@ -250,8 +251,6 @@ def test_pair_builders_are_pure_plan_constructors_without_aqe(spark):
     # Spark job at construction time (drop accounting rides the plan as
     # observed metrics, which work without AQE) — a caller that never
     # evaluates the result pays nothing
-    from semantic_log_detector_spark.operators.dedup import simhash_hamming_pairs
-
     df = spark.createDataFrame(
         [(i, f"some text body number {i} with words") for i in range(8)],
         ["doc_id", "text"],
@@ -262,7 +261,6 @@ def test_pair_builders_are_pure_plan_constructors_without_aqe(spark):
     sc.setJobGroup(group, "plan construction")
     try:
         minhash_lsh_pairs(df, "text", "doc_id")
-        simhash_pairs(df, "text", "doc_id")
         simhash_hamming_pairs(df, "text", "doc_id")
         guarded = ngram_jaccard_pairs(df, "text", "doc_id", threshold=0.1, max_df=5)
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
@@ -277,8 +275,6 @@ def test_max_bucket_none_is_explicit_unbounded_mode(spark):
     # None disables the cap AND the guard: the mono-bucket corpus that the
     # capped run drops entirely is fully paired, and construction runs no
     # guard job (nothing is dropped, nothing to account for)
-    from semantic_log_detector_spark.operators.dedup import simhash_pairs
-
     df = spark.createDataFrame(
         [(i, "the same stop text repeated for every document here") for i in range(30)],
         ["doc_id", "text"],
@@ -287,7 +283,7 @@ def test_max_bucket_none_is_explicit_unbounded_mode(spark):
     unbounded = minhash_lsh_pairs(df, "text", "doc_id", jaccard_threshold=0.5, max_bucket=None)
     assert capped.count() == 0
     assert unbounded.count() == 30 * 29 // 2
-    assert simhash_pairs(df, "text", "doc_id", max_bucket=None).count() == 30 * 29 // 2
+    assert simhash_hamming_pairs(df, "text", "doc_id", max_bucket=None).count() == 30 * 29 // 2
 
 
 def test_pair_builders_stay_lazy_and_warn_under_aqe(spark, caplog):
@@ -433,11 +429,6 @@ def test_exact_dedup_null_ids_dont_consume_topk_slots(spark):
 
 
 def test_simhash_hamming_pairs_complete_vs_brute_force(spark, docs):
-    from semantic_log_detector_spark.operators.dedup import (
-        simhash60_md5,
-        simhash_hamming_pairs,
-    )
-
     sh = {r["doc_id"]: r["sh"] for r in
           docs.select("doc_id", simhash60_md5(F.col("text")).alias("sh")).collect()}
     want = {

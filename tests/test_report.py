@@ -105,47 +105,6 @@ def test_report_training_data_sections(spark, tmp_path):
     assert "one canonical kept per cluster" in md
 
 
-def test_report_streaming_audio_dedup_section(spark, tmp_path):
-    """Round-3 verdict #9: when the batch pair table and the online twin's
-    window matches are both in out_dir, the report quantifies the online
-    path's deferral — Hamming>0 pairs and cross-window pairs are batch-only
-    by contract, and operators should see those counts, not a docstring."""
-    from semantic_log_detector_spark.sources.synth import (
-        clips_table, transcripts_table)
-
-    out = str(tmp_path / "run3")
-    run_suite(spark, clips_table(spark, 800), transcripts_table(spark, 800),
-              out, SuiteConfig(), input_fingerprint="report_sad_test")
-
-    # batch authority found 5 pairs: 3 at hamming 0, 2 at hamming 1-3
-    spark.createDataFrame(
-        [("a", "b", 0), ("c", "d", 0), ("e", "f", 0),
-         ("g", "h", 2), ("i", "j", 3)],
-        "id_a string, id_b string, hamming int",
-    ).write.mode("overwrite").parquet(f"{out}/audio_dups_batch")
-    # online twin caught 2 of the hamming-0 pairs in-window; the third
-    # straddled a window boundary
-    import datetime as dt
-    t0 = dt.datetime(2026, 1, 1)
-    spark.createDataFrame(
-        [(t0, t0, 11, 2, ["a", "b"]), (t0, t0, 22, 2, ["c", "d"])],
-        "window_start timestamp, window_end timestamp, fp long,"
-        " n_clips long, clip_ids array<string>",
-    ).write.mode("overwrite").parquet(f"{out}/audio_dups_online")
-
-    report = write_report(spark, out)
-    sad = report["streaming_audio_dedup"]
-    assert sad["batch_pairs"] == 5
-    assert sad["online_pairs"] == 2
-    assert sad["deferred_pairs"] == 3
-    assert sad["deferred_hamming_gt0"] == 2
-    assert sad["deferred_cross_window"] == 1
-
-    md = open(os.path.join(out, "report.md")).read()
-    assert "## 10. Streaming acoustic dedup coverage" in md
-    assert "deferred to the batch authority" in md
-
-
 def _spark_rollups(spark, out):
     """The verdict, violation and ledger rollups of the report computed as
     Spark aggregations over the written parquet — the reference the
@@ -209,12 +168,14 @@ def _spark_rollups(spark, out):
 def test_summarize_rollups_match_spark_aggregations(spark, tmp_path):
     """Multi-run out_dir: two suite runs (different inputs and lineages,
     so every (part, rule) appears twice) plus row-rule violations appended
-    by the streaming suite. The driver-side rollups equal the Spark
-    aggregations over the same parquet."""
+    by the per-batch streaming projection. The driver-side rollups equal
+    the Spark aggregations over the same parquet."""
     from semantic_log_detector_spark.checks.base import RunContext
     from semantic_log_detector_spark.checks.row_rules import default_clip_rules
     from semantic_log_detector_spark.plans.report import summarize
-    from semantic_log_detector_spark.streaming.stream_checks import stream_suite
+    from semantic_log_detector_spark.streaming.stream_checks import (
+        stream_row_violations,
+    )
 
     out = str(tmp_path / "multi")
     cfg = SuiteConfig(num_parts=8)
@@ -222,12 +183,10 @@ def test_summarize_rollups_match_spark_aggregations(spark, tmp_path):
               out, cfg, input_fingerprint="first")
     run_suite(spark, clips_table(spark, 300, num_parts=8, seed=7),
               transcripts_table(spark, 300, seed=7), out, cfg, input_fingerprint="second")
-    src = str(tmp_path / "stream_src")
-    clips_table(spark, 200, num_parts=8, seed=9, with_bytes=False).write.parquet(src)
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    q = stream_suite(stream, out, RunContext(run_id="stream", num_parts=8),
-                     default_clip_rules(), str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    viol = stream_row_violations(
+        clips_table(spark, 200, num_parts=8, seed=9, with_bytes=False),
+        default_clip_rules(), RunContext(run_id="stream", num_parts=8))
+    viol.write.mode("append").parquet(f"{out}/violations")
 
     got = summarize(spark, out)
     want = _spark_rollups(spark, out)

@@ -1,53 +1,38 @@
-"""Structured Streaming mode: stateless rules + windowed counts + suite."""
+"""Structured Streaming mode: the sinks of the CLI ``stream`` command
+(row and payload rules, windowed duplicate ids, speech health, vocabulary
+drift) and an operator that runs unchanged on a stream."""
 
 import pyspark.sql.functions as F
 
-from semantic_log_detector_spark.checks.base import RunContext
-from semantic_log_detector_spark.checks.row_rules import default_clip_rules, run_row_rules
-from semantic_log_detector_spark.sources.synth import clips_table
-from semantic_log_detector_spark.streaming.stream_checks import (
-    stream_suite,
-    stream_windowed_counts,
-)
 
-CTX = RunContext(run_id="s")
+def test_stream_row_violations_match_batch(spark, tmp_path):
+    """The row rules on a stream emit exactly the batch check's violation
+    rows: the projection is the batch one, run per micro-batch."""
+    from semantic_log_detector_spark.checks.base import RunContext
+    from semantic_log_detector_spark.checks.row_rules import (
+        default_clip_rules,
+        run_row_rules,
+    )
+    from semantic_log_detector_spark.sources.synth import clips_table
+    from semantic_log_detector_spark.streaming.stream_checks import (
+        stream_row_violations,
+    )
 
-
-def test_stream_suite_matches_batch(spark, tmp_path):
+    ctx = RunContext(run_id="s")
     src = str(tmp_path / "src")
     clips_table(spark, 1000, with_bytes=False).write.parquet(src)
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    out = str(tmp_path / "out")
-    q = stream_suite(stream, out, CTX, default_clip_rules(), str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(f"{out}/violations")
-    batch = run_row_rules(spark.read.parquet(src), default_clip_rules(), CTX).violations
-    assert got.exceptAll(batch).count() == 0
-    assert batch.exceptAll(got).count() == 0
-
-
-def test_stream_windowed_counts(spark, tmp_path):
-    # 10 events for key A inside one minute; 1 for key B
-    rows = [("A", f"2024-01-01 00:00:{s:02d}") for s in range(10)] + [
-        ("B", "2024-01-01 00:00:30")
-    ]
-    src = str(tmp_path / "ev")
-    spark.createDataFrame(rows, ["key", "ts_s"]).select(
-        "key", F.to_timestamp("ts_s").alias("ts")
-    ).write.parquet(src)
-    stream = spark.readStream.schema("key string, ts timestamp").parquet(src)
-    alerts = stream_windowed_counts(stream, "ts", "key", "60 seconds", "2 minutes", 5)
     q = (
-        alerts.writeStream.format("memory")
-        .queryName("alerts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        stream_row_violations(stream, default_clip_rules(), ctx)
+        .writeStream.format("memory").queryName("row_viol")
+        .outputMode("append").trigger(availableNow=True).start()
     )
     q.awaitTermination(120)
-    got = spark.sql("select * from alerts").collect()
-    assert len(got) == 1 and got[0]["key"] == "A" and got[0]["n"] == 10
+    got = spark.sql("select * from row_viol")
+    batch = run_row_rules(spark.read.parquet(src), default_clip_rules(), ctx).violations
+    assert batch.count() > 0
+    assert got.exceptAll(batch).count() == 0
+    assert batch.exceptAll(got).count() == 0
 
 
 def test_stream_duplicate_ids_append_mode(spark, tmp_path):
@@ -162,69 +147,6 @@ def test_stream_payload_violations(spark, tmp_path):
         ("sil1", "R064_silence"),
         ("bad1", "R060_decode"),
     }
-
-
-def test_stream_audio_dups(spark, tmp_path):
-    """Acoustic dup detection on a stream (append mode, the production
-    contract): planted cross-codec content duplicates emit as fingerprint
-    groups once sentinel batches advance the watermark past their window;
-    singletons and the sentinels themselves are not emitted."""
-    import glob
-    import os
-
-    from semantic_log_detector_spark.sources.synth import content_dup_clips
-    from semantic_log_detector_spark.streaming.stream_checks import stream_audio_dups
-
-    corpus = content_dup_clips(spark, 80, seed=5).withColumn(
-        "ts", F.to_timestamp(F.lit("2026-01-01 00:00:30"))
-    )
-    expected = {
-        frozenset((r.src_clip_id, r.clip_id))
-        for r in corpus.filter("is_dup").collect()
-    }
-    assert expected
-    src = str(tmp_path / "adup_src")
-
-    def write_batch(df, mtime):
-        before = set(glob.glob(f"{src}/*.parquet"))
-        df.select("clip_id", "codec", "bytes", "ts").repartition(1).write.mode(
-            "append"
-        ).parquet(src)
-        for f in set(glob.glob(f"{src}/*.parquet")) - before:
-            os.utime(f, (mtime, mtime))
-
-    write_batch(corpus, 1_000_000)
-    # sentinels (clean singleton content, n=1 => even idx, never a dup):
-    # batch 2 lifts the watermark past the corpus window, batch 3 triggers
-    # emission of every window the new watermark closes
-    for seed, ts, mtime in [
-        (98, "2026-01-01 00:30:00", 2_000_000),
-        (99, "2026-01-01 01:00:00", 3_000_000),
-    ]:
-        write_batch(
-            content_dup_clips(spark, 1, seed=seed).withColumn(
-                "ts", F.to_timestamp(F.lit(ts))
-            ),
-            mtime,
-        )
-
-    stream = (
-        spark.readStream.schema(
-            "clip_id string, codec string, bytes binary, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = stream_audio_dups(stream, ts_col="ts", window="60 seconds")
-    q = (
-        out.writeStream.format("memory").queryName("adup")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(300)
-    rows = spark.sql("SELECT * FROM adup").collect()
-    got = {frozenset(r.clip_ids) for r in rows}
-    assert got == expected
-    assert all(r.n_clips == 2 for r in rows)
 
 
 def test_stream_speech_health(spark, tmp_path):
